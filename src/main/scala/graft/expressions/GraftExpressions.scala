@@ -166,16 +166,27 @@ case class JaccardSim(left: Expression, right: Expression) extends BinaryExpress
   */
 object GraftFunctions {
   /** geometry args of graft_lsh_buckets_param are plan-time constants —
-    * fail at parse time (never mid-job) if a caller passes a column.
+    * fail at parse time (never mid-job) if a caller passes a column, a
+    * non-integral literal or a Long literal outside the Int range.
     */
   private def foldedInt(e: Expression): Int = {
     require(e.foldable, s"graft_lsh_buckets_param geometry arg must be a literal, got $e")
     e.eval() match {
       case i: Int => i
-      case l: Long => l.toInt
+      case l: Long if l.isValidInt => l.toInt
       case other => throw new IllegalArgumentException(
-        s"graft_lsh_buckets_param geometry arg must be integral, got $other")
+        s"graft_lsh_buckets_param geometry arg must be an Int literal, got $other")
     }
+  }
+
+  /** `graft_lsh_buckets_param(v, tables, bits)`: at least one table, and
+    * a bucket id of 1..63 bits so it fits a non-negative BIGINT.
+    */
+  private def lshBucketsParam(es: Seq[Expression]): LshBucketsParam = {
+    val (tables, bits) = (foldedInt(es(1)), foldedInt(es(2)))
+    require(tables > 0, s"graft_lsh_buckets_param tables must be > 0, got $tables")
+    require(bits > 0 && bits < 64, s"graft_lsh_buckets_param bits must be in 1..63, got $bits")
+    LshBucketsParam(es.head, tables, bits)
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -184,8 +195,7 @@ object GraftFunctions {
     "graft_shingle_hashes" -> (es => ShingleHashes(es.head)),
     "graft_simhash_bands" -> (es => SimhashBands(es.head)),
     "graft_lsh_buckets" -> (es => LshBuckets(es.head)),
-    "graft_lsh_buckets_param" -> (es =>
-      LshBucketsParam(es.head, foldedInt(es(1)), foldedInt(es(2)))),
+    "graft_lsh_buckets_param" -> lshBucketsParam,
     "graft_project" -> (es => ProjectVec(es.head)),
     "graft_cosine" -> (es => CosineSim(es(0), es(1))),
     "graft_jaccard" -> (es => JaccardSim(es(0), es(1))))

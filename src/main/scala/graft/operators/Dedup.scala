@@ -99,6 +99,61 @@ object Dedup {
        |SELECT min(doc_id) AS rep_id, COUNT(*) AS n_docs, prefix_fp
        |FROM fps GROUP BY prefix_fp HAVING COUNT(*) > 1 ORDER BY rep_id""".stripMargin
 
+  /** Distinct shingle sets of a (doc_id, text) frame as (doc_id, sh,
+    * n_sh), materialized: the input of every exact Jaccard and
+    * containment verdict.
+    */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    Materialize.stable(docs
+      .select(col("doc_id"),
+        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
+      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
+
+  /** [[shingleSets]] as the DuckDB CTE `sets` over the (doc_id, text)
+    * relation `from`.
+    */
+  private def shingleSetsSql(from: String): String =
+    s"""sets AS (
+       |  SELECT doc_id, sh, CAST(len(sh) AS BIGINT) AS n_sh FROM (
+       |    SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM $from)
+       |)""".stripMargin
+
+  /** The exact side of the shingle gates: every pair that shares at
+    * least one shingle, as (doc_a, doc_b, i = |A∩B|, na = |A|,
+    * nb = |B|). The inverted-index self-join on the shingle hash
+    * enumerates exactly the pairs with a nonzero overlap, so any
+    * Jaccard or containment threshold above zero is decided completely,
+    * with no all-pairs product. Its cost is Σ df² over distinct
+    * shingles, the documented audit-path price: run it on a slice.
+    */
+  private def shingleOverlap(docs: DataFrame): DataFrame = {
+    val sets = shingleSets(docs)
+    val ex = sets.select(col("doc_id"), explode(col("sh")).as("h"))
+    ex.as("x").join(ex.as("y"),
+        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("i"))
+      .join(sets.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
+  }
+
+  /** [[shingleOverlap]] as the DuckDB CTEs `sets` and
+    * `overlap` (doc_a, doc_b, i, na, nb) over the relation `from`.
+    */
+  private def shingleOverlapSql(from: String): String =
+    s"""${shingleSetsSql(from)}, ex AS (
+       |  SELECT doc_id, unnest(sh) AS h FROM sets
+       |), inter AS (
+       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS i
+       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
+       |  GROUP BY 1, 2
+       |), overlap AS (
+       |  SELECT doc_a, doc_b, i, sa.n_sh AS na, sb.n_sh AS nb
+       |  FROM inter
+       |  JOIN sets sa ON inter.doc_a = sa.doc_id
+       |  JOIN sets sb ON inter.doc_b = sb.doc_id
+       |)""".stripMargin
+
   /** LSH recall by document length: the recall gate
     * ([[minhashRecallFor]]) disaggregated into log2 shingle-count
     * buckets of each pair's SHORTER side — the bias audit that tells
@@ -115,17 +170,7 @@ object Dedup {
     */
   def dedupLenBias(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val sets = Materialize.stable(docs
-      .select(col("doc_id"),
-        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
-      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
-    val ex = sets.select(col("doc_id"), explode(col("sh")).as("h"))
-    val exact = ex.as("x").join(ex.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-      .join(sets.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
+    val exact = shingleOverlap(docs)
       .filter(expr("3 * i >= na + nb"))
       .withColumn("bucket", expr("CAST(length(bin(least(na, nb))) - 1 AS BIGINT)"))
       .select("doc_a", "doc_b", "bucket")
@@ -143,23 +188,9 @@ object Dedup {
   // a strict val here would capture null (Scala init order), which
   // silently corrupts the oracle into unparseable SQL.
   lazy val dedupLenBiasSql: String =
-    s"""WITH sets AS (
-       |  SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM documents
-       |), sized AS (
-       |  SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM sets
-       |), ex AS (
-       |  SELECT doc_id, unnest(sh) AS h FROM sets
-       |), inter AS (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |), exact AS (
-       |  SELECT doc_a, doc_b,
-       |    CAST(length(bin(least(sa.n, sb.n))) - 1 AS BIGINT) AS bucket
-       |  FROM inter
-       |  JOIN sized sa ON inter.doc_a = sa.doc_id
-       |  JOIN sized sb ON inter.doc_b = sb.doc_id
-       |  WHERE 3 * i >= sa.n + sb.n
+    s"""WITH ${shingleOverlapSql("documents")}, exact AS (
+       |  SELECT doc_a, doc_b, CAST(length(bin(least(na, nb))) - 1 AS BIGINT) AS bucket
+       |  FROM overlap WHERE 3 * i >= na + nb
        |), det AS (
        |  SELECT doc_a, doc_b FROM ($dedupMinhashSql) d
        |), hits AS (
@@ -200,6 +231,53 @@ object Dedup {
     */
   val MinContainSetSize = 24L
 
+  /** The containment verdict over (i, na, nb), spelled identically in
+    * Spark SQL and DuckDB: the smaller set is ≥ 90% contained in the
+    * larger, symmetric Jaccard is < 0.5, and the smaller set clears the
+    * [[MinContainSetSize]] floor. Integer cross-multiplication, no
+    * floats.
+    */
+  val ContainedPredicate: String = s"least(na, nb) >= $MinContainSetSize" +
+    " AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb"
+
+  /** The containment plant of the documents table `base` (doc_id,
+    * text): every doc_id%10==6 doc re-ingested under `shift` as column
+    * `id`, concatenated with its two successor docs, so the original is
+    * fully contained in the composite at J ≈ 1/3.
+    */
+  private def containmentPlant(base: DataFrame, shift: Long = ContainmentShift,
+      id: String = "doc_id"): DataFrame =
+    base.filter(pmod(col("doc_id"), lit(10)) === 6)
+      .join(base.select(col("doc_id").as("id1"), col("text").as("t1")),
+        col("id1") === col("doc_id") + 1)
+      .join(base.select(col("doc_id").as("id2"), col("text").as("t2")),
+        col("id2") === col("doc_id") + 2)
+      .select(plantId(col("doc_id"), shift).as(id),
+        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
+
+  private def containmentPlantSql(shift: Long = ContainmentShift, id: String = "doc_id"): String =
+    s"""SELECT a.doc_id + $shift AS $id,
+       |    a.text || ' ' || b.text || ' ' || c.text AS text
+       |  FROM documents a
+       |  JOIN documents b ON b.doc_id = a.doc_id + 1
+       |  JOIN documents c ON c.doc_id = a.doc_id + 2
+       |  WHERE a.doc_id % 10 = 6""".stripMargin
+
+  /** The documents table plus its [[containmentPlant]]: the corpus
+    * every containment key runs on.
+    */
+  private def containmentCorpus(s: SparkSession, dir: String): DataFrame = {
+    val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    base.union(containmentPlant(base))
+  }
+
+  /** [[containmentCorpus]] as the DuckDB CTE `all_docs`. */
+  private def containmentCorpusSql: String =
+    s"""all_docs AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL ${containmentPlantSql()}
+       |)""".stripMargin
+
   /** Containment dedup: pairs where the SMALLER shingle set is ≥ 90%
     * contained in the larger one while symmetric Jaccard is < 0.5 —
     * exactly the duplication that every Jaccard-thresholded pass
@@ -229,66 +307,19 @@ object Dedup {
   /** containment pairs over ANY (doc_id, text) frame — the library
     * entry point behind dedup_containment (audit-path Σ df² contract).
     */
-  def containmentPairsFor(docs: DataFrame): DataFrame = {
-    val sets = Materialize.stable(docs
-      .select(col("doc_id"),
-        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
-      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
-    val ex = sets.select(col("doc_id"), explode(col("sh")).as("h"))
-    ex.as("x").join(ex.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-      .join(sets.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
-      .filter(expr(s"least(na, nb) >= $MinContainSetSize" +
-        " AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb"))
+  def containmentPairsFor(docs: DataFrame): DataFrame =
+    shingleOverlap(docs)
+      .filter(expr(ContainedPredicate))
       .withColumn("containment_ppm", expr("i * 1000000 div least(na, nb)"))
       .select("doc_a", "doc_b", "na", "nb", "i", "containment_ppm")
-  }
 
-  def dedupContainment(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val planted = base.filter(pmod(col("doc_id"), lit(10)) === 6)
-      .join(base.select(col("doc_id").as("id1"), col("text").as("t1")),
-        col("id1") === col("doc_id") + 1)
-      .join(base.select(col("doc_id").as("id2"), col("text").as("t2")),
-        col("id2") === col("doc_id") + 2)
-      .select(plantId(col("doc_id"), ContainmentShift).as("doc_id"),
-        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
-    containmentPairsFor(base.union(planted)).orderBy("doc_a", "doc_b")
-  }
+  def dedupContainment(s: SparkSession, dir: String): DataFrame =
+    containmentPairsFor(containmentCorpus(s, dir)).orderBy("doc_a", "doc_b")
 
   val dedupContainmentSql: String =
-    s"""WITH planted AS (
-       |  SELECT a.doc_id + $ContainmentShift AS doc_id,
-       |    a.text || ' ' || b.text || ' ' || c.text AS text
-       |  FROM documents a
-       |  JOIN documents b ON b.doc_id = a.doc_id + 1
-       |  JOIN documents c ON c.doc_id = a.doc_id + 2
-       |  WHERE a.doc_id % 10 = 6
-       |), all_docs AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id, text FROM planted
-       |), sets AS (
-       |  SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM all_docs
-       |), sized AS (
-       |  SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM sets
-       |), ex AS (
-       |  SELECT doc_id, unnest(sh) AS h FROM sets
-       |), inter AS (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       |    CAST(COUNT(*) AS BIGINT) AS i
-       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |)
-       |SELECT doc_a, doc_b, sa.n AS na, sb.n AS nb, i,
-       |  i * 1000000 // least(sa.n, sb.n) AS containment_ppm
-       |FROM inter
-       |JOIN sized sa ON inter.doc_a = sa.doc_id
-       |JOIN sized sb ON inter.doc_b = sb.doc_id
-       |WHERE least(sa.n, sb.n) >= $MinContainSetSize
-       |  AND 10 * i >= 9 * least(sa.n, sb.n) AND 3 * i < sa.n + sb.n
+    s"""WITH $containmentCorpusSql, ${shingleOverlapSql("all_docs")}
+       |SELECT doc_a, doc_b, na, nb, i, i * 1000000 // least(na, nb) AS containment_ppm
+       |FROM overlap WHERE $ContainedPredicate
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** Window width (words) of a containment fingerprint and the Manber
@@ -397,17 +428,8 @@ object Dedup {
     * `printCap` is [[minhashPairsFromSigs]]'s bucketCap rule wired to
     * the print join for template-heavy corpora).
     */
-  def dedupContainmentRecall(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val planted = base.filter(pmod(col("doc_id"), lit(10)) === 6)
-      .join(base.select(col("doc_id").as("id1"), col("text").as("t1")),
-        col("id1") === col("doc_id") + 1)
-      .join(base.select(col("doc_id").as("id2"), col("text").as("t2")),
-        col("id2") === col("doc_id") + 2)
-      .select(plantId(col("doc_id"), ContainmentShift).as("doc_id"),
-        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
-    containmentRecallFor(base.union(planted))
-  }
+  def dedupContainmentRecall(s: SparkSession, dir: String): DataFrame =
+    containmentRecallFor(containmentCorpus(s, dir))
 
   /** the gate over ANY (doc_id, text) frame — the library entry point
     * (the exact side is the Σ df² audit path: price it for slices,
@@ -425,19 +447,10 @@ object Dedup {
     val d = Materialize.stable(docs)
     val exact = Materialize.stable(
       containmentPairsFor(d).select("doc_a", "doc_b"))
-    def schemeRow(scheme: String, printsExpr: String): DataFrame = {
-      val cand = containmentCandidates(d, printsExpr, printCap, anchors)
-      val hits = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
-      exact.agg(count(lit(1)).as("n_exact_pairs"))
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidate_pairs"))))
-        .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-        .select(lit(scheme).as("scheme"), col("n_exact_pairs"),
-          col("n_candidate_pairs"), col("n_hits"))
-        .withColumn("recall_ppm", expr(
-          "CASE WHEN n_exact_pairs = 0 THEN 0 ELSE n_hits * 1000000 div n_exact_pairs END"))
-        .withColumn("precision_ppm", expr(
-          "CASE WHEN n_candidate_pairs = 0 THEN 0 ELSE n_hits * 1000000 div n_candidate_pairs END"))
-    }
+    def schemeRow(scheme: String, printsExpr: String): DataFrame =
+      ContainmentGrade.counts(exact,
+          containmentCandidates(d, printsExpr, printCap, anchors), Seq("doc_a", "doc_b"))
+        .select(lit(scheme).as("scheme") +: ContainmentGrade.graded: _*)
     schemeRow("manber", sparkContainmentPrints("text"))
       .unionByName(schemeRow("winnow", sparkWinnowPrints("text")))
       .orderBy("scheme")
@@ -488,80 +501,45 @@ object Dedup {
       anchors: Long = 16L): DataFrame = {
     val d = Materialize.stable(docs)
     val cand = containmentCandidates(d, sparkWinnowPrints("text"), printCap, anchors)
-    val sets = Materialize.stable(d
-      .select(col("doc_id"),
-        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
-      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
+    val sets = shingleSets(d)
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha"),
         col("n_sh").as("na")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb"),
         col("n_sh").as("nb")), Seq("doc_b"))
       .withColumn("i", expr("CAST(size(array_intersect(sha, shb)) AS BIGINT)"))
-      .filter(expr(s"least(na, nb) >= $MinContainSetSize" +
-        " AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb"))
+      .filter(expr(ContainedPredicate))
       .withColumn("containment_ppm", expr("i * 1000000 div least(na, nb)"))
       .select("doc_a", "doc_b", "na", "nb", "i", "containment_ppm")
       .orderBy("doc_a", "doc_b")
   }
 
-  def dedupContainmentLsh(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val planted = base.filter(pmod(col("doc_id"), lit(10)) === 6)
-      .join(base.select(col("doc_id").as("id1"), col("text").as("t1")),
-        col("id1") === col("doc_id") + 1)
-      .join(base.select(col("doc_id").as("id2"), col("text").as("t2")),
-        col("id2") === col("doc_id") + 2)
-      .select(plantId(col("doc_id"), ContainmentShift).as("doc_id"),
-        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
-    containmentLshPairsFor(base.union(planted))
-  }
+  def dedupContainmentLsh(s: SparkSession, dir: String): DataFrame =
+    containmentLshPairsFor(containmentCorpus(s, dir))
 
   val dedupContainmentLshSql: String =
-    s"""WITH planted AS (
-       |  SELECT a.doc_id + $ContainmentShift AS doc_id,
-       |    a.text || ' ' || b.text || ' ' || c.text AS text
-       |  FROM documents a
-       |  JOIN documents b ON b.doc_id = a.doc_id + 1
-       |  JOIN documents c ON c.doc_id = a.doc_id + 2
-       |  WHERE a.doc_id % 10 = 6
-       |), all_docs AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id, text FROM planted
-       |), prints AS (
+    s"""WITH $containmentCorpusSql, prints AS (
        |  SELECT doc_id, unnest(${duckWinnowPrints("text")}) AS pr FROM all_docs
        |), cand AS (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM prints x JOIN prints y ON x.pr = y.pr AND x.doc_id < y.doc_id
-       |), sized AS (
-       |  SELECT doc_id, sh, CAST(len(sh) AS BIGINT) AS n FROM (
-       |    SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM all_docs)
-       |), scored AS (
-       |  SELECT doc_a, doc_b, sa.n AS na, sb.n AS nb,
+       |), ${shingleSetsSql("all_docs")}, scored AS (
+       |  SELECT doc_a, doc_b, sa.n_sh AS na, sb.n_sh AS nb,
        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS i
        |  FROM cand
-       |  JOIN sized sa ON cand.doc_a = sa.doc_id
-       |  JOIN sized sb ON cand.doc_b = sb.doc_id
+       |  JOIN sets sa ON cand.doc_a = sa.doc_id
+       |  JOIN sets sb ON cand.doc_b = sb.doc_id
        |)
        |SELECT doc_a, doc_b, na, nb, i,
        |  i * 1000000 // least(na, nb) AS containment_ppm
-       |FROM scored
-       |WHERE least(na, nb) >= $MinContainSetSize
-       |  AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb
+       |FROM scored WHERE $ContainedPredicate
        |ORDER BY doc_a, doc_b""".stripMargin
 
+  /** dedup_containment_recall's grade: one row per print scheme. */
+  private val ContainmentGrade = Grade.Pairs("n_exact_pairs", "n_candidate_pairs")
+
   val dedupContainmentRecallSql: String =
-    s"""WITH planted AS (
-       |  SELECT a.doc_id + $ContainmentShift AS doc_id,
-       |    a.text || ' ' || b.text || ' ' || c.text AS text
-       |  FROM documents a
-       |  JOIN documents b ON b.doc_id = a.doc_id + 1
-       |  JOIN documents c ON c.doc_id = a.doc_id + 2
-       |  WHERE a.doc_id % 10 = 6
-       |), all_docs AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id, text FROM planted
-       |), prints AS (
+    s"""WITH $containmentCorpusSql, prints AS (
        |  SELECT 'manber' AS scheme, doc_id, unnest(${duckContainmentPrints("text")}) AS pr FROM all_docs
        |  UNION ALL
        |  SELECT 'winnow' AS scheme, doc_id, unnest(${duckWinnowPrints("text")}) AS pr FROM all_docs
@@ -569,38 +547,16 @@ object Dedup {
        |  SELECT DISTINCT x.scheme, x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM prints x JOIN prints y
        |    ON x.scheme = y.scheme AND x.pr = y.pr AND x.doc_id < y.doc_id
-       |), sets AS (
-       |  SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM all_docs
-       |), sized AS (
-       |  SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM sets
-       |), ex AS (
-       |  SELECT doc_id, unnest(sh) AS h FROM sets
-       |), inter AS (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       |    CAST(COUNT(*) AS BIGINT) AS i
-       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |), exact AS (
-       |  SELECT doc_a, doc_b FROM inter
-       |  JOIN sized sa ON inter.doc_a = sa.doc_id
-       |  JOIN sized sb ON inter.doc_b = sb.doc_id
-       |  WHERE least(sa.n, sb.n) >= $MinContainSetSize
-       |    AND 10 * i >= 9 * least(sa.n, sb.n) AND 3 * i < sa.n + sb.n
+       |), ${shingleOverlapSql("all_docs")}, exact AS (
+       |  SELECT doc_a, doc_b FROM overlap WHERE $ContainedPredicate
        |), hits AS (
        |  SELECT c.scheme, e.doc_a FROM exact e JOIN cand c
        |    ON e.doc_a = c.doc_a AND e.doc_b = c.doc_b
        |), n AS (
-       |  SELECT s.scheme,
-       |    CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_exact_pairs,
-       |    CAST(COALESCE(cc.n, 0) AS BIGINT) AS n_candidate_pairs,
-       |    CAST(COALESCE(hh.n, 0) AS BIGINT) AS n_hits
-       |  FROM (SELECT 'manber' AS scheme UNION ALL SELECT 'winnow') s
-       |  LEFT JOIN (SELECT scheme, COUNT(*) AS n FROM cand GROUP BY 1) cc USING (scheme)
-       |  LEFT JOIN (SELECT scheme, COUNT(*) AS n FROM hits GROUP BY 1) hh USING (scheme)
+       |  SELECT c.scheme, ${ContainmentGrade.countsSql("cand", " WHERE scheme = c.scheme")}
+       |  FROM (SELECT 'manber' AS scheme UNION ALL SELECT 'winnow') c
        |)
-       |SELECT scheme, n_exact_pairs, n_candidate_pairs, n_hits,
-       |  CASE WHEN n_exact_pairs = 0 THEN 0 ELSE n_hits * 1000000 // n_exact_pairs END AS recall_ppm,
-       |  CASE WHEN n_candidate_pairs = 0 THEN 0 ELSE n_hits * 1000000 // n_candidate_pairs END AS precision_ppm
+       |SELECT scheme, ${ContainmentGrade.gradedSql}
        |FROM n ORDER BY scheme""".stripMargin
 
   /** MinHash (k=12) + LSH (4 bands × 3 rows): candidates share a band
@@ -1271,13 +1227,7 @@ object Dedup {
     */
   def dedupIncrementalContainment(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val batch = d.filter(pmod(col("doc_id"), lit(10)) === 6)
-      .join(d.select(col("doc_id").as("id1"), col("text").as("t1")),
-        col("id1") === col("doc_id") + 1)
-      .join(d.select(col("doc_id").as("id2"), col("text").as("t2")),
-        col("id2") === col("doc_id") + 2)
-      .select(plantId(col("doc_id"), ContainBatchShift).as("new_id"),
-        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
+    val batch = containmentPlant(d, ContainBatchShift, "new_id")
       .union(d.filter(pmod(col("doc_id"), lit(10)) === 1)
         .select(plantId(col("doc_id"), ContainBatchShift).as("new_id"),
           array_join(reverse(split(col("text"), " ")), " ").as("text")))
@@ -1321,8 +1271,7 @@ object Dedup {
       .join(b.select(col("new_id"), col("sh").as("sha"), col("n_sh").as("na")), Seq("new_id"))
       .join(idx.select(col("doc_id"), col("sh").as("shb"), col("n_sh").as("nb")), Seq("doc_id"))
       .withColumn("i", expr("CAST(size(array_intersect(sha, shb)) AS BIGINT)"))
-      .filter(expr(s"least(na, nb) >= $MinContainSetSize" +
-        " AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb"))
+      .filter(expr(ContainedPredicate))
       .groupBy("new_id").agg(min("doc_id").as("dup_of"))
     b.select("new_id").join(verified, Seq("new_id"), "left")
       .select(col("new_id"), col("dup_of").isNull.as("admitted"), col("dup_of"))
@@ -1331,12 +1280,7 @@ object Dedup {
 
   val dedupIncrementalContainmentSql: String =
     s"""WITH batch AS (
-       |  SELECT a.doc_id + $ContainBatchShift AS new_id,
-       |    a.text || ' ' || b.text || ' ' || c.text AS text
-       |  FROM documents a
-       |  JOIN documents b ON b.doc_id = a.doc_id + 1
-       |  JOIN documents c ON c.doc_id = a.doc_id + 2
-       |  WHERE a.doc_id % 10 = 6
+       |  ${containmentPlantSql(ContainBatchShift, "new_id")}
        |  UNION ALL
        |  SELECT doc_id + $ContainBatchShift,
        |    array_to_string(list_reverse(string_split(text, ' ')), ' ')
@@ -1361,8 +1305,7 @@ object Dedup {
        |      CAST(len(list_intersect(b.sh, i.sh)) AS BIGINT) AS i,
        |      CAST(len(b.sh) AS BIGINT) AS na, CAST(len(i.sh) AS BIGINT) AS nb
        |    FROM cand c JOIN bidx b USING (new_id) JOIN idx i USING (doc_id)) t
-       |  WHERE least(na, nb) >= $MinContainSetSize
-       |    AND 10 * i >= 9 * least(na, nb) AND 3 * i < na + nb
+       |  WHERE $ContainedPredicate
        |  GROUP BY 1
        |)
        |SELECT b.new_id, v.dup_of IS NULL AS admitted, v.dup_of
@@ -1509,60 +1452,26 @@ object Dedup {
     * priced for slices).
     */
   def minhashRecallFor(docs: DataFrame): DataFrame = {
-    val sets = Materialize.stable(docs
-      .select(col("doc_id"),
-        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
-      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
-    val ex = sets.select(col("doc_id"), explode(col("sh")).as("h"))
-    val exact = ex.as("x").join(ex.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-      .join(sets.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
+    val exact = shingleOverlap(docs)
       .filter(expr("3 * i >= na + nb"))
       .select("doc_a", "doc_b")
     val det = minhashPairs(docs).select("doc_a", "doc_b")
-    val hits = exact.join(det, Seq("doc_a", "doc_b"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact_pairs"))
-      .crossJoin(broadcast(det.agg(count(lit(1)).as("n_detected_pairs"))))
-      .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-      .withColumn("recall_ppm", expr(
-        "CASE WHEN n_exact_pairs = 0 THEN 0 ELSE n_hits * 1000000 div n_exact_pairs END"))
-      .withColumn("precision_ppm", expr(
-        "CASE WHEN n_detected_pairs = 0 THEN 0 ELSE n_hits * 1000000 div n_detected_pairs END"))
+    MinhashGrade.counts(exact, det, Seq("doc_a", "doc_b")).select(MinhashGrade.graded: _*)
   }
 
+  private val MinhashGrade = Grade.Pairs("n_exact_pairs", "n_detected_pairs")
+
   val dedupMinhashRecallSql: String =
-    s"""WITH sets AS (
-       |  SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM documents
-       |), sized AS (
-       |  SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM sets
-       |), ex AS (
-       |  SELECT doc_id, unnest(sh) AS h FROM sets
-       |), inter AS (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |), exact AS (
-       |  SELECT doc_a, doc_b FROM inter
-       |  JOIN sized sa ON inter.doc_a = sa.doc_id
-       |  JOIN sized sb ON inter.doc_b = sb.doc_id
-       |  WHERE 3 * i >= sa.n + sb.n
+    s"""WITH ${shingleOverlapSql("documents")}, exact AS (
+       |  SELECT doc_a, doc_b FROM overlap WHERE 3 * i >= na + nb
        |), det AS (
        |  SELECT doc_a, doc_b FROM ($dedupMinhashSql) d
        |), hits AS (
        |  SELECT e.doc_a, e.doc_b FROM exact e JOIN det USING (doc_a, doc_b)
        |), c AS (
-       |  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS n_exact_pairs,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM det) AS n_detected_pairs,
-       |    (SELECT CAST(COUNT(*) AS BIGINT) FROM hits) AS n_hits
+       |  SELECT ${MinhashGrade.countsSql("det")}
        |)
-       |SELECT n_exact_pairs, n_detected_pairs, n_hits,
-       |  CASE WHEN n_exact_pairs = 0 THEN 0
-       |       ELSE n_hits * 1000000 // n_exact_pairs END AS recall_ppm,
-       |  CASE WHEN n_detected_pairs = 0 THEN 0
-       |       ELSE n_hits * 1000000 // n_detected_pairs END AS precision_ppm
+       |SELECT ${MinhashGrade.gradedSql}
        |FROM c""".stripMargin
 
   /** The banding sweep's configurations: every (bands, rows) split of
@@ -1571,6 +1480,8 @@ object Dedup {
     * config (4×3) sits where this table says it should.
     */
   val BandingConfigs: Seq[(Int, Int)] = Seq((2, 6), (3, 4), (4, 3), (6, 2))
+
+  private val BandingGrade = Grade.Pairs("n_exact", "n_detected")
 
   /** LSH banding S-curve sweep: candidate volume, detected pairs,
     * recall AND precision vs the exact J ≥ 0.5 set for EVERY (bands,
@@ -1593,17 +1504,7 @@ object Dedup {
     val s = docs.sparkSession
     val sig = Materialize.stable(docs
       .select(col("doc_id"), expr(sparkMinhash(sparkShingleHashes("text"))).as("mh")))
-    val sets = Materialize.stable(docs
-      .select(col("doc_id"),
-        expr(s"array_distinct(${sparkShingleHashes("text")})").as("sh"))
-      .withColumn("n_sh", expr("CAST(size(sh) AS BIGINT)")))
-    val ex = sets.select(col("doc_id"), explode(col("sh")).as("h"))
-    val exact = Materialize.stable(ex.as("x").join(ex.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-      .join(sets.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), Seq("doc_b"))
+    val exact = Materialize.stable(shingleOverlap(docs)
       .filter(expr("3 * i >= na + nb"))
       .select("doc_a", "doc_b"))
     val rows = BandingConfigs.map { case (nb, r) =>
@@ -1630,12 +1531,8 @@ object Dedup {
     }
     rows.reduce(_ union _)
       .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_exact"))))
-      .withColumn("recall_ppm", expr(
-        "CASE WHEN n_exact = 0 THEN 0 ELSE n_hits * 1000000 div n_exact END"))
-      .withColumn("precision_ppm", expr(
-        "CASE WHEN n_detected = 0 THEN 0 ELSE n_hits * 1000000 div n_detected END"))
-      .select("bands", "rows_per_band", "n_candidates", "n_detected",
-        "n_exact", "n_hits", "recall_ppm", "precision_ppm")
+      .select(Seq("bands", "rows_per_band", "n_candidates", "n_detected", "n_exact", "n_hits")
+        .map(col) ++ BandingGrade.ppms: _*)
       .orderBy("bands")
   }
 
@@ -1666,26 +1563,12 @@ object Dedup {
     }
     s"""WITH sig AS (
        |  SELECT doc_id, ${duckMinhash(duckShingleHashes("text"))} AS mh FROM documents
-       |), sets AS (
-       |  SELECT doc_id, list_distinct(${duckShingleHashes("text")}) AS sh FROM documents
-       |), sized AS (
-       |  SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM sets
-       |), ex AS (
-       |  SELECT doc_id, unnest(sh) AS h FROM sets
-       |), inter AS (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-       |  FROM ex x JOIN ex y ON x.h = y.h AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |), exact AS (
-       |  SELECT doc_a, doc_b FROM inter
-       |  JOIN sized sa ON inter.doc_a = sa.doc_id
-       |  JOIN sized sb ON inter.doc_b = sb.doc_id
-       |  WHERE 3 * i >= sa.n + sb.n
+       |), ${shingleOverlapSql("documents")}, exact AS (
+       |  SELECT doc_a, doc_b FROM overlap WHERE 3 * i >= na + nb
        |), ${ctes.mkString(", ")},
        |nex AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact)
        |SELECT bands, rows_per_band, n_candidates, n_detected, n_exact, n_hits,
-       |  CASE WHEN n_exact = 0 THEN 0 ELSE n_hits * 1000000 // n_exact END AS recall_ppm,
-       |  CASE WHEN n_detected = 0 THEN 0 ELSE n_hits * 1000000 // n_detected END AS precision_ppm
+       |  ${BandingGrade.ppmsSql}
        |FROM (${rows.mkString(" UNION ALL ")}) u, nex
        |ORDER BY bands""".stripMargin
   }
@@ -1848,13 +1731,7 @@ object Dedup {
     val prefixP = base.filter(pmod(col("doc_id"), lit(10)) === 4)
       .select(plantId(col("doc_id"), 200000L).as("doc_id"),
         concat(col("text"), lit(" editor note appended after republish")).as("text"))
-    val containP = base.filter(pmod(col("doc_id"), lit(10)) === 6)
-      .join(base.select(col("doc_id").as("id1"), col("text").as("t1")),
-        col("id1") === col("doc_id") + 1)
-      .join(base.select(col("doc_id").as("id2"), col("text").as("t2")),
-        col("id2") === col("doc_id") + 2)
-      .select(plantId(col("doc_id"), ContainmentShift).as("doc_id"),
-        concat_ws(" ", col("text"), col("t1"), col("t2")).as("text"))
+    val containP = containmentPlant(base)
     // map-side features, then DROP the text: the census windows below
     // shuffle narrow (id, tokens, 3 keys) rows, never the corpus bytes
     val feat = base.union(exactP).union(prefixP).union(containP)
@@ -1907,12 +1784,7 @@ object Dedup {
        |  UNION ALL
        |  SELECT doc_id + 200000, text || ' editor note appended after republish'
        |  FROM documents WHERE doc_id % 10 = 4
-       |  UNION ALL
-       |  SELECT a.doc_id + $ContainmentShift, a.text || ' ' || b.text || ' ' || c.text
-       |  FROM documents a
-       |  JOIN documents b ON b.doc_id = a.doc_id + 1
-       |  JOIN documents c ON c.doc_id = a.doc_id + 2
-       |  WHERE a.doc_id % 10 = 6
+       |  UNION ALL ${containmentPlantSql()}
        |), urls AS (
        |  SELECT doc_id, ($arr)[CAST((doc_id // 4) % 8 + 1 AS INT)] AS dom,
        |    '/p' || CAST(doc_id // 4 AS VARCHAR) AS page

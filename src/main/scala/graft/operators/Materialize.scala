@@ -38,55 +38,21 @@ object Materialize {
     * growing) plan tree and overflows the optimizer's stack after ~10
     * rounds.
     *
-    * Spelling (round-16 measurement, reverting the round-15 default):
-    * a reliable `Dataset.checkpoint()`. All three spellings were
-    * probed solo at sf0.1 / 32 cores on the same tree
-    * (tools.BenchProbe fresh-JVM medians, OPTIMIZATION_r16.md has the
-    * full table): `checkpoint` won on 8 of 9 iterative keys — e.g.
-    * web_domain_components 3.77s vs 5.91 (snapshot) vs 7.54 (cached),
-    * sketch_kll 2.36 vs 4.04 vs 4.51, bpe_train_converge 1.83 vs 2.60
-    * vs 3.67. Why the alternatives lose here:
-    *  - `snapshot` (the r15 default — the driver's suite went 0.566×
-    *    with clean controls and ANTI-SCALED 8c→32c): a per-rung
-    *    parquet write/list/read cycle whose file count scales with
-    *    the core count, and the read-back loses `LogicalRDD`'s
-    *    preserved outputPartitioning, so groupBy-shaped state re-enters
-    *    the next rung's join behind one extra full-state Exchange.
-    *  - `cachedCheckpoint` (persist → checkpoint → unpersist, so the
-    *    checkpoint write reads blocks instead of recomputing): the
-    *    columnar cache build costs MORE than recomputing these
-    *    broadcast-join + partial-agg rungs twice.
-    * `spark.graft.iteration=snapshot|cachedCheckpoint` select the
-    * alternatives; no checkpoint dir ⇒ `localCheckpoint()`
-    * (single-process sessions only). On a real cluster the checkpoint
-    * dir is HDFS/S3 (GraftSession sets a local tmp dir).
+    * A reliable `Dataset.checkpoint()`: probed solo at sf0.1 / 32 cores
+    * against a per-rung parquet [[snapshot]] and a persist → checkpoint
+    * → unpersist spelling, it won on 8 of 9 iterative keys
+    * (OPTIMIZATION_r16.md has the table). The snapshot's read-back
+    * loses `LogicalRDD`'s output partitioning, so groupBy-shaped state
+    * re-enters the next rung behind an extra Exchange; the cached
+    * spelling pays a columnar cache build that costs more than
+    * recomputing these cheap broadcast-join + partial-agg rungs twice.
+    * No checkpoint dir ⇒ `localCheckpoint()` (single-process sessions
+    * only); on a real cluster the dir is HDFS/S3 (GraftSession sets a
+    * local tmp dir).
     */
   def iteration(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint()
-    else df.sparkSession.conf.getOption("spark.graft.iteration")
-      .getOrElse("checkpoint") match {
-      case "snapshot" => snapshot(df)
-      case "cachedCheckpoint" => cachedCheckpoint(df)
-      case _ => df.checkpoint()
-    }
-
-  /** reliable checkpoint that computes its input ONCE: persist →
-    * checkpoint (the eager action materializes the cache; the
-    * RDD-checkpoint write job then reads blocks, not the plan) →
-    * unpersist (the rung state lives on as checkpoint files — the
-    * cache served exactly the write). Measured SLOWER than the bare
-    * double-computing checkpoint on every contract ladder (see
-    * [[iteration]] scaladoc) — the rungs are cheap broadcast-join +
-    * partial-agg plans and the InMemoryRelation build is not free —
-    * kept as a conf spelling for state whose recompute is genuinely
-    * expensive.
-    */
-  private def cachedCheckpoint(df: DataFrame): DataFrame =
-    if (df.storageLevel != StorageLevel.NONE) df.checkpoint()
-    else {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      try df.checkpoint() finally df.unpersist(false)
-    }
+    else df.checkpoint()
 
   /** ONE-adaptive-evaluation materialization for an EXPENSIVE frame a
     * downstream plan references more than once (the component engine's

@@ -1373,26 +1373,11 @@ object Similarity {
     * either input. Integer hit counts; one floored ppm division.
     */
   def knnRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
-    val approx = knnIvf(s, dir)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy("query_id")
+    Grade.recallAtK(knnBruteforce(s, dir), knnIvf(s, dir))
   }
 
   val knnRecallSql: String =
-    s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($knnBruteforceSql) e
-       |), approx AS (SELECT query_id, neighbor_id FROM ($knnIvfSql) a
-       |)
-       |SELECT exact.query_id, COUNT(*) AS n_exact,
-       |  COUNT(approx.neighbor_id) AS n_hit,
-       |  COUNT(approx.neighbor_id) * 1000000 // COUNT(*) AS recall_ppm
-       |FROM exact LEFT JOIN approx
-       |  ON exact.query_id = approx.query_id AND exact.neighbor_id = approx.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
+    Grade.recallAtKSql(knnBruteforceSql, knnIvfSql)
 
   /** knn_recall's twin for the PQ index: recall@k of the
     * quantized-shortlist+rerank path against exact brute force — the
@@ -1403,26 +1388,11 @@ object Similarity {
     * verbatim.
     */
   def knnPqRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
-    val approx = knnPq(s, dir)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy("query_id")
+    Grade.recallAtK(knnBruteforce(s, dir), knnPq(s, dir))
   }
 
   val knnPqRecallSql: String =
-    s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($knnBruteforceSql) e
-       |), approx AS (SELECT query_id, neighbor_id FROM ($knnPqSql) a
-       |)
-       |SELECT exact.query_id, COUNT(*) AS n_exact,
-       |  COUNT(approx.neighbor_id) AS n_hit,
-       |  COUNT(approx.neighbor_id) * 1000000 // COUNT(*) AS recall_ppm
-       |FROM exact LEFT JOIN approx
-       |  ON exact.query_id = approx.query_id AND exact.neighbor_id = approx.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
+    Grade.recallAtKSql(knnBruteforceSql, knnPqSql)
 
   /** Matryoshka truncation dims: retrieval over the first 16 of 64
     * components — the MRL production lever (Kusupati et al. 2022):
@@ -1459,18 +1429,12 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", expr(sparkCosine("qt", "vt")))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
-    val approx = scored.withColumn("rank", row_number().over(w))
+    Grade.recallAtK(knnBruteforce(s, dir), scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= KnnK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), lit(1).as("hit"))
-    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy("query_id")
+      .select(col("query_id"), col("vec_id").as("neighbor_id")))
   }
 
-  val knnMrlRecallSql: String =
+  val knnMrlRecallSql: String = Grade.recallAtKSql(knnBruteforceSql,
     s"""WITH vecs AS (
        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
        |), tv AS (
@@ -1480,20 +1444,12 @@ object Similarity {
        |    ${duckCosine("q.vt", "c.vt")} AS cosine
        |  FROM tv q JOIN tv c ON c.vec_id <> q.vec_id
        |  WHERE q.vec_id < $QuerySetSize
-       |), approx AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM scored) r
-       |  WHERE rank <= $KnnK
-       |), exact AS (SELECT query_id, neighbor_id FROM ($knnBruteforceSql) e
        |)
-       |SELECT exact.query_id, COUNT(*) AS n_exact,
-       |  COUNT(approx.neighbor_id) AS n_hit,
-       |  COUNT(approx.neighbor_id) * 1000000 // COUNT(*) AS recall_ppm
-       |FROM exact LEFT JOIN approx
-       |  ON exact.query_id = approx.query_id AND exact.neighbor_id = approx.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
+       |SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+       |  FROM scored) r
+       |WHERE rank <= $KnnK""".stripMargin)
 
   /** The composite's own acceptance gate: recall@k of [[knnIvfPq]]
     * against exact brute force — completes the graded-ANN triple
@@ -1503,26 +1459,11 @@ object Similarity {
     * from the two component gates).
     */
   def knnIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
-    val approx = knnIvfPq(s, dir)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy("query_id")
+    Grade.recallAtK(knnBruteforce(s, dir), knnIvfPq(s, dir))
   }
 
   val knnIvfPqRecallSql: String =
-    s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($knnBruteforceSql) e
-       |), approx AS (SELECT query_id, neighbor_id FROM ($knnIvfPqSql) a
-       |)
-       |SELECT exact.query_id, COUNT(*) AS n_exact,
-       |  COUNT(approx.neighbor_id) AS n_hit,
-       |  COUNT(approx.neighbor_id) * 1000000 // COUNT(*) AS recall_ppm
-       |FROM exact LEFT JOIN approx
-       |  ON exact.query_id = approx.query_id AND exact.neighbor_id = approx.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
+    Grade.recallAtKSql(knnBruteforceSql, knnIvfPqSql)
 
   /** The nprobe sweep's probe counts — the IVF recall/cost knob's
     * candidate settings ([[Nprobe]] = 2 is the production choice this
@@ -1681,23 +1622,15 @@ object Similarity {
         col("ham").cast("long").as("hamming"))
   }
 
-  def knnHammingRecall(s: SparkSession, dir: String): DataFrame = {
-    val approx = hammingTopK(signBitCodes(withVec(s, dir)),
-        col("vec_id") < QuerySetSize, KnnK)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy("query_id")
-  }
+  def knnHammingRecall(s: SparkSession, dir: String): DataFrame =
+    Grade.recallAtK(knnBruteforce(s, dir),
+      hammingTopK(signBitCodes(withVec(s, dir)), col("vec_id") < QuerySetSize, KnnK))
 
   val knnHammingRecallSql: String = {
     def word(lo: Int): String =
       s"CAST(list_aggregate(list_transform(range(0, 32), i -> CASE WHEN v[i + $lo] > 0 " +
         s"THEN (CAST(1 AS BIGINT) << (31 - i)) ELSE CAST(0 AS BIGINT) END), 'sum') AS BIGINT)"
-    s"""WITH vecs AS (
+    Grade.recallAtKSql(knnBruteforceSql, s"""WITH vecs AS (
        |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
        |), codes AS (
        |  SELECT vec_id, ${word(1)} AS w0, ${word(33)} AS w1 FROM vecs
@@ -1706,20 +1639,12 @@ object Similarity {
        |    bit_count(xor(c.w0, q.w0)) + bit_count(xor(c.w1, q.w1)) AS ham
        |  FROM codes q JOIN codes c ON c.vec_id <> q.vec_id
        |  WHERE q.vec_id < $QuerySetSize
-       |), approx AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY ham ASC, neighbor_id) AS rank
-       |    FROM scored) r
-       |  WHERE rank <= $KnnK
-       |), exact AS (SELECT query_id, neighbor_id FROM ($knnBruteforceSql) e
        |)
-       |SELECT exact.query_id, COUNT(*) AS n_exact,
-       |  COUNT(approx.neighbor_id) AS n_hit,
-       |  COUNT(approx.neighbor_id) * 1000000 // COUNT(*) AS recall_ppm
-       |FROM exact LEFT JOIN approx
-       |  ON exact.query_id = approx.query_id AND exact.neighbor_id = approx.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
+       |SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY ham ASC, neighbor_id) AS rank
+       |  FROM scored) r
+       |WHERE rank <= $KnnK""".stripMargin)
   }
 
   /** Binary-tier shortlist size for the rerank gate: Hamming top-S
@@ -2388,9 +2313,7 @@ object Similarity {
         .crossJoin(broadcast(bal))
         .select(lit(name).as("phase"), col("n_cells"),
           expr("max_n * 1000000 div t").as("max_cell_share_ppm"),
-          col("n_exact"), col("n_hits"),
-          expr("CASE WHEN n_exact = 0 THEN 0 ELSE n_hits * 1000000 div n_exact END")
-            .as("recall_ppm"))
+          col("n_exact"), col("n_hits"), Grade.ppm("n_hits", "n_exact").as("recall_ppm"))
     }
     val nUnion = union.count()
     val mR = centroidModFor(nUnion)
@@ -2520,13 +2443,13 @@ object Similarity {
        |SELECT 'frozen' AS phase, b.n_cells,
        |  b.max_n * 1000000 // b.t AS max_cell_share_ppm,
        |  ne.n_exact, hf.n_hits,
-       |  CASE WHEN ne.n_exact = 0 THEN 0 ELSE hf.n_hits * 1000000 // ne.n_exact END AS recall_ppm
+       |  ${Grade.ppmSql("hf.n_hits", "ne.n_exact")} AS recall_ppm
        |FROM balf b, ne, hf
        |UNION ALL
        |SELECT 'refreshed', b.n_cells,
        |  b.max_n * 1000000 // b.t,
        |  ne.n_exact, hr.n_hits,
-       |  CASE WHEN ne.n_exact = 0 THEN 0 ELSE hr.n_hits * 1000000 // ne.n_exact END
+       |  ${Grade.ppmSql("hr.n_hits", "ne.n_exact")}
        |FROM balr b, ne, hr
        |ORDER BY phase""".stripMargin
 
@@ -2693,11 +2616,8 @@ object Similarity {
           count(col("hit_rr")).as("n_hit"))
         .crossJoin(broadcast(sse))
         .select(lit(name).as("phase"), col("sse"), col("n_exact"), col("n_hit_adc"),
-          expr("CASE WHEN n_exact = 0 THEN CAST(0 AS BIGINT) ELSE n_hit_adc * 1000000 div n_exact END")
-            .as("recall_adc_ppm"),
-          col("n_hit"),
-          expr("CASE WHEN n_exact = 0 THEN CAST(0 AS BIGINT) ELSE n_hit * 1000000 div n_exact END")
-            .as("recall_ppm"))
+          Grade.ppm("n_hit_adc", "n_exact").as("recall_adc_ppm"),
+          col("n_hit"), Grade.ppm("n_hit", "n_exact").as("recall_ppm"))
     }
     phaseRow("frozen", frozenB, codesF)
       .unionByName(phaseRow("retrained", retrainedB, codesR))
@@ -2866,19 +2786,15 @@ object Similarity {
        |  GROUP BY 1, 2, 3
        |), ${phaseSql("f", "fbook")}, $warmChain, ${phaseSql("r", s"wb$PqTrainIters")}
        |SELECT 'frozen' AS phase, fsse.sse, ne.n_exact, fhadc.n AS n_hit_adc,
-       |  CASE WHEN ne.n_exact = 0 THEN CAST(0 AS BIGINT)
-       |       ELSE fhadc.n * 1000000 // ne.n_exact END AS recall_adc_ppm,
+       |  ${Grade.ppmSql("fhadc.n", "ne.n_exact")} AS recall_adc_ppm,
        |  fhrr.n AS n_hit,
-       |  CASE WHEN ne.n_exact = 0 THEN CAST(0 AS BIGINT)
-       |       ELSE fhrr.n * 1000000 // ne.n_exact END AS recall_ppm
+       |  ${Grade.ppmSql("fhrr.n", "ne.n_exact")} AS recall_ppm
        |FROM fsse, ne, fhadc, fhrr
        |UNION ALL
        |SELECT 'retrained', rsse.sse, ne.n_exact, rhadc.n,
-       |  CASE WHEN ne.n_exact = 0 THEN CAST(0 AS BIGINT)
-       |       ELSE rhadc.n * 1000000 // ne.n_exact END,
+       |  ${Grade.ppmSql("rhadc.n", "ne.n_exact")},
        |  rhrr.n,
-       |  CASE WHEN ne.n_exact = 0 THEN CAST(0 AS BIGINT)
-       |       ELSE rhrr.n * 1000000 // ne.n_exact END
+       |  ${Grade.ppmSql("rhrr.n", "ne.n_exact")}
        |FROM rsse, ne, rhadc, rhrr
        |ORDER BY phase""".stripMargin
   }
@@ -3058,6 +2974,7 @@ object Similarity {
     */
   val GeomBitsConfigs = Seq(3, 4, 5, 6)
   val GeomSliceSize = 100L
+  private val GeomGrade = Grade.Pairs("n_true", "n_candidates")
 
   def embedGeometrySweep(s: SparkSession, dir: String): DataFrame = {
     val vecs = Materialize.stable(withVec(s, dir))
@@ -3083,20 +3000,11 @@ object Similarity {
         .select(least(col("qid"), col("vec_id")).as("pa"),
           greatest(col("qid"), col("vec_id")).as("pb"))
         .distinct()
-      val hits = exact.join(cand, Seq("pa", "pb"), "left_semi")
       val occ = buckets.groupBy("t", "bucket").count()
         .agg(max("count").as("max_occupancy"))
-      exact.agg(count(lit(1)).as("n_true"))
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-        .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
+      GeomGrade.counts(exact, cand, Seq("pa", "pb"))
         .crossJoin(broadcast(occ))
-        .select(lit(bits.toLong).as("bits"), col("n_true"), col("n_candidates"),
-          col("n_hits"),
-          expr("CASE WHEN n_true = 0 THEN 0 ELSE n_hits * 1000000 div n_true END")
-            .as("recall_ppm"),
-          expr("CASE WHEN n_candidates = 0 THEN 0 ELSE n_hits * 1000000 div n_candidates END")
-            .as("precision_ppm"),
-          col("max_occupancy"))
+        .select(lit(bits.toLong).as("bits") +: GeomGrade.graded :+ col("max_occupancy"): _*)
     }.reduce(_ unionByName _).orderBy("bits")
   }
 
@@ -3132,18 +3040,11 @@ object Similarity {
        |    FROM buckets GROUP BY 1, 2, 3) GROUP BY 1
        |), n AS (
        |  SELECT CAST(c.bits AS BIGINT) AS bits,
-       |    CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_true,
-       |    CAST(COALESCE(cc.n, 0) AS BIGINT) AS n_candidates,
-       |    CAST(COALESCE(hh.n, 0) AS BIGINT) AS n_hits,
+       |    ${GeomGrade.countsSql("cand", " WHERE bits = c.bits")},
        |    o.max_occupancy
-       |  FROM cfg c
-       |  LEFT JOIN (SELECT bits, COUNT(*) AS n FROM cand GROUP BY 1) cc USING (bits)
-       |  LEFT JOIN (SELECT bits, COUNT(*) AS n FROM hits GROUP BY 1) hh USING (bits)
-       |  JOIN occ o USING (bits)
+       |  FROM cfg c JOIN occ o USING (bits)
        |)
-       |SELECT bits, n_true, n_candidates, n_hits,
-       |  CASE WHEN n_true = 0 THEN 0 ELSE n_hits * 1000000 // n_true END AS recall_ppm,
-       |  CASE WHEN n_candidates = 0 THEN 0 ELSE n_hits * 1000000 // n_candidates END AS precision_ppm,
+       |SELECT bits, ${GeomGrade.gradedSql},
        |  max_occupancy
        |FROM n ORDER BY bits""".stripMargin
 

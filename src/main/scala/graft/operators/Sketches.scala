@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.PortableHash
 import graft.sources.Tables
 
@@ -913,13 +914,18 @@ object Sketches {
     // Materialize.stable's lazy persist serves both references from
     // one computation without the full-state write. Rungs still
     // checkpoint ([[Materialize.iteration]]) — they are the frames the
-    // self-referencing loop would otherwise re-expand.
-    var state = Materialize.stable(items)
+    // self-referencing loop would otherwise re-expand. Rung 0's persist
+    // is released once rung 1's checkpoint holds the state, unless the
+    // caller handed in an already-persisted frame (that cache is theirs).
+    val ownsRung0 = items.storageLevel == StorageLevel.NONE
+    val rung0 = Materialize.stable(items)
+    var state = rung0
     var (n, maxLvl) = census(state)
     var rung = 0
     var converged = false
     while (!converged && rung < 64) {
       state = Materialize.iteration(kllCompactRung(state))
+      if (rung == 0 && ownsRung0) rung0.unpersist()
       val (n2, m2) = census(state)
       converged = n2 == n
       n = n2; maxLvl = m2

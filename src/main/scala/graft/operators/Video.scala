@@ -646,6 +646,7 @@ object Video {
     */
   val VideoSweepWidths = Seq(4, 8, 16)
   val VideoSliceMax = 200L
+  private val SweepGrade = Grade.Pairs("n_true", "n_candidates")
 
   def videoBandSweep(s: SparkSession, dir: String): DataFrame = {
     val base = encodeVideos(s, dir)
@@ -682,19 +683,11 @@ object Video {
         .select(least(col("qa"), col("doc_id")).as("pa"),
           greatest(col("qa"), col("doc_id")).as("pb"))
         .distinct()
-      val hits = exact.join(cand, Seq("pa", "pb"), "left_semi")
       val occ = f0.groupBy("b", "v").count().agg(max("count").as("max_occupancy"))
-      exact.agg(count(lit(1)).as("n_true"))
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-        .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
+      SweepGrade.counts(exact, cand, Seq("pa", "pb"))
         .crossJoin(broadcast(occ))
-        .select(lit(w.toLong).as("band_bits"), lit(nb.toLong).as("n_bands"),
-          col("n_true"), col("n_candidates"), col("n_hits"),
-          expr("CASE WHEN n_true = 0 THEN 0 ELSE n_hits * 1000000 div n_true END")
-            .as("recall_ppm"),
-          expr("CASE WHEN n_candidates = 0 THEN 0 ELSE n_hits * 1000000 div n_candidates END")
-            .as("precision_ppm"),
-          col("max_occupancy"))
+        .select(Seq(lit(w.toLong).as("band_bits"), lit(nb.toLong).as("n_bands")) ++
+          SweepGrade.graded :+ col("max_occupancy"): _*)
     }.reduce(_ unionByName _).orderBy("band_bits")
   }
 
@@ -770,18 +763,11 @@ object Video {
        |  GROUP BY 1
        |), n AS (
        |  SELECT CAST(c.w AS BIGINT) AS band_bits, CAST(64 // c.w AS BIGINT) AS n_bands,
-       |    CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_true,
-       |    CAST(COALESCE(cc.n, 0) AS BIGINT) AS n_candidates,
-       |    CAST(COALESCE(hh.n, 0) AS BIGINT) AS n_hits,
+       |    ${SweepGrade.countsSql("cand", " WHERE w = c.w")},
        |    o.max_occupancy
-       |  FROM cfg c
-       |  LEFT JOIN (SELECT w, COUNT(*) AS n FROM cand GROUP BY 1) cc USING (w)
-       |  LEFT JOIN (SELECT w, COUNT(*) AS n FROM hits GROUP BY 1) hh USING (w)
-       |  JOIN occ o USING (w)
+       |  FROM cfg c JOIN occ o USING (w)
        |)
-       |SELECT band_bits, n_bands, n_true, n_candidates, n_hits,
-       |  CASE WHEN n_true = 0 THEN 0 ELSE n_hits * 1000000 // n_true END AS recall_ppm,
-       |  CASE WHEN n_candidates = 0 THEN 0 ELSE n_hits * 1000000 // n_candidates END AS precision_ppm,
+       |SELECT band_bits, n_bands, ${SweepGrade.gradedSql},
        |  max_occupancy
        |FROM n ORDER BY band_bits""".stripMargin
 

@@ -69,6 +69,29 @@ class KernelSpec extends SparkSpec {
     assertSame("a", "b", d)
   }
 
+  test("graft_lsh_buckets_param rejects bad geometry literals when the query is analysed") {
+    val v = Tables.embeddings(spark, sfDir)
+      .withColumn("v", expr(VectorFns.sparkToDouble("embedding")))
+    val sc = spark.sparkContext
+    // 4294967312L = 2^32 + 16: a plain toInt would quietly read it as 16
+    Seq("0, 4" -> "tables must be > 0", "-2, 4" -> "tables must be > 0",
+      "16, 0" -> "bits must be in 1..63", "16, 64" -> "bits must be in 1..63",
+      "4294967312L, 4" -> "must be an Int literal",
+      "16, 4294967300L" -> "must be an Int literal").foreach { case (args, msg) =>
+      sc.setJobGroup("lsh-geometry", s"bad geometry ($args)")
+      try {
+        // withColumn analyses eagerly; nothing here runs a job
+        val e = intercept[Exception](
+          v.withColumn("b", expr(s"graft_lsh_buckets_param(v, $args)")))
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        assert(msgs.contains(msg), s"($args): $msgs")
+      } finally sc.clearJobGroup()
+      assert(sc.statusTracker.getJobIdsForGroup("lsh-geometry").isEmpty,
+        s"($args) failed inside a job, not at analysis")
+    }
+  }
+
   test("lshBitsFor: occupancy law held by geometry, contract floor intact") {
     import VectorFns._
     // floor: every contract scale (500 / 2000 vectors, and headroom to

@@ -43,9 +43,6 @@ class MaterializeSpec extends SparkSpec {
     import spark.implicits._
     // drain anything earlier suites left behind so the count is ours
     Materialize.cleanupSnapshots(spark)
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-snap-spec").toString)
     val base = spark.sparkContext.getCheckpointDir
     assert(base.isDefined)
     def snapDirs(): Set[String] = {
@@ -65,9 +62,6 @@ class MaterializeSpec extends SparkSpec {
   test("iteration() default preserves schema+rows, truncates lineage, leaves no cache entry") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-iter-spec").toString)
     spark.catalog.clearCache()
     // a groupBy-shaped frame — the state shape every ladder rung feeds
     // through iteration()
@@ -84,7 +78,32 @@ class MaterializeSpec extends SparkSpec {
     // leaked entry per rung would accumulate across a ladder exactly
     // like the round-4 CacheManager pile-up
     assert(spark.sharedState.cacheManager.isEmpty,
-      "cachedCheckpoint leaked a cache entry")
+      "iteration() leaked a cache entry")
+  }
+
+  test("kllState releases its own rung-0 persist and keeps a caller's") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.storage.StorageLevel
+    val cm = spark.sharedState.cacheManager
+    // 600 items over 2 groups at capacity 32: several compaction rungs
+    def items() = (1 to 600).toDF("x").select(
+      expr("IF(x % 2 = 0, 'a', 'b')").as("event_type"),
+      (col("x") * 7919 % 1000).cast("long").as("cents"),
+      col("x").cast("long").as("tie"), lit(0L).as("lvl"))
+    spark.catalog.clearCache()
+    // an unpersisted input: kllState persists rung 0 itself, so it must
+    // also release it, leaving the CacheManager as empty as it found it
+    assert(operators.Sketches.kllState(items()).count() > 0)
+    assert(cm.isEmpty, "kllState leaked its rung-0 persist")
+    // an already-persisted input: the storage-level gate hands the
+    // caller's frame back unchanged, and the caller's cache must survive
+    val mine = items().persist(StorageLevel.MEMORY_ONLY)
+    assert(operators.Sketches.kllState(mine).count() > 0)
+    // storageLevel reads the CacheManager entry: NONE once it is gone
+    assert(mine.storageLevel == StorageLevel.MEMORY_ONLY, "kllState released a caller's cache")
+    mine.unpersist()
+    assert(cm.isEmpty, "kllState left a cache entry beside the caller's")
   }
 
   test("stable() honors the switch: localCheckpoint truncates lineage, persist keeps it") {

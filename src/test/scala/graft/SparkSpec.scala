@@ -26,6 +26,10 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the reliable-checkpoint home GraftSession.build sets, set once for
+    // the whole suite so no spec depends on another having set it first
+    s.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString)
     s
   }
 }
