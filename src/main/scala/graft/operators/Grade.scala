@@ -46,11 +46,11 @@ object Grade {
     s"CASE WHEN $of = 0 THEN 0 ELSE $hits * 1000000 // $of END"
 
   /** A pair-set grade: the exact pair count, the found (candidate or
-    * detected) pair count, the exact pairs found, and recall and
-    * precision ppm over them. The names are per gate because the oracle
-    * hash compares column names and types.
+    * detected) pair count, the exact pairs found (`n_hits`), and recall
+    * and precision ppm over them. The two count names are per gate
+    * because the oracle hash compares column names and types.
     */
-  final case class Pairs(nExact: String, nFound: String, nHits: String = "n_hits") {
+  final case class Pairs(nExact: String, nFound: String) {
 
     /** The three counts as one row. Hits are the exact pairs that also
       * appear in `found` on `keys`; the found and hit counts broadcast
@@ -59,14 +59,14 @@ object Grade {
     def counts(exact: DataFrame, found: DataFrame, keys: Seq[String]): DataFrame =
       exact.agg(count(lit(1)).as(nExact))
         .crossJoin(broadcast(found.agg(count(lit(1)).as(nFound))))
-        .crossJoin(broadcast(exact.join(found, keys, "left_semi").agg(count(lit(1)).as(nHits))))
+        .crossJoin(broadcast(exact.join(found, keys, "left_semi").agg(count(lit(1)).as("n_hits"))))
 
     /** recall_ppm (hits over exact) and precision_ppm (hits over found). */
     def ppms: Seq[Column] =
-      Seq(ppm(nHits, nExact).as("recall_ppm"), ppm(nHits, nFound).as("precision_ppm"))
+      Seq(ppm("n_hits", nExact).as("recall_ppm"), ppm("n_hits", nFound).as("precision_ppm"))
 
     /** The three counts followed by [[ppms]]. */
-    def graded: Seq[Column] = Seq(col(nExact), col(nFound), col(nHits)) ++ ppms
+    def graded: Seq[Column] = Seq(col(nExact), col(nFound), col("n_hits")) ++ ppms
 
     /** [[counts]]' oracle as three select items over the CTEs `exact`,
       * `found` and `hits`; `where` narrows found and hits to one config
@@ -75,11 +75,11 @@ object Grade {
     def countsSql(found: String, where: String = ""): String =
       s"""(SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS $nExact,
          |  (SELECT CAST(COUNT(*) AS BIGINT) FROM $found$where) AS $nFound,
-         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM hits$where) AS $nHits""".stripMargin
+         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM hits$where) AS n_hits""".stripMargin
 
     def ppmsSql: String =
-      s"${ppmSql(nHits, nExact)} AS recall_ppm,\n  ${ppmSql(nHits, nFound)} AS precision_ppm"
+      s"${ppmSql("n_hits", nExact)} AS recall_ppm,\n  ${ppmSql("n_hits", nFound)} AS precision_ppm"
 
-    def gradedSql: String = s"$nExact, $nFound, $nHits,\n  $ppmsSql"
+    def gradedSql: String = s"$nExact, $nFound, n_hits,\n  $ppmsSql"
   }
 }

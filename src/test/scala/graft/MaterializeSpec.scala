@@ -81,6 +81,19 @@ class MaterializeSpec extends SparkSpec {
       "iteration() leaked a cache entry")
   }
 
+  test("iteration() and snapshot() fall back to localCheckpoint without a checkpoint dir") {
+    // the suite's shared context has a checkpoint dir for good, so the
+    // fallback runs in a child JVM whose context never had one
+    import scala.jdk.CollectionConverters._
+    val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(o => o.startsWith("--add-opens") || o.startsWith("-D"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmOpts ++
+      Seq("-cp", System.getProperty("java.class.path"), NoCheckpointDirMain.getClass.getName.stripSuffix("$"))
+    val out = new StringBuilder
+    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n')))
+    assert(rc == 0 && out.toString.contains(NoCheckpointDirMain.Ok), out.toString)
+  }
+
   test("kllState releases its own rung-0 persist and keeps a caller's") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -124,5 +137,30 @@ class MaterializeSpec extends SparkSpec {
         m.queryExecution.optimizedPlan.toString)
       m.unpersist()
     }
+  }
+}
+
+/** Child-JVM half of MaterializeSpec's no-checkpoint-dir case: with no
+  * dir set, a reliable `checkpoint()` throws, so rows that come back
+  * equal prove both `iteration` and `snapshot` took `localCheckpoint()`.
+  */
+object NoCheckpointDirMain {
+  val Ok = "no-checkpoint-dir fallback ok"
+
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions._
+    val spark = SparkSession.builder().master("local[1]").appName("graft-no-ckpt")
+      .config("spark.sql.shuffle.partitions", "1").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val base = (1 to 100).toDF("x").groupBy(expr("x % 7").as("k")).agg(count(lit(1)).as("n"))
+    val fallbacks = Seq(Materialize.iteration(base), Materialize.snapshot(base))
+    val ok = spark.sparkContext.getCheckpointDir.isEmpty &&
+      fallbacks.forall(m => rows(m) == rows(base) &&
+        m.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
+    spark.stop()
+    if (ok) println(Ok) else sys.exit(1)
   }
 }

@@ -27,9 +27,11 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the reliable-checkpoint home GraftSession.build sets, set once for
-    // the whole suite so no spec depends on another having set it first
-    s.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-test-ckpt").toString)
+    // the whole suite so no spec depends on another having set it first;
+    // removed at JVM exit, since Spark leaves checkpoint files behind
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-test-ckpt").toFile
+    sys.addShutdownHook(org.apache.spark.network.util.JavaUtils.deleteRecursively(ckpt))
+    s.sparkContext.setCheckpointDir(ckpt.toString)
     s
   }
 }
