@@ -41,16 +41,20 @@ class ChangeDetector(options: ChangeDetectionOptions = ChangeDetectionOptions())
     * with previous-version columns (reference ChangeResult).
     */
   def detectChanges(prev: DataFrame, cur: DataFrame): DataFrame = {
-    val p = prev.select(col("key"), col("size").as("prev_size"),
+    val p = prev.select(col("key").as("prev_key"), col("size").as("prev_size"),
       col("etag").as("prev_etag"), col("last_modified_us").as("prev_last_modified_us"))
     val c = cur.select(col("key"), col("size"), col("etag"), col("last_modified_us"))
     val isChanged = changed(c.apply, n => col(s"prev_$n"))
-    val joined = c.join(p, Seq("key"), "full_outer")
-      .withColumn("change_type",
-        when(col("prev_etag").isNull, "added")
-          .when(col("etag").isNull, "deleted")
+    // presence is decided by which side holds the key, never by a
+    // nullable value column: a listing may carry null etags
+    val joined = c.join(p, col("key") === col("prev_key"), "full_outer")
+      .select(coalesce(col("key"), col("prev_key")).as("key"),
+        col("size"), col("etag"), col("last_modified_us"),
+        col("prev_size"), col("prev_etag"), col("prev_last_modified_us"),
+        when(col("prev_key").isNull, "added")
+          .when(col("key").isNull, "deleted")
           .when(isChanged, "modified")
-          .otherwise("unchanged"))
+          .otherwise("unchanged").as("change_type"))
     if (options.trackDeleted) joined
     else joined.filter(col("change_type") =!= "deleted")
   }

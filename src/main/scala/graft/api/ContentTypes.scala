@@ -10,9 +10,19 @@ import org.apache.spark.sql.functions._
 object ContentTypes {
 
   /** extension ↔ MIME subset (reference delegates to mime-db; this is
-    * the lake-relevant slice, extensible by callers).
+    * the lake-relevant slice — the extensions the manifest can produce).
     */
-  val mimeByExt: Seq[(String, String)] = graft.operators.ContentTypes.mimeByExt
+  val mimeByExt: Seq[(String, String)] = Seq(
+    "parquet" -> "application/vnd.apache.parquet",
+    "json" -> "application/json",
+    "csv" -> "text/csv",
+    "txt" -> "text/plain",
+    "log" -> "application/octet-stream", // not in mime-db → fallback
+    "png" -> "image/png",
+    "jpg" -> "image/jpeg",
+    "gz" -> "application/gzip",
+    "bin" -> "application/octet-stream",
+    "html" -> "text/html")
 
   private val extOf: Column => Column = p => lower(regexp_extract(p, "\\.([A-Za-z0-9]+)$", 1))
 
@@ -32,6 +42,7 @@ object ContentTypes {
   def charset(contentType: Column): Column =
     when(isText(contentType), "UTF-8").otherwise(lit(null))
 
+  /** reference ContentType.isText (src/index.ts:138). */
   def isText(contentType: Column): Column =
     contentType.startsWith("text/") ||
       contentType.isin("application/json", "application/xml",

@@ -18,9 +18,14 @@ case class PartitionField(
   private[api] def raw(path: Column): Column =
     regexp_extract(path, s"(?:^|/)${java.util.regex.Pattern.quote(name)}=([^/]*)", 1)
 
-  /** typed value (empty segment → null; leading zeros coerce via cast). */
-  private[api] def typed(path: Column): Column =
-    when(raw(path) === "", lit(null)).otherwise(raw(path).cast(dataType))
+  /** typed value; leading zeros coerce. A malformed or empty value is
+    * null: try_cast, because a plain cast throws under ANSI and one bad
+    * key would abort the whole job. An empty string value is null too.
+    */
+  private[api] def typed(path: Column): Column = dataType match {
+    case StringType => when(raw(path) =!= "", raw(path))
+    case _ => raw(path).try_cast(dataType)
+  }
 
   private[api] def validWhenPresent(path: Column): Column = {
     val v = typed(path)
@@ -33,6 +38,12 @@ case class PartitionField(
     val enumOk = if (enumVals.nonEmpty) v.cast(StringType).isin(enumVals: _*) else lit(true)
     v.isNotNull && rangeOk && enumOk
   }
+
+  /** the reference's field rule: a required key must be present and
+    * valid; an optional key may be absent, but not invalid.
+    */
+  private[api] def ok(path: Column): Column =
+    if (required) validWhenPresent(path) else raw(path) === "" || validWhenPresent(path)
 }
 
 /** Twin of the reference's `HivePartitionParser` (src/index.ts:1558):
@@ -50,22 +61,12 @@ class HivePartitionParser(fields: Seq[PartitionField]) {
   def parse(path: Column): Column =
     struct(fields.map(f => f.typed(path).as(f.name)): _*)
 
-  def isValid(path: Column): Column =
-    fields.map { f =>
-      if (f.required) f.validWhenPresent(path)
-      else f.raw(path) === "" || f.validWhenPresent(path)
-    }.reduce(_ && _)
+  def isValid(path: Column): Column = fields.map(_.ok(path)).reduce(_ && _)
 
   /** array of "key: message" strings, empty when valid. */
-  def validationErrors(path: Column): Column = {
-    val errs = fields.map { f =>
-      val bad =
-        if (f.required) !f.validWhenPresent(path)
-        else f.raw(path) =!= "" && !f.validWhenPresent(path)
-      when(bad, lit(s"${f.name}: invalid or missing")).otherwise(lit(null))
-    }
-    filter(array(errs: _*), e => e.isNotNull)
-  }
+  def validationErrors(path: Column): Column =
+    filter(array(fields.map(f => when(!f.ok(path), lit(s"${f.name}: invalid or missing"))): _*),
+      e => e.isNotNull)
 
   /** keys with no `k=` segment in the path at all. */
   def missingKeys(path: Column): Column =

@@ -81,21 +81,21 @@ class PathMatcher(nocase: Boolean = false) {
   /** array of values captured by `:name` / `*` placeholders, or null if
     * the path doesn't match (reference capture).
     */
-  def capture(pattern: String, path: Column): Column = {
-    val (re0, names) = Globs.compileCapture(pattern)
-    val re = "^" + re0 + "$"
-    when(path.rlike(re),
-      array(names.indices.map(i => regexp_extract(path, re, i + 1)): _*))
-      .otherwise(lit(null))
-  }
+  def capture(pattern: String, path: Column): Column =
+    captured(pattern, path)(groups => array(groups.map(_._2): _*))
 
   /** named captures as a struct column (Spark-idiomatic convenience). */
-  def captureStruct(pattern: String, path: Column): Column = {
+  def captureStruct(pattern: String, path: Column): Column =
+    captured(pattern, path)(groups => struct(groups.map { case (n, g) => g.as(n) }: _*))
+
+  /** the capture pattern compiled once: `wrap` receives each group's
+    * (name, extracted value); null where the path doesn't match.
+    */
+  private def captured(pattern: String, path: Column)(wrap: Seq[(String, Column)] => Column): Column = {
     val (re0, names) = Globs.compileCapture(pattern)
     val re = "^" + re0 + "$"
     when(path.rlike(re),
-      struct(names.zipWithIndex.map { case (n, i) =>
-        regexp_extract(path, re, i + 1).as(n) }: _*))
+      wrap(names.zipWithIndex.map { case (n, i) => n -> regexp_extract(path, re, i + 1) }))
       .otherwise(lit(null))
   }
 }

@@ -39,23 +39,28 @@ class TimePartitionGenerator(config0: TimePartitionConfig) {
     c
   }
 
-  private def segments(ts: Column): Seq[Column] = {
-    val hive = config.format == "hive"
-    def seg(key: String, fmt: String): Column =
-      if (hive) concat(lit(s"$key="), date_format(ts, fmt)) else date_format(ts, fmt)
-    val base = Seq(seg("year", "yyyy")) ++
-      (if (config.granularity != Yearly) Seq(seg("month", "MM")) else Nil) ++
+  /** (label, date pattern) of each segment after the prefix, in order —
+    * label `key=` in hive format, empty in path format. The one segment
+    * list both the Column and the String path format.
+    */
+  private val segments: Seq[(String, String)] =
+    (Seq("year" -> "yyyy") ++
+      (if (config.granularity != Yearly) Seq("month" -> "MM") else Nil) ++
       (config.granularity match {
-        case Daily | Hourly => Seq(seg("day", "dd"))
+        case Daily | Hourly => Seq("day" -> "dd")
         case _ => Nil
       }) ++
-      (if (config.includeHour) Seq(seg("hour", "HH")) else Nil) ++
-      (if (config.includeMinute) Seq(seg("minute", "mm")) else Nil)
-    if (config.prefix.nonEmpty) lit(config.prefix) +: base else base
-  }
+      (if (config.includeHour) Seq("hour" -> "HH") else Nil) ++
+      (if (config.includeMinute) Seq("minute" -> "mm") else Nil))
+      .map { case (key, fmt) => (if (config.format == "hive") s"$key=" else "", fmt) }
+
+  private val prefixPart: Seq[String] = Seq(config.prefix).filter(_.nonEmpty)
 
   /** partition path for a timestamp column (reference generatePath). */
-  def generatePath(ts: Column): Column = concat_ws("/", segments(ts): _*)
+  def generatePath(ts: Column): Column =
+    concat_ws("/", prefixPart.map(lit) ++ segments.map { case (label, fmt) =>
+      if (label.isEmpty) date_format(ts, fmt) else concat(lit(label), date_format(ts, fmt))
+    }: _*)
 
   /** partition path for "now" (reference generateCurrentPath,
     * src/index.ts:1977). Column form — stamp a whole DataFrame with the
@@ -70,18 +75,9 @@ class TimePartitionGenerator(config0: TimePartitionConfig) {
     */
   def generateCurrentPath(clock: java.time.Clock): String = {
     val t = java.time.ZonedDateTime.now(clock.withZone(java.time.ZoneOffset.UTC))
-    val hive = config.format == "hive"
-    def seg(key: String, v: String): String = if (hive) s"$key=$v" else v
-    val base = Seq(seg("year", f"${t.getYear}%04d")) ++
-      (if (config.granularity != Yearly) Seq(seg("month", f"${t.getMonthValue}%02d")) else Nil) ++
-      (config.granularity match {
-        case Daily | Hourly => Seq(seg("day", f"${t.getDayOfMonth}%02d"))
-        case _ => Nil
-      }) ++
-      (if (config.includeHour) Seq(seg("hour", f"${t.getHour}%02d")) else Nil) ++
-      (if (config.includeMinute) Seq(seg("minute", f"${t.getMinute}%02d")) else Nil)
-    val all = if (config.prefix.nonEmpty) config.prefix +: base else base
-    all.mkString("/")
+    (prefixPart ++ segments.map { case (label, fmt) =>
+      label + java.time.format.DateTimeFormatter.ofPattern(fmt).format(t)
+    }).mkString("/")
   }
 
   /** one row per period in [start, end] (reference

@@ -17,19 +17,23 @@ import graft.sources.Manifest
   */
 object ChangeDetection {
 
-  /** detectChanges (compareMode=full, trackDeleted=true), emitting the
-    * non-Unchanged rows — runs through the user-facing
-    * [[graft.api.ChangeDetector]].
+  /** the manifest's prev → cur snapshots classified by the user-facing
+    * [[graft.api.ChangeDetector]] in `compareMode`.
     */
-  def changeDetect(s: SparkSession, dir: String): DataFrame = {
-    val cd = new ChangeDetector(ChangeDetectionOptions(compareMode = "full"))
-    cd.detectChanges(Manifest.snapshotPrev(s, dir), Manifest.snapshotCur(s, dir))
+  private def changes(s: SparkSession, dir: String, compareMode: String): DataFrame =
+    new ChangeDetector(ChangeDetectionOptions(compareMode = compareMode))
+      .detectChanges(Manifest.snapshotPrev(s, dir), Manifest.snapshotCur(s, dir))
+
+  /** detectChanges (compareMode=full, trackDeleted=true), emitting the
+    * non-Unchanged rows.
+    */
+  def changeDetect(s: SparkSession, dir: String): DataFrame =
+    changes(s, dir, "full")
       .filter(col("change_type") =!= "unchanged")
       .select(col("key"), col("change_type"),
         coalesce(col("size"), col("prev_size")).as("size"),
         col("prev_size"))
       .orderBy("key")
-  }
 
   val changeDetectSql: String =
     s"""${Manifest.duckSnapshots}
@@ -50,14 +54,12 @@ object ChangeDetection {
   /** filterChangesByType + counts: per-type change statistics
     * (including Unchanged — the reference emits those too).
     */
-  def changeStats(s: SparkSession, dir: String): DataFrame = {
-    val cd = new ChangeDetector(ChangeDetectionOptions(compareMode = "full"))
-    cd.detectChanges(Manifest.snapshotPrev(s, dir), Manifest.snapshotCur(s, dir))
+  def changeStats(s: SparkSession, dir: String): DataFrame =
+    changes(s, dir, "full")
       .groupBy("change_type")
       .agg(count(lit(1)).as("n"),
         sum(coalesce(col("size"), col("prev_size"))).as("total_size"))
       .orderBy("change_type")
-  }
 
   val changeStatsSql: String =
     s"""${Manifest.duckSnapshots}
@@ -74,13 +76,11 @@ object ChangeDetection {
     * compareMode "quick") — etag-only mutations classify as unchanged.
     * Same join shape; the comparison predicate narrows.
     */
-  def changeDetectQuick(s: SparkSession, dir: String): DataFrame = {
-    val cd = new ChangeDetector(ChangeDetectionOptions(compareMode = "quick"))
-    cd.detectChanges(Manifest.snapshotPrev(s, dir), Manifest.snapshotCur(s, dir))
+  def changeDetectQuick(s: SparkSession, dir: String): DataFrame =
+    changes(s, dir, "quick")
       .groupBy("change_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("change_type")
-  }
 
   val changeDetectQuickSql: String =
     s"""${Manifest.duckSnapshots}

@@ -1,54 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api
 import graft.sources.Manifest
 
 /** ContentType surface (reference src/index.ts:103 — detect/charset/
-  * isText/isBinary over the mime-types db) as a literal lookup the
-  * optimizer constant-folds into the scan. No UDF: a CASE chain on the
-  * extension is codegen'd and free at 100 TB.
+  * isText/isBinary over the mime-types db) through
+  * [[graft.api.ContentTypes]]: a literal lookup the optimizer
+  * constant-folds into the scan. No UDF: a CASE chain on the extension
+  * is codegen'd and free at 100 TB.
   */
 object ContentTypes {
 
-  /** extension → MIME, the subset of mime-db the manifest can produce. */
-  val mimeByExt: Seq[(String, String)] = Seq(
-    "parquet" -> "application/vnd.apache.parquet",
-    "json" -> "application/json",
-    "csv" -> "text/csv",
-    "txt" -> "text/plain",
-    "log" -> "application/octet-stream", // not in mime-db → fallback
-    "png" -> "image/png",
-    "jpg" -> "image/jpeg",
-    "gz" -> "application/gzip",
-    "bin" -> "application/octet-stream",
-    "html" -> "text/html")
-
-  /** reference ContentType.isText (src/index.ts:138). */
-  def isTextMime(m: String): Boolean =
-    m.startsWith("text/") || m == "application/json" || m == "application/xml" ||
-      m == "application/javascript" || m == "application/typescript"
-
-  def mimeCol(ext: Column): Column =
-    mimeByExt.foldLeft(lit("application/octet-stream")) { case (acc, (e, m)) =>
-      when(ext === e, m).otherwise(acc)
-    }
-
-  def contentType(s: SparkSession, dir: String): DataFrame = {
-    val ext = regexp_extract(col("key"), "\\.([a-z0-9]+)$", 1)
+  def contentType(s: SparkSession, dir: String): DataFrame =
     Manifest.manifest(s, dir)
-      .select(mimeCol(ext).as("mime"), col("size"))
-      .withColumn("is_text",
-        col("mime").startsWith("text/") ||
-          col("mime").isin("application/json", "application/xml",
-            "application/javascript", "application/typescript"))
+      .select(api.ContentTypes.detect(col("key")).as("mime"), col("size"))
+      .withColumn("is_text", api.ContentTypes.isText(col("mime")))
       .groupBy("mime", "is_text")
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("mime")
-  }
 
   val contentTypeSql: String = {
-    val cases = mimeByExt
+    val cases = api.ContentTypes.mimeByExt
       .map { case (e, m) => s"WHEN '$e' THEN '$m'" }
       .mkString("\n    ")
     s"""${Manifest.duckWith}

@@ -1,12 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import graft.api.{HivePartitionParser, PartitionField, PathMatcher}
 import graft.sources.{Manifest, Tables}
 
 /** HivePartitionParser surface (reference src/index.ts:1558 — parse/
-  * safeParse/format/createGlobPattern/isValid/matchesGlob) as codegen'd
-  * column expressions over the manifest.
+  * safeParse/format/createGlobPattern/isValid/matchesGlob) through
+  * [[graft.api.HivePartitionParser]] and [[graft.api.PathMatcher]]:
+  * codegen'd column expressions over the manifest.
   *
   * Parse = `regexp_extract` of each `k=v` segment (non-k=v segments
   * ignored, leading zeros coerced by the int cast — reference §3
@@ -15,24 +18,30 @@ import graft.sources.{Manifest, Tables}
   */
 object HivePartitions {
 
-  /** parse + schema validation. Schema: year:int, month:int 1-12,
+  /** The manifest's partition schema, the one parser every manifest
+    * key reads its `k=v` fields through: year:int, month:int 1-12,
     * day:int 1-28 (stricter than the data on purpose → both valid and
     * invalid rows exist), event_type: enum of 5.
     */
-  def hiveParse(s: SparkSession, dir: String): DataFrame = {
-    val m = Manifest.manifest(s, dir)
-    val year = regexp_extract(col("key"), "(?:^|/)year=([^/]*)", 1).cast("int")
-    val month = regexp_extract(col("key"), "(?:^|/)month=([^/]*)", 1).cast("int")
-    val day = regexp_extract(col("key"), "(?:^|/)day=([^/]*)", 1).cast("int")
-    val et = regexp_extract(col("key"), "(?:^|/)event_type=([^/]*)", 1)
-    val valid = year.isNotNull && month.between(1, 12) && day.between(1, 28) &&
-      et.isin("click", "view", "purchase", "signup", "error")
-    m.select(year.as("year"), month.as("month"), day.as("day"),
-        et.as("event_type"), valid.as("is_valid"))
+  val lake = new HivePartitionParser(Seq(
+    PartitionField("year", IntegerType),
+    PartitionField("month", IntegerType, min = Some(1), max = Some(12)),
+    PartitionField("day", IntegerType, min = Some(1), max = Some(28)),
+    PartitionField("event_type", enumVals = Seq("click", "view", "purchase", "signup", "error"))))
+
+  /** one typed partition field of a manifest key. */
+  def field(key: Column, name: String): Column = lake.parse(key)(name)
+
+  private val matcher = new PathMatcher
+
+  /** parse + schema validation against [[lake]]. */
+  def hiveParse(s: SparkSession, dir: String): DataFrame =
+    Manifest.manifest(s, dir)
+      .select(Seq("year", "month", "day", "event_type").map(f => field(col("key"), f).as(f)) :+
+        lake.isValid(col("key")).as("is_valid"): _*)
       .groupBy("year", "month", "day", "event_type", "is_valid")
       .agg(count(lit(1)).as("n"))
       .orderBy("year", "month", "day", "event_type")
-  }
 
   val hiveParseSql: String =
     s"""${Manifest.duckWith}
@@ -53,11 +62,11 @@ object HivePartitions {
     */
   def hiveFormat(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
-      .select(concat(
-        lit("year="), year(col("ts")).cast("string"),
-        lit("/month="), lpad(month(col("ts")).cast("string"), 2, "0"),
-        lit("/day="), lpad(dayofmonth(col("ts")).cast("string"), 2, "0"),
-        lit("/event_type="), col("event_type")).as("partition_path"))
+      .select(lake.format(Map(
+        "year" -> year(col("ts")),
+        "month" -> lpad(month(col("ts")).cast("string"), 2, "0"),
+        "day" -> lpad(dayofmonth(col("ts")).cast("string"), 2, "0"),
+        "event_type" -> col("event_type"))).as("partition_path"))
       .groupBy("partition_path")
       .agg(count(lit(1)).as("n"))
       .orderBy("partition_path")
@@ -71,16 +80,16 @@ object HivePartitions {
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** createGlobPattern({year: 2024, event_type: "click"}) → the glob
-    * "year=2024/month=&#42;/day=&#42;/event_type=click" + matchesGlob as
-    * a partition-pruning filter. The filter is a pure conjunction on the
-    * partition columns — exactly what Catalyst turns into partition
-    * pruning on a real hive-layout table.
+    * "year=2024/month=&#42;/day=&#42;/event_type=click", matched at any
+    * depth, as a partition-pruning filter. The filter is a pure
+    * conjunction on the partition columns — exactly what Catalyst turns
+    * into partition pruning on a real hive-layout table.
     */
   def hivePrune(s: SparkSession, dir: String): DataFrame = {
-    val pruneRe = "(?:^|/)year=2024/month=[^/]*/day=[^/]*/event_type=click(?:/|$)"
+    val glob = "**/" + lake.createGlobPattern(Map("year" -> 2024, "event_type" -> "click")) + "/**"
     Manifest.manifest(s, dir)
-      .filter(col("key").rlike(pruneRe))
-      .groupBy(regexp_extract(col("key"), "(?:^|/)day=([^/]*)", 1).cast("int").as("day"))
+      .filter(matcher.isMatch(col("key"), glob))
+      .groupBy(field(col("key"), "day").as("day"))
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("day")
   }
@@ -107,16 +116,12 @@ object HivePartitions {
   private val pruneRangeGlob =
     "data/year={2023..2024}/month={01..06}/day={01..09}/event_type={click,view}/part-*.{json,csv}"
 
-  def hivePruneRange(s: SparkSession, dir: String): DataFrame = {
-    val re = "^" + graft.functions.Globs.compile(pruneRangeGlob) + "$"
+  def hivePruneRange(s: SparkSession, dir: String): DataFrame =
     Manifest.manifest(s, dir)
-      .filter(col("key").rlike(re))
-      .groupBy(
-        regexp_extract(col("key"), "(?:^|/)month=([^/]*)", 1).cast("int").as("month"),
-        regexp_extract(col("key"), "(?:^|/)event_type=([^/]*)", 1).as("event_type"))
+      .filter(matcher.isMatch(col("key"), pruneRangeGlob))
+      .groupBy(field(col("key"), "month").as("month"), field(col("key"), "event_type").as("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("month", "event_type")
-  }
 
   val hivePruneRangeSql: String = {
     val re = "^" + graft.functions.Globs.compile(pruneRangeGlob) + "$"

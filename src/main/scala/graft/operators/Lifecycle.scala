@@ -24,7 +24,7 @@ object Lifecycle {
       .withColumn("action",
         when(col("last_modified_us") < CutoffUs, "expire").otherwise("keep"))
       .groupBy(
-        regexp_extract(col("key"), "(?:^|/)day=(\\d+)", 1).cast("int").as("day"),
+        HivePartitions.field(col("key"), "day").as("day"),
         col("action"))
       .agg(count(lit(1)).as("n_objects"),
         sum(col("size")).as("bytes"))

@@ -2,11 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.PathMatcher
 import graft.functions.Globs
 import graft.sources.Manifest
 
 /** PathMatcher surface (reference src/index.ts:612 — isMatch/match/not/
-  * matchFast/capture) as distributed manifest scans.
+  * matchFast/capture) as distributed manifest scans through
+  * [[graft.api.PathMatcher]].
   *
   * The glob is compiled to a regex ONCE on the driver (same caching idea
   * as the reference's patternCache) and inlined as a literal into a
@@ -24,14 +26,13 @@ object PathMatching {
   private val notGlobs = Seq("**/*.parquet", "**/*.json", "**/*.csv")
   private val capturePattern = "data/year=:y/month=:m/day=:d/event_type=:t/part-*"
 
+  private val matcher = new PathMatcher
+
   /** match/matchFast: keys matching any pattern in the list. */
-  def globMatch(s: SparkSession, dir: String): DataFrame = {
-    val re = "^(?:" + Globs.compileAny(matchGlobs) + ")$"
-    Manifest.manifest(s, dir)
-      .filter(col("key").rlike(re))
+  def globMatch(s: SparkSession, dir: String): DataFrame =
+    matcher.filterMatching(Manifest.manifest(s, dir), matchGlobs)
       .select(col("key"), col("size"))
       .orderBy("key")
-  }
 
   val globMatchSql: String = {
     val re = "^(?:" + Globs.compileAny(matchGlobs) + ")$"
@@ -42,14 +43,11 @@ object PathMatching {
   }
 
   /** not(): keys matching none of the patterns, aggregated per type. */
-  def globNot(s: SparkSession, dir: String): DataFrame = {
-    val re = "^(?:" + Globs.compileAny(notGlobs) + ")$"
-    Manifest.manifest(s, dir)
-      .filter(!col("key").rlike(re))
-      .groupBy(regexp_extract(col("key"), "event_type=([^/]+)", 1).as("event_type"))
+  def globNot(s: SparkSession, dir: String): DataFrame =
+    matcher.filterNot(Manifest.manifest(s, dir), notGlobs)
+      .groupBy(HivePartitions.field(col("key"), "event_type").as("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("event_type")
-  }
 
   val globNotSql: String = {
     val re = "^(?:" + Globs.compileAny(notGlobs) + ")$"
@@ -61,19 +59,14 @@ object PathMatching {
   }
 
   /** capture(): `:name`/`*` placeholder extraction, aggregated. */
-  def globCapture(s: SparkSession, dir: String): DataFrame = {
-    val (re0, _) = Globs.compileCapture(capturePattern)
-    val re = "^" + re0 + "$"
+  def globCapture(s: SparkSession, dir: String): DataFrame =
     Manifest.manifest(s, dir)
-      .select(
-        regexp_extract(col("key"), re, 1).as("y"),
-        regexp_extract(col("key"), re, 2).as("m"),
-        regexp_extract(col("key"), re, 4).as("t"))
-      .filter(col("y") =!= "")
+      .select(matcher.captureStruct(capturePattern, col("key")).as("c"))
+      .filter(col("c").isNotNull)
+      .select("c.y", "c.m", "c.t")
       .groupBy("y", "m", "t")
       .agg(count(lit(1)).as("n"))
       .orderBy("y", "m", "t")
-  }
 
   val globCaptureSql: String = {
     val (re0, _) = Globs.compileCapture(capturePattern)
@@ -93,10 +86,8 @@ object PathMatching {
     */
   def fileIndex(s: SparkSession, dir: String): DataFrame =
     Manifest.manifest(s, dir)
-      .groupBy(
-        regexp_extract(col("key"), "year=(\\d+)", 1).cast("int").as("year"),
-        regexp_extract(col("key"), "month=(\\d+)", 1).cast("int").as("month"),
-        regexp_extract(col("key"), "event_type=([^/]+)", 1).as("event_type"))
+      .groupBy(Seq("year", "month", "event_type").map(f =>
+        HivePartitions.field(col("key"), f).as(f)): _*)
       .agg(
         count(lit(1)).as("n_files"),
         sum(col("size")).as("total_size"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.PathMatcher
 import graft.functions.Globs
 import graft.sources.Manifest
 
@@ -25,7 +26,7 @@ object S3Utils {
       .when(pmod(col("event_id"), lit(11)) === 0, lit("192.168.5.4"))
       .when(pmod(col("event_id"), lit(13)) === 0, lit("bad..name"))
       .when(pmod(col("event_id"), lit(17)) === 0, lit("trailing-s3alias"))
-      .otherwise(concat(regexp_extract(col("key"), "event_type=([^/]+)", 1), lit("-store")))
+      .otherwise(concat(HivePartitions.field(col("key"), "event_type"), lit("-store")))
     val valid = graft.api.S3Keys.isValidBucketName(col("bucket"))
     // full per-segment encodeURIComponent twin (graft.api.S3Keys), driven
     // through both the manifest key (only '=' is special in its alphabet)
@@ -80,13 +81,12 @@ object S3Utils {
   /** PathMatcher.all — key must match EVERY pattern in the list. */
   private val allGlobs = Seq("data/**", "**/event_type=purchase/*", "**/*.{json,csv,parquet}")
 
-  def globAll(s: SparkSession, dir: String): DataFrame = {
-    val res = allGlobs.map(g => "^(?:" + Globs.compile(g) + ")$")
-    res.foldLeft(Manifest.manifest(s, dir)) { (df, re) => df.filter(col("key").rlike(re)) }
-      .groupBy(regexp_extract(col("key"), "(?:^|/)day=([^/]*)", 1).cast("int").as("day"))
+  def globAll(s: SparkSession, dir: String): DataFrame =
+    Manifest.manifest(s, dir)
+      .filter(new PathMatcher().all(col("key"), allGlobs: _*))
+      .groupBy(HivePartitions.field(col("key"), "day").as("day"))
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("day")
-  }
 
   val globAllSql: String = {
     val preds = allGlobs

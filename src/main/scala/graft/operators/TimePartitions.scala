@@ -2,12 +2,15 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.{TimePartitionConfig, TimePartitionGenerator}
+import graft.api.TimeGranularity._
 import graft.sources.Manifest
 
 /** TimePartitionGenerator surface (reference src/index.ts:1827 —
   * generatePath/generatePathsForRange, hive vs plain format, hourly/
-  * daily/monthly/yearly granularity, zero-padding) as `sequence()` +
-  * `explode` + `date_format` — fully distributed path generation (a
+  * daily/monthly/yearly granularity, zero-padding) through
+  * [[graft.api.TimePartitionGenerator]]: `sequence()` + `explode` +
+  * `date_format` — fully distributed path generation (a
   * year of hourly paths is 8760 rows; a driver loop would cap this,
   * the explode doesn't).
   */
@@ -19,25 +22,14 @@ object TimePartitions {
     * 2022-2024 (plain).
     */
   def timePaths(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val daily = s.sql(
-      """SELECT 'daily' AS granularity,
-        |  concat('data/year=', date_format(d, 'yyyy'), '/month=', date_format(d, 'MM'),
-        |         '/day=', date_format(d, 'dd')) AS path
-        |FROM (SELECT explode(sequence(DATE'2024-01-01', DATE'2024-01-30', INTERVAL 1 DAY)) AS d)""".stripMargin)
-    val hourly = s.sql(
-      """SELECT 'hourly' AS granularity,
-        |  concat('year=', date_format(t, 'yyyy'), '/month=', date_format(t, 'MM'),
-        |         '/day=', date_format(t, 'dd'), '/hour=', date_format(t, 'HH')) AS path
-        |FROM (SELECT explode(sequence(TIMESTAMP'2024-01-15 00:00:00', TIMESTAMP'2024-01-15 23:00:00', INTERVAL 1 HOUR)) AS t)""".stripMargin)
-    val monthly = s.sql(
-      """SELECT 'monthly' AS granularity,
-        |  concat(date_format(d, 'yyyy'), '/', date_format(d, 'MM')) AS path
-        |FROM (SELECT explode(sequence(DATE'2024-01-01', DATE'2024-12-01', INTERVAL 1 MONTH)) AS d)""".stripMargin)
-    val yearly = s.sql(
-      """SELECT 'yearly' AS granularity, date_format(d, 'yyyy') AS path
-        |FROM (SELECT explode(sequence(DATE'2022-01-01', DATE'2024-01-01', INTERVAL 1 YEAR)) AS d)""".stripMargin)
-    daily.union(hourly).union(monthly).union(yearly).orderBy("granularity", "path")
+    def range(name: String, config: TimePartitionConfig, start: String, end: String): DataFrame =
+      new TimePartitionGenerator(config).generatePathsForRange(s, start, end)
+        .select(lit(name).as("granularity"), col("path"))
+    range("daily", TimePartitionConfig(Daily, prefix = "data"), "2024-01-01", "2024-01-30")
+      .union(range("hourly", TimePartitionConfig(Hourly), "2024-01-15 00:00:00", "2024-01-15 23:00:00"))
+      .union(range("monthly", TimePartitionConfig(Monthly, format = "path"), "2024-01-01", "2024-12-01"))
+      .union(range("yearly", TimePartitionConfig(Yearly, format = "path"), "2022-01-01", "2024-01-01"))
+      .orderBy("granularity", "path")
   }
 
   val timePathsSql: String =
@@ -61,12 +53,10 @@ object TimePartitions {
     * epoch-micros partition timestamp, joined with per-partition stats.
     */
   def timeParse(s: SparkSession, dir: String): DataFrame = {
-    val y = regexp_extract(col("key"), "(?:^|/)year=(\\d+)", 1).cast("int")
-    val m = regexp_extract(col("key"), "(?:^|/)month=(\\d+)", 1).cast("int")
-    val d = regexp_extract(col("key"), "(?:^|/)day=(\\d+)", 1).cast("int")
+    def f(name: String) = HivePartitions.field(col("key"), name)
     Manifest.manifest(s, dir)
-      .select(unix_micros(make_timestamp(y, m, d, lit(0), lit(0), lit(0))).as("partition_ts_us"),
-        col("size"))
+      .select(unix_micros(make_timestamp(f("year"), f("month"), f("day"), lit(0), lit(0), lit(0)))
+        .as("partition_ts_us"), col("size"))
       .groupBy("partition_ts_us")
       .agg(count(lit(1)).as("n"), sum(col("size")).as("total_size"))
       .orderBy("partition_ts_us")

@@ -19,17 +19,11 @@ import org.apache.spark.sql.functions._
 object FileManifest {
 
   /** list objects under `dir` (optionally glob-filtered at the listing
-    * level) as the manifest schema `(key, size, last_modified_us)`.
+    * level) as the manifest schema `(key, size, last_modified_us)`:
+    * [[getObjects]] without the payload, so the scan reads no file bytes.
     */
-  def list(spark: SparkSession, dir: String, glob: Option[String] = None): DataFrame = {
-    val reader = spark.read.format("binaryFile")
-    glob.foreach(g => reader.option("pathGlobFilter", g))
-    reader.load(dir)
-      .select(
-        col("path").as("key"),
-        col("length").as("size"),
-        unix_micros(col("modificationTime")).as("last_modified_us"))
-  }
+  def list(spark: SparkSession, dir: String, glob: Option[String] = None): DataFrame =
+    getObjects(spark, dir, glob).drop("payload")
 
   /** findMatchingObjects: listing + compiled-glob filter on the key. */
   def findMatching(spark: SparkSession, dir: String, patterns: Seq[String]): DataFrame = {

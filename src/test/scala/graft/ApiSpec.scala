@@ -86,6 +86,18 @@ class ApiSpec extends SparkSpec {
     assert(!r2.getBoolean(1) && r2.getSeq[String](2) == Seq("month"))
   }
 
+  test("HivePartitionParser: a malformed value reads as invalid, not a failed job (ANSI)") {
+    val parser = new HivePartitionParser(Seq(
+      PartitionField("year", IntegerType), PartitionField("month", IntegerType)))
+    val r = pathsDf("year=abcd/month=07").select(
+      parser.parse(col("key")).as("p"),
+      parser.isValid(col("key")).as("ok"),
+      parser.validationErrors(col("key")).as("errs")).collect()(0)
+    assert(r.getStruct(0).isNullAt(0) && r.getStruct(0).getInt(1) == 7)
+    assert(!r.getBoolean(1))
+    assert(r.getSeq[String](2) == Seq("year: invalid or missing"))
+  }
+
   test("HivePartitionParser: createGlobPattern + matchesGlob") {
     val parser = new HivePartitionParser(Seq(
       PartitionField("year", IntegerType), PartitionField("month", IntegerType)))
@@ -158,6 +170,26 @@ class ApiSpec extends SparkSpec {
 
     val noDel = types(ChangeDetectionOptions(trackDeleted = false))
     assert(!noDel.contains("c"))
+  }
+
+  test("ChangeDetector: presence comes from the key, not from a null etag") {
+    import spark.implicits._
+    val cols = Seq("key", "size", "etag", "last_modified_us")
+    val prev = Seq[(String, Long, String, Long)](
+      ("same", 10L, null, 1000L),    // null etag on both sides
+      ("etag_lost", 20L, "e2", 2000L), // etag null only in cur
+      ("old", 30L, "e3", 3000L)
+    ).toDF(cols: _*)
+    val cur = Seq[(String, Long, String, Long)](
+      ("same", 10L, null, 1000L),
+      ("etag_lost", 20L, null, 2000L),
+      ("new", 40L, null, 4000L)
+    ).toDF(cols: _*)
+    val got = new ChangeDetector(ChangeDetectionOptions(compareMode = "quick"))
+      .detectChanges(prev, cur).select("key", "change_type").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("same" -> "unchanged", "etag_lost" -> "unchanged",
+      "old" -> "deleted", "new" -> "added"))
   }
 
   test("Graft facade: factory surface mirrors Rehiver statics (reference :1985)") {

@@ -67,23 +67,23 @@ class ScaleOpsSpec extends SparkSpec {
       p.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.relation.bucketSpec.isDefined => f }.nonEmpty
     // the load-bearing property: the CORPUS-sized side never crosses
-    // the network — the cell join has a bucketed-scan side with NO
-    // Exchange anywhere above it. The QUERY-probe side also reads the
-    // bucketed table (the query slice comes from the index) and
-    // legitimately shuffles its delta-sized rows, so the index side is
-    // identified as "bucketed scan AND exchange-free", not merely
-    // "contains a bucketed scan". (A partition-local Sort survives:
-    // Spark ≥3 ignores sortBy file order by default — SPARK-24528's
+    // the network. That side is identified positively: it is the join
+    // child carrying the index rows' `neighbor_id` (and no `query_id`).
+    // The QUERY-probe side also reads the bucketed table (the query
+    // slice comes from the index) and legitimately shuffles its
+    // delta-sized rows. (A partition-local Sort survives on the index
+    // side: Spark ≥3 ignores sortBy file order by default — SPARK-24528's
     // legacy conf re-enables it — and that sort is per-bucket CPU, not
     // a shuffle.)
-    val exchangeFreeIndexSide = smjs.exists { j =>
-      Seq(j.left, j.right).exists { side =>
-        hasBucketScan(side) &&
-          side.collect { case e: ShuffleExchangeExec => e }.isEmpty
-      }
+    val indexSides = smjs.flatMap(j => Seq(j.left, j.right)).filter { side =>
+      val names = side.output.map(_.name)
+      names.contains("neighbor_id") && !names.contains("query_id")
     }
-    assert(exchangeFreeIndexSide,
-      s"no exchange-free bucketed side under any SMJ:\n$exec")
+    assert(indexSides.size == 1, s"expected one SMJ side carrying the index rows:\n$exec")
+    val indexSide = indexSides.head
+    assert(hasBucketScan(indexSide), s"index side does not read the bucketed table:\n$indexSide")
+    assert(indexSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"index side shuffles:\n$indexSide")
     spark.sql("DROP TABLE IF EXISTS ann_idx")
   }
 
