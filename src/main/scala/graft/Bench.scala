@@ -35,47 +35,60 @@ object Bench {
     */
   val Runs = 5
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.build("graft-bench")
-    // guarded: a table-level failure (e.g. a testdata layout change, the
-    // round-7 rc=1) must degrade to per-query -1s, never kill the run
-    // before the first timed query
-    Seq[org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame](
+  /** Session warm-up before the first timed query: session, codegen and
+    * parquet-footer costs land here, not on whichever query runs first.
+    * Guarded: a table-level failure (e.g. a testdata layout change, the
+    * round-7 rc=1) must degrade to per-query -1s, never kill the run
+    * before the first timed query.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    Seq[SparkSession => org.apache.spark.sql.DataFrame](
       sources.Tables.lineitem(_, sfDir), sources.Tables.events(_, sfDir),
       sources.Tables.documents(_, sfDir))
       .foreach(f => try f(spark).count() catch {
         case t: Throwable => System.err.println(s"[bench] warmup failed: $t")
       })
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      // drop the PREVIOUS query's Materialize.stable blocks before this
-      // query starts: across 100+ queries the CacheManager otherwise
-      // accumulates every persisted plan in one JVM, and each later query
-      // pays plan-cache lookup + disk-cache pressure for all of them
-      // (round-4's 12-query "regression" on untouched code was exactly
-      // this accumulation, not any plan change)
-      spark.catalog.clearCache()
-      // two UNTIMED warmups per query: codegen compilation + the
-      // CacheManager materialization of any Materialize.stable state
-      // land in the first; profile-driven C2 recompilation of the
-      // HOF-heavy kernels lands in the second — so the timed runs
-      // measure steady-state throughput, the number a long-lived
-      // cluster actually sees
-      try { fn(spark, sfDir).count(); fn(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      // drain inherited allocation debt so the string-heavy queries
-      // don't pay the PREVIOUS query's GC on their own clock
-      System.gc()
-      val times = (1 to Runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $t"); Double.NaN }
-      }
+
+  /** The one timing loop, shared by the suite, the control keys and
+    * [[graft.tools.BenchProbe]]: the `Runs` timed `count()` seconds of
+    * `name`, sorted, or None when a timed run throws.
+    */
+  def time(spark: SparkSession, sfDir: String, name: String): Option[Seq[Double]] = {
+    val fn = SparkEntry.queries(name)
+    // drop the PREVIOUS query's Materialize.stable blocks before this
+    // query starts: across 100+ queries the CacheManager otherwise
+    // accumulates every persisted plan in one JVM, and each later query
+    // pays plan-cache lookup + disk-cache pressure for all of them
+    // (round-4's 12-query "regression" on untouched code was exactly
+    // this accumulation, not any plan change)
+    spark.catalog.clearCache()
+    // two UNTIMED warmups per query: codegen compilation + the
+    // CacheManager materialization of any Materialize.stable state
+    // land in the first; profile-driven C2 recompilation of the
+    // HOF-heavy kernels lands in the second — so the timed runs
+    // measure steady-state throughput, the number a long-lived
+    // cluster actually sees
+    try { fn(spark, sfDir).count(); fn(spark, sfDir).count() }
+    catch { case _: Throwable => () }
+    // drain inherited allocation debt so the string-heavy queries
+    // don't pay the PREVIOUS query's GC on their own clock
+    System.gc()
+    val times = (1 to Runs).map { _ =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case t: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $t"); Double.NaN }
+    }
+    if (times.exists(_.isNaN)) None else Some(times.sorted)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark: SparkSession = GraftSession.build("graft-bench")
+    warmup(spark, sfDir)
+    val results = SparkEntry.queries.map { case (name, _) =>
       // a failed query reports -1, never its time-to-fail
-      if (times.exists(_.isNaN)) name -> (-1.0, 0.0)
-      else {
-        val sorted = times.sorted
+      time(spark, sfDir, name).fold(name -> (-1.0, 0.0)) { sorted =>
         val med = sorted(Runs / 2)
         // trimmed spread: drop the single highest and lowest run
         name -> (med,
@@ -100,17 +113,7 @@ object Bench {
     // now reads "audit-window host burst" from the artifact alone.
     val controlKeys = Seq("q_rollup", "glob_match", "dedup_banding_sweep")
     val controls = controlKeys.map { name =>
-      val fn = SparkEntry.queries(name)
-      spark.catalog.clearCache()
-      try { fn(spark, sfDir).count(); fn(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      System.gc()
-      val times = (1 to Runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => Double.NaN }
-      }
-      name -> (if (times.exists(_.isNaN)) -1.0 else times.sorted.apply(Runs / 2))
+      name -> time(spark, sfDir, name).fold(-1.0)(_(Runs / 2))
     }
     val controlJson = controls
       .map { case (k, m) => "\"" + k + "\":" + (if (m < 0) "-1" else f"$m%.6f") }

@@ -28,13 +28,27 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint home for iterative state (Materialize.iteration);
-    // on a real cluster this is an HDFS/S3 path
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    checkpointDir(spark)
     graft.expressions.GraftFunctions.register(spark)
     spark
   }
+
+  /** Give the session a reliable-checkpoint home for ladder rung state
+    * (Materialize.iteration), unless the caller already set one — on a
+    * real cluster that is an HDFS/S3 path, and it is never touched here.
+    * Otherwise: a fresh local temp dir, deleted at JVM exit, since Spark
+    * leaves checkpoint files behind. The delete runs at shutdown-hook
+    * priority 30, after Spark's hooks (40, which stop the SparkContext)
+    * and before Hadoop closes its FileSystem cache (10) — the
+    * Materialize.snapshot reaper's slot.
+    */
+  def checkpointDir(spark: SparkSession): Unit =
+    if (spark.sparkContext.getCheckpointDir.isEmpty) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+      org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+        () => org.apache.spark.network.util.JavaUtils.deleteRecursively(dir), 30)
+      spark.sparkContext.setCheckpointDir(dir.toString)
+    }
 
   /** Expose every graft table (plus the synthesized manifest and its
     * change-detection snapshots) as temp views, so the whole engine is

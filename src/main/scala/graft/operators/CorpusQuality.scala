@@ -788,9 +788,9 @@ object CorpusQuality {
     * 100 TB shape: ONE corpus partial agg to the vocab (the
     * bpe_pair_step scale trick — a 10¹³-token corpus has ~10⁷ distinct
     * words); every rung after that is vocab-bounded (pair fanout ≤
-    * Σ|word|, argmax a TakeOrdered, apply a map-side replace), with
-    * per-rung frames checkpointed ([[Materialize.iteration]] — the
-    * ladder discipline that keeps the plan tree flat).
+    * Σ|word|, argmax a TakeOrdered, apply a map-side replace), climbed
+    * as a [[Ladder.counted]] ladder, which checkpoints every rung's vocab
+    * so the plan tree stays flat.
     */
   def bpeTrainConverge(s: SparkSession, dir: String): DataFrame =
     bpeTrainLadder(Tables.documents(s, dir)
@@ -809,8 +809,7 @@ object CorpusQuality {
       .select(expr("CASE WHEN word LIKE '%|%' THEN " +
         "raise_error(concat('bpe separator collision in word: ', word)) " +
         s"ELSE $bpeSymExpr END").as("sym"), col("cnt"))
-    var vocab = Materialize.iteration(vocab0)
-    val rungs = (1 to BpeTrainIters).map { r =>
+    Ladder.counted(vocab0, BpeTrainIters) { (r, vocab) =>
       val pairs = vocab
         .select(expr("filter(split(sym, '\\\\|'), x -> x <> '')").as("syms"), col("cnt"))
         .filter(expr("size(syms) >= 2"))
@@ -822,20 +821,20 @@ object CorpusQuality {
         .agg(sum("cnt").as("n_pairs"), count(lit(1)).as("n_types"))
       val sel = Materialize.stable(
         pairs.orderBy(col("n_pairs").desc, col("l"), col("r")).limit(1))
-      vocab = Materialize.iteration(
-        vocab.crossJoin(broadcast(sel.select(col("l"), col("r"))))
-          .select(expr(
-            "replace(sym, concat('|', l, '||', r, '|'), concat('|', l, r, '|'))")
-            .as("sym"), col("cnt")))
-      val mass = vocab.agg(
-        sum(expr("cnt * ((length(sym) - length(replace(sym, '|', ''))) div 2)"))
-          .as("vocab_mass"))
-      sel.select(lit(r.toLong).as("iter"),
-          concat(col("l"), col("r")).as("merged"),
-          col("n_pairs"), col("n_types"))
-        .crossJoin(broadcast(mass))
+      val merged = vocab.crossJoin(broadcast(sel.select(col("l"), col("r"))))
+        .select(expr(
+          "replace(sym, concat('|', l, '||', r, '|'), concat('|', l, r, '|'))")
+          .as("sym"), col("cnt"))
+      (merged, next => {
+        val mass = next.agg(
+          sum(expr("cnt * ((length(sym) - length(replace(sym, '|', ''))) div 2)"))
+            .as("vocab_mass"))
+        sel.select(lit(r.toLong).as("iter"),
+            concat(col("l"), col("r")).as("merged"),
+            col("n_pairs"), col("n_types"))
+          .crossJoin(broadcast(mass))
+      })
     }
-    rungs.reduce(_ unionByName _).orderBy("iter")
   }
 
   val bpeTrainConvergeSql: String = {

@@ -807,10 +807,11 @@ object Dedup {
     * partial-aggregated groupBy; the driver sees only the label-SUM
     * convergence scalar (labels are monotone non-increasing, so an
     * unchanged sum is a strict fixpoint witness) — labels never leave
-    * the executors. Label state goes through [[Materialize.iteration]]
-    * (lineage-TRUNCATING checkpoint): the hop self-join would otherwise
-    * double the logical plan every round, and at 100 TB the label table
-    * is corpus-cardinality rows that must not pin executor memory.
+    * the executors. The rounds climb a [[Ladder.fixpoint]], which
+    * checkpoints each round's labels (lineage-TRUNCATING): the hop
+    * self-join would otherwise double the logical plan every round, and
+    * at 100 TB the label table is corpus-cardinality rows that must not
+    * pin executor memory.
     */
   def connectedComponents(pairs0: DataFrame): DataFrame = {
     // snapshot: the pair frame is typically an expensive verified-LSH
@@ -821,19 +822,13 @@ object Dedup {
     val edges = Materialize.stable(
       pairs.union(pairs.select(col("doc_b"), col("doc_a"))).toDF("src", "dst"))
     // Init fuses round 1: label = min(self, min neighbor).
-    var labels = Materialize.iteration(edges.groupBy("src").agg(min("dst").as("mn"))
-      .select(col("src").as("node"), least(col("mn"), col("src")).as("label")))
-    val firstSum = labels.agg(sum("label")).head
-    // empty pair frame → empty component table (sum(label) is NULL on
-    // zero rows; an unguarded getLong turned a legitimately edgeless
-    // graph into a crash — found by the sf0.1 parity run, where the
-    // intra-domain subgraph of an even page count is provably empty)
-    if (firstSum.isNullAt(0))
-      return labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    var prevSum = firstSum.getLong(0)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < ComponentMaxRounds) {
+    val seed = edges.groupBy("src").agg(min("dst").as("mn"))
+      .select(col("src").as("node"), least(col("mn"), col("src")).as("label"))
+    // census: sum(label) is NULL on zero rows, so an empty pair frame is
+    // its own fixpoint — an empty component table, not a crash (found by
+    // the sf0.1 parity run, where the intra-domain subgraph of an even
+    // page count is provably empty)
+    val (labels, _) = Ladder.fixpoint("connectedComponents", seed, ComponentMaxRounds) { labels =>
       val prop = edges.join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), col("label"))
       // pointer doubling: node -> label(label(node)). Every label value
@@ -843,18 +838,8 @@ object Dedup {
         .join(labels.select(col("node").as("l"), col("label").as("ll")).as("b"),
           col("a.label") === col("b.l"))
         .select(col("a.node").as("node"), col("b.ll").as("label"))
-      val next = Materialize.iteration(
-        prop.union(hop).union(labels).groupBy("node").agg(min("label").as("label")))
-      val nextSum = next.agg(sum("label")).head.getLong(0)
-      labels.unpersist()
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents: no fixpoint after $ComponentMaxRounds rounds — " +
-        "component diameter exceeds 2^25 or the edge frame is non-deterministic")
+      prop.union(hop).union(labels).groupBy("node").agg(min("label").as("label"))
+    }(labels => Option(labels.agg(sum("label")).head.getAs[java.lang.Long](0)).map(_.longValue))
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 

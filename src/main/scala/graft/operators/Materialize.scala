@@ -8,28 +8,20 @@ import org.apache.spark.storage.StorageLevel
   * or three times — without one, Catalyst re-evaluates the whole
   * signature tree per join reference.
   *
-  * Two spellings, switched by `spark.graft.materialize`:
-  *
-  *  - `persist` (default): `persist(DISK_ONLY)`. Lineage is kept, so a
-  *    lost executor's blocks are recomputed from the parquet scan —
-  *    the 1000-executor-safe choice. DISK_ONLY because signature sets
-  *    at 100 TB scale are themselves TB-sized; they must not compete
-  *    with shuffle/exec memory.
-  *  - `localCheckpoint`: truncates lineage and pins blocks to
-  *    executors — fastest on local[N] where executor loss cannot
-  *    happen, fragile on a real cluster.
+  * [[stable]] is `persist(DISK_ONLY)`. Lineage is kept, so a lost
+  * executor's blocks are recomputed from the parquet scan — the
+  * 1000-executor-safe choice. DISK_ONLY because signature sets at
+  * 100 TB scale are themselves TB-sized; they must not compete with
+  * shuffle/exec memory.
   */
 object Materialize {
   def stable(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.materialize").getOrElse("persist") match {
-      case "localCheckpoint" => df.localCheckpoint()
-      // storage-level gate: composed operators (knn_recall, knn_degree,
-      // corpus_curate) pass already-persisted frames back through here;
-      // re-persisting is a CacheManager no-op but logs a warning per
-      // call, and hundreds of them drown real warnings in bench logs
-      case _ if df.storageLevel != StorageLevel.NONE => df
-      case _ => df.persist(StorageLevel.DISK_ONLY)
-    }
+    // storage-level gate: composed operators (knn_recall, knn_degree,
+    // corpus_curate) pass already-persisted frames back through here;
+    // re-persisting is a CacheManager no-op but logs a warning per
+    // call, and hundreds of them drown real warnings in bench logs
+    if (df.storageLevel != StorageLevel.NONE) df
+    else df.persist(StorageLevel.DISK_ONLY)
 
   /** Materialization for ITERATIVE state (label propagation, k-means
     * rounds): unlike [[stable]], this must TRUNCATE lineage, because a
@@ -48,9 +40,10 @@ object Materialize {
     * recomputing these cheap broadcast-join + partial-agg rungs twice.
     * No checkpoint dir ⇒ `localCheckpoint()` (single-process sessions
     * only); on a real cluster the dir is HDFS/S3 (GraftSession sets a
-    * local tmp dir).
+    * local tmp dir). Operators reach it only through [[Ladder]], which
+    * decides which rung state it checkpoints.
     */
-  def iteration(df: DataFrame): DataFrame =
+  private[graft] def iteration(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint()
     else df.checkpoint()
 

@@ -2535,42 +2535,28 @@ object Similarity {
       .select("query_id", "cell"))
     val gridU = Materialize.stable(pqMilliGrid(pqNormalize(union)))
     val gridO = gridU.filter(col("vec_id") < DriftBatchShift)
-    // the MULTI-REFERENCE code frames checkpoint (Materialize.iteration,
-    // the ladder discipline): each rung derives from the previous one,
+    // the MULTI-REFERENCE code frames checkpoint (the ladder's
+    // [[Ladder.retrain]] rule): each rung derives from the previous one,
     // and with lazy persists alone the logical tree re-expanded the
     // whole chain at every reference — measured 35-39s of driver-side
     // plan processing PER ACTION at sf0.1 before the checkpoints, ~3s
-    // after, identical results. codesF is referenced twice (rung-1
-    // refine + the frozen phaseRow); the book frames stay
+    // after, identical results. The frozen codes are referenced twice
+    // (rung-1 refine + the frozen phaseRow); the book frames stay
     // stable-persisted (1k rows; their trees are one refine over the
     // previous materialization boundary — already flat).
     val frozenB = Materialize.stable(pqRefineFromAssign(gridO,
       pqAssign(gridO, pqMilliSeeds(gridO))
         .select(col("vec_id"), col("m"), col("best.j").as("j"))))
-    val codesF = Materialize.iteration(pqAssign(gridU, frozenB))
     // warm-start retrain: [[PqTrainIters]] Lloyd rungs on the UNION
     // from the frozen book (the knn_pq_train_converge ladder as the
     // refresh move) — rung 1 alone recovers most of the SSE but leaves
     // the mode mass on FEW codewords; the later rungs are what SPLIT
     // it (Lloyd's variance-proportional allocation), which is where
     // the ADC ranking quality inside the new mode comes back
-    var wbook = frozenB
-    var wcodes = codesF
-    (1 to PqTrainIters).foreach { i =>
-      wbook = Materialize.stable(pqRefineFromAssign(gridU,
-        wcodes.select(col("vec_id"), col("m"), col("best.j").as("j"))))
-      // round 16: intermediate rung codes feed exactly ONE consumer —
-      // the next rung's refine, whose Materialize.stable boundary
-      // already stops re-evaluation — so only the FINAL rung's codes
-      // (referenced twice by phaseRow: SSE fold + ADC join) pay a
-      // lineage-truncating checkpoint; the intermediates stay lazy and
-      // are computed once inside the successor's materialization
-      wcodes =
-        if (i == PqTrainIters) Materialize.iteration(pqAssign(gridU, wbook))
-        else pqAssign(gridU, wbook)
-    }
-    val retrainedB = wbook
-    val codesR = wcodes
+    val (frozen, retrained) = Ladder.retrain(frozenB, PqTrainIters)(
+      codes => pqRefineFromAssign(gridU,
+        codes.select(col("vec_id"), col("m"), col("best.j").as("j"))),
+      pqAssign(gridU, _))
     def phaseRow(name: String, book: DataFrame, codesD: DataFrame): DataFrame = {
       val sse = codesD.agg(
         expr("CAST(SUM(CAST(best.dist_sq AS DECIMAL(38,0))) AS BIGINT)").as("sse"))
@@ -2619,8 +2605,8 @@ object Similarity {
           Grade.ppm("n_hit_adc", "n_exact").as("recall_adc_ppm"),
           col("n_hit"), Grade.ppm("n_hit", "n_exact").as("recall_ppm"))
     }
-    phaseRow("frozen", frozenB, codesF)
-      .unionByName(phaseRow("retrained", retrainedB, codesR))
+    phaseRow("frozen", frozen.book, frozen.assign)
+      .unionByName(phaseRow("retrained", retrained.book, retrained.assign))
       .orderBy("phase")
   }
 
@@ -3147,11 +3133,11 @@ object Similarity {
     * discipline) and every iteration is embed_kmeans_step's plan —
     * K×dims centroids BROADCAST onto the map-side grid, K-bounded
     * fanout, argmin via min(struct), ONE (cluster, pos) partial agg.
-    * Per-iteration state checkpoints ([[Materialize.iteration]]) so the
-    * logical plan stays FLAT across rungs instead of doubling per
-    * round. Movement/churn rows are cluster- and vector-cardinality
-    * joins + one-row folds (the q22 broadcast idiom — intended
-    * BroadcastNestedLoopJoin).
+    * The iterations climb a [[Ladder.lloyd]] ladder, which checkpoints
+    * every iteration's state so the logical plan stays FLAT across rungs
+    * instead of doubling per round. Movement/churn rows are cluster- and
+    * vector-cardinality joins + one-row folds (the q22 broadcast idiom —
+    * intended BroadcastNestedLoopJoin).
     */
   def embedKmeansConverge(s: SparkSession, dir: String): DataFrame = {
     val grid = Materialize.stable(Tables.embeddings(s, dir)
@@ -3171,27 +3157,22 @@ object Similarity {
         .groupBy("cluster", "pos")
         .agg(sum("milli").as("sum_milli"), count(lit(1)).as("n"))
         .select(col("cluster"), col("pos"), expr("sum_milli div n").as("c_milli"))
-    var cents = Materialize.iteration(grid.filter(col("vec_id") < KmeansK)
-      .select(col("vec_id").as("cluster"), col("pos"), col("milli").as("c_milli")))
-    var assign = Materialize.iteration(assignTo(cents))
-    val rows = (1 to KmeansConvIters).map { t =>
-      val nc = Materialize.iteration(recompute(assign))
-      val na = Materialize.iteration(assignTo(nc))
-      val moved = cents.select(col("cluster"), col("pos"), col("c_milli").as("prev"))
-        .join(nc, Seq("cluster", "pos"))
+    val seeds = grid.filter(col("vec_id") < KmeansK)
+      .select(col("vec_id").as("cluster"), col("pos"), col("milli").as("c_milli"))
+    Ladder.lloyd(seeds, KmeansConvIters)(recompute, assignTo) { (t, prev, next) =>
+      val moved = prev.book.select(col("cluster"), col("pos"), col("c_milli").as("prev"))
+        .join(next.book, Seq("cluster", "pos"))
         .agg(countDistinct("cluster").as("n_clusters"),
           max(abs(col("c_milli") - col("prev"))).as("moved_linf_milli"))
-      val churn = assign.select(col("vec_id"), col("cluster").as("prev"))
-        .join(na, Seq("vec_id"))
+      val churn = prev.assign.select(col("vec_id"), col("cluster").as("prev"))
+        .join(next.assign, Seq("vec_id"))
         .agg(count(lit(1)).as("n_vecs"),
           sum(when(col("cluster") =!= col("prev"), 1L).otherwise(0L)).as("n_churn"))
-      cents = nc; assign = na
       moved.crossJoin(broadcast(churn))
         .select(lit(t.toLong).as("iter"), col("n_clusters"), col("moved_linf_milli"),
           col("n_vecs"), col("n_churn"),
           expr("n_churn * 1000000 div n_vecs").as("churn_ppm"))
     }
-    rows.reduce(_ union _).orderBy("iter")
   }
 
   val embedKmeansConvergeSql: String = {
@@ -3429,40 +3410,36 @@ object Similarity {
     * Scale shape: [[knnPqTrain]]'s plan per rung — the M×K×SubDim
     * codebook (1k rows) BROADCASTS onto the map-side subvector grid,
     * K-bounded fanout, argmin via min(struct), ONE (m, j, pos) partial
-    * agg; the grid materializes once ([[Materialize.stable]]) and each
-    * rung's codebook/assignment checkpoints ([[Materialize.iteration]])
-    * so the plan stays flat. Movement/churn/SSE rows are codebook- and
-    * (vector × M)-cardinality folds to an M-row table.
+    * agg; the grid materializes once ([[Materialize.stable]]) and the
+    * rungs climb a [[Ladder.lloyd]] ladder, which checkpoints each rung's
+    * codebook and assignment so the plan stays flat. Movement/churn/SSE
+    * rows are codebook- and (vector × M)-cardinality folds to an M-row
+    * table.
     */
   def knnPqTrainConverge(s: SparkSession, dir: String): DataFrame = {
     val grid = Materialize.stable(pqMilliGrid(pqNormalize(withVec(s, dir))))
     def assignOf(book: DataFrame): DataFrame =
       pqAssign(grid, book).select(col("vec_id"), col("m"),
         col("best.j").as("j"), col("best.dist_sq").as("d"))
-    var book = Materialize.iteration(pqMilliSeeds(grid))
-    var assign = Materialize.iteration(assignOf(book))
-    val rows = (1 to PqTrainIters).map { t =>
-      val nb = Materialize.iteration(pqRefineFromAssign(grid, assign))
-      val na = Materialize.iteration(assignOf(nb))
-      val moved = book.select(col("m"), col("j"), col("pos"), col("c_milli").as("prev"))
-        .join(nb, Seq("m", "j", "pos"))
+    Ladder.lloyd(pqMilliSeeds(grid), PqTrainIters, "m")(
+        pqRefineFromAssign(grid, _), assignOf) { (t, prev, next) =>
+      val moved = prev.book.select(col("m"), col("j"), col("pos"), col("c_milli").as("prev"))
+        .join(next.book, Seq("m", "j", "pos"))
         .groupBy("m")
         .agg(countDistinct("j").as("n_codewords"),
           max(abs(col("c_milli") - col("prev"))).as("moved_linf_milli"))
-      val churnSse = assign.select(col("vec_id"), col("m"), col("j").as("pj"))
-        .join(na, Seq("vec_id", "m"))
+      val churnSse = prev.assign.select(col("vec_id"), col("m"), col("j").as("pj"))
+        .join(next.assign, Seq("vec_id", "m"))
         .groupBy("m")
         .agg(count(lit(1)).as("n_vecs"),
           sum(when(col("j") =!= col("pj"), 1L).otherwise(0L)).as("n_churn"),
           sum(expr("CAST(d AS DECIMAL(38,0))")).as("sse_d"))
-      book = nb; assign = na
       moved.join(churnSse, Seq("m"))
         .select(lit(t.toLong).as("iter"), col("m").cast("long").as("m"),
           col("n_codewords"), col("moved_linf_milli"), col("n_vecs"), col("n_churn"),
           expr("n_churn * 1000000 div n_vecs").as("churn_ppm"),
           expr("CAST(sse_d AS BIGINT)").as("sse"))
     }
-    rows.reduce(_ union _).orderBy("iter", "m")
   }
 
   val knnPqTrainConvergeSql: String = {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.PortableHash
 import graft.sources.Tables
 
@@ -884,9 +883,9 @@ object Sketches {
   }
 
   /** Compact ANY (event_type, cents, tie, lvl) item frame to a fixed
-    * point — no (group, level) buffer over capacity. Each rung
-    * checkpoints ([[Materialize.iteration]]) so the plan stays flat,
-    * and the loop stops on a COUNT fixpoint (compaction strictly
+    * point — no (group, level) buffer over capacity. The rungs climb a
+    * [[Ladder.fixpoint]], which checkpoints each one so the plan stays
+    * flat, and the loop stops on a COUNT fixpoint (compaction strictly
     * shrinks the state, so rungs ≈ log₂(n/K) and the convergence read
     * is one shuffle-free agg per rung). Library entry point: the
     * MERGE of two sketches is `kllState(a.union(b))` — union the
@@ -899,44 +898,31 @@ object Sketches {
     // rung that compacts anything strictly shrinks the item count (an
     // over-capacity level loses (cnt - cnt%2)/2 ≥ 16 items), and a rung
     // that shrinks nothing passes every row through untouched — so
-    // "count unchanged" ⟺ "no (group, level) buffer over capacity".
+    // "count unchanged" ⟺ "no (group, level) buffer over capacity", and
+    // the (count, max level) census repeats exactly at the fixpoint.
     // The census is therefore ONE shuffle-free agg over the
     // already-checkpointed rung output (the old groupBy census paid a
     // key shuffle per rung), at the price of one trailing no-op rung.
-    def census(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(max(col("lvl")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    //
     // round 16: the INITIAL state is the raw item frame — corpus-sized,
     // flat-planned (a scan projection or a union of two states), and
     // referenced twice (census + rung 1). A lineage-truncating
-    // checkpoint here wrote the whole corpus as rung-0 state;
-    // Materialize.stable's lazy persist serves both references from
-    // one computation without the full-state write. Rungs still
-    // checkpoint ([[Materialize.iteration]]) — they are the frames the
-    // self-referencing loop would otherwise re-expand. Rung 0's persist
-    // is released once rung 1's checkpoint holds the state, unless the
-    // caller handed in an already-persisted frame (that cache is theirs).
-    val ownsRung0 = items.storageLevel == StorageLevel.NONE
-    val rung0 = Materialize.stable(items)
-    var state = rung0
-    var (n, maxLvl) = census(state)
-    var rung = 0
-    var converged = false
-    while (!converged && rung < 64) {
-      state = Materialize.iteration(kllCompactRung(state))
-      if (rung == 0 && ownsRung0) rung0.unpersist()
-      val (n2, m2) = census(state)
-      converged = n2 == n
-      n = n2; maxLvl = m2
-      rung += 1
+    // checkpoint here wrote the whole corpus as rung-0 state, so the
+    // seed is a lazy persist instead (the ladder's `persistSeed`),
+    // serving both references from one computation; the rungs still
+    // checkpoint — they are the frames the self-referencing loop would
+    // otherwise re-expand.
+    val (state, census) = Ladder.fixpoint("kllState", items, 64, persistSeed = true)(
+      kllCompactRung) { df =>
+      val r = df.agg(count(lit(1)), coalesce(max(col("lvl")), lit(0L))).head()
+      Some((r.getLong(0), r.getLong(1)))
     }
+    val maxLvl = census.fold(0L)(_._2)
     // fail LOUD where the oracle-replayability precondition breaks
     // instead of silently returning a state DuckDB cannot reproduce:
     // past ~capacity·2^KllOracleLevels items per group the static
-    // oracle replay runs out of rungs (same discipline as
-    // connectedComponents' convergence require).
-    require(converged, s"kllState: no fixpoint within $rung rungs")
+    // oracle replay runs out of rungs (the ladder's convergence require
+    // is the same discipline).
     require(maxLvl <= KllOracleLevels,
       s"kllState: max level $maxLvl exceeds the $KllOracleLevels-rung oracle replay")
     state

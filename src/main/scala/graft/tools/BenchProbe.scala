@@ -8,7 +8,8 @@ import graft.GraftSession
   * the run), so a query's suite-time can drift with SUITE SIZE while
   * its own plan is unchanged. Running the same query here isolates
   * the query-intrinsic cost; `suite_time − solo_time` is the shared
-  * JVM's accumulation tax, not plan regression.
+  * JVM's accumulation tax, not plan regression. The probe runs Bench's
+  * own warm-up and timing loop ([[graft.Bench.time]]).
   *
   *   sbt "runMain graft.tools.BenchProbe glob_match q5_region"
   */
@@ -16,21 +17,12 @@ object BenchProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench-probe")
-    graft.sources.Tables.lineitem(spark, sfDir).count()
-    graft.sources.Tables.events(spark, sfDir).count()
-    graft.sources.Tables.documents(spark, sfDir).count()
+    graft.Bench.warmup(spark, sfDir)
     for (name <- args) {
-      val fn = graft.SparkEntry.queries(name)
-      fn(spark, sfDir).count() // warmup: codegen + cache materialization
-      System.gc()
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val times = graft.Bench.time(spark, sfDir, name).getOrElse(sys.error(s"$name failed"))
       // machine-parsed by the BENCH_SOLO collector (one fresh JVM per
       // query): name, median of 5, min, max
-      println(f"[solo] $name median=${times(2)}%.3f min=${times.head}%.3f max=${times.last}%.3f")
-      spark.catalog.clearCache()
+      println(f"[solo] $name median=${times(graft.Bench.Runs / 2)}%.3f min=${times.head}%.3f max=${times.last}%.3f")
     }
     spark.stop()
   }

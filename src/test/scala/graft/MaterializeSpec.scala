@@ -1,43 +1,12 @@
 package graft
 
-import graft.operators.{Dedup, Materialize}
+import graft.operators.Materialize
 
-/** `spark.graft.materialize` is load-bearing for the 1000-executor
-  * story (persist keeps lineage so lost blocks recompute;
-  * localCheckpoint truncates it for single-JVM speed) — so the switch
-  * must be exercised, not just documented: the SAME dedup query under
-  * both settings must produce bit-identical output.
+/** The materialization points: [[Materialize.stable]]'s lineage-keeping
+  * persist, the reliable-checkpoint iteration state the ladders climb on
+  * and the session checkpoint dir it lands in, and the snapshot reaper.
   */
 class MaterializeSpec extends SparkSpec {
-
-  private def withMaterialize[A](mode: Option[String])(body: => A): A = {
-    val key = "spark.graft.materialize"
-    val prev = spark.conf.getOption(key)
-    mode match {
-      case Some(m) => spark.conf.set(key, m)
-      case None => spark.conf.unset(key)
-    }
-    try body
-    finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("dedup_minhash output is identical under persist and localCheckpoint") {
-    val underPersist = withMaterialize(None) {
-      Dedup.dedupMinhash(spark, sfDir).collect().map(_.toString).toSeq
-    }
-    val underCheckpoint = withMaterialize(Some("localCheckpoint")) {
-      Dedup.dedupMinhash(spark, sfDir).collect().map(_.toString).toSeq
-    }
-    assert(underPersist.nonEmpty, "materialize probe query returned no rows")
-    assert(underPersist == underCheckpoint,
-      "persist vs localCheckpoint diverged — Materialize.stable must be semantically invisible")
-  }
 
   test("snapshot dirs are tracked and reaped by cleanupSnapshots") {
     import spark.implicits._
@@ -84,14 +53,8 @@ class MaterializeSpec extends SparkSpec {
   test("iteration() and snapshot() fall back to localCheckpoint without a checkpoint dir") {
     // the suite's shared context has a checkpoint dir for good, so the
     // fallback runs in a child JVM whose context never had one
-    import scala.jdk.CollectionConverters._
-    val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filter(o => o.startsWith("--add-opens") || o.startsWith("-D"))
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmOpts ++
-      Seq("-cp", System.getProperty("java.class.path"), NoCheckpointDirMain.getClass.getName.stripSuffix("$"))
-    val out = new StringBuilder
-    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n')))
-    assert(rc == 0 && out.toString.contains(NoCheckpointDirMain.Ok), out.toString)
+    val (rc, out) = MaterializeSpec.childJvm(NoCheckpointDirMain.getClass)
+    assert(rc == 0 && out.contains(NoCheckpointDirMain.Ok), out)
   }
 
   test("kllState releases its own rung-0 persist and keeps a caller's") {
@@ -119,24 +82,54 @@ class MaterializeSpec extends SparkSpec {
     assert(cm.isEmpty, "kllState left a cache entry beside the caller's")
   }
 
-  test("stable() honors the switch: localCheckpoint truncates lineage, persist keeps it") {
+  test("stable keeps lineage and hands a persisted frame back unchanged") {
     import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    spark.catalog.clearCache()
     val base = (1 to 10).toDF("x")
-    withMaterialize(Some("localCheckpoint")) {
-      val m = Materialize.stable(base)
-      // a localCheckpoint plan is a LogicalRDD scan — the parquet/local
-      // lineage is gone
-      assert(m.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
-        m.queryExecution.optimizedPlan.toString)
+    val m = Materialize.stable(base)
+    // persist keeps the original logical plan (InMemoryRelation wraps
+    // it at execution; the analyzed tree still shows the source) — a
+    // lost block recomputes from it
+    assert(!m.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
+      m.queryExecution.optimizedPlan.toString)
+    assert(m.storageLevel == StorageLevel.DISK_ONLY)
+    // the storage-level gate: an already-persisted frame comes back as
+    // is, its level untouched (other rows than `base`: the CacheManager
+    // matches plans by result, so the same rows would share its entry)
+    val mine = (11 to 20).toDF("y").persist(StorageLevel.MEMORY_ONLY)
+    assert(Materialize.stable(mine) eq mine)
+    assert(mine.storageLevel == StorageLevel.MEMORY_ONLY)
+    spark.catalog.clearCache()
+  }
+
+  test("a GraftSession checkpoint dir is deleted at JVM exit") {
+    // GraftSession.build creates the dir; only a JVM exit can show that
+    // it is removed, so the session lives in a child JVM that runs one
+    // iteration rung, prints the dir and exits
+    val (rc, out) = MaterializeSpec.childJvm(CheckpointDirExitMain.getClass)
+    val dir = out.linesIterator.collectFirst {
+      case l if l.startsWith(CheckpointDirExitMain.Dir) => l.stripPrefix(CheckpointDirExitMain.Dir)
     }
-    withMaterialize(None) {
-      val m = Materialize.stable(base)
-      // persist keeps the original logical plan (InMemoryRelation wraps
-      // it at execution; the analyzed tree still shows the source)
-      assert(!m.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
-        m.queryExecution.optimizedPlan.toString)
-      m.unpersist()
-    }
+    assert(rc == 0 && dir.isDefined, out)
+    assert(!new java.io.File(dir.get).exists, s"checkpoint dir ${dir.get} survived the JVM")
+  }
+}
+
+object MaterializeSpec {
+  /** Run `main`'s object in a child JVM on this JVM's classpath; its
+    * exit code and merged output.
+    */
+  def childJvm(main: Class[_]): (Int, String) = {
+    import scala.jdk.CollectionConverters._
+    val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(o => o.startsWith("--add-opens") || o.startsWith("-D"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmOpts ++
+      Seq("-cp", System.getProperty("java.class.path"), main.getName.stripSuffix("$"))
+    val out = new StringBuilder
+    val rc = scala.sys.process.Process(cmd)
+      .!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n')))
+    (rc, out.toString)
   }
 }
 
@@ -162,5 +155,24 @@ object NoCheckpointDirMain {
         m.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
     spark.stop()
     if (ok) println(Ok) else sys.exit(1)
+  }
+}
+
+/** Child-JVM half of MaterializeSpec's checkpoint-dir exit case: a
+  * GraftSession, one iteration checkpoint written into its dir, then a
+  * plain JVM exit — no `spark.stop()`, the shutdown hooks do the rest.
+  */
+object CheckpointDirExitMain {
+  val Dir = "checkpoint base dir: "
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.build("graft-ckpt-exit")
+    spark.sparkContext.setLogLevel("ERROR")
+    val rung = Materialize.iteration(spark.range(100).toDF("x"))
+    // the rung lands in a per-context subdir of the dir GraftSession made
+    val ckpt = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get).getPath)
+    val written = rung.count() == 100 && ckpt.list().exists(_.startsWith("rdd-"))
+    println(Dir + ckpt.getParentFile)
+    sys.exit(if (written) 0 else 1)
   }
 }
