@@ -17,9 +17,7 @@ import org.apache.spark.storage.StorageLevel
   *    hits its limit unconverged;
   *  - the per-rung report frames, unioned in rung order.
   *
-  * A caller passes only its step, its census and its report. Each rung
-  * runs the same Spark jobs in the same order as the hand-written loops
-  * it replaces, so plans and job counts are those loops'.
+  * A caller passes only its step, its census and its report.
   */
 object Ladder {
 
