@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash._
+import graft.operators.{Corpus, CorpusQuality, Similarity, TextAnalysis}
+import EventOps.{in, out}
 
 /** User-facing corpus operators over ARBITRARY DataFrames — the same
   * column math the oracle-checked queries run on the test corpus,
@@ -59,22 +61,11 @@ object CorpusOps {
   def spanDedupStats(docs: DataFrame, window: Int = graft.operators.Dedup.SpanWords): DataFrame =
     graft.operators.Dedup.spanStats(prepared(docs).select(col("doc_id"), col("text")), window)
 
-  /** quality features + composite score (same formula as text_quality /
-    * corpus_curate).
+  /** quality features + composite score: text_quality's columns
+    * ([[graft.operators.TextAnalysis.qualityFor]], also corpus_curate's).
     */
-  def qualityScore(docs: DataFrame): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
-    docs
-      .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
-      .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-      .withColumn("distinct_ratio",
-        expr(q6("CAST(size(array_distinct(words)) AS DOUBLE) / n_words")))
-      .withColumn("stop_ratio",
-        expr(q6("CAST(size(filter(words, w -> array_contains(array('the', 'a', 'and', 'of', 'to'), w))) AS DOUBLE) / n_words")))
-      .withColumn("score",
-        expr(q6("CAST(0.4 AS DOUBLE) * least(CAST(1 AS DOUBLE), CAST(n_words AS DOUBLE) / CAST(200 AS DOUBLE)) + CAST(0.3 AS DOUBLE) * distinct_ratio + CAST(0.3 AS DOUBLE) * stop_ratio")))
-      .drop("words")
-  }
+  def qualityScore(docs: DataFrame): DataFrame =
+    TextAnalysis.qualityFor(docs).drop("words")
 
   /** The end-to-end curation chain over ANY (doc_id, text) frame as ONE
     * composed Spark job: signature pass → exact-dup rep → near-dup
@@ -98,7 +89,6 @@ object CorpusOps {
     */
   def curationPipeline(docs0: DataFrame, evalDocs0: DataFrame,
       budgetTokens: Long = 8192L, shardDocs: Long = 125L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = prepared(docs0)
     val D = graft.operators.Dedup
     val sigs = graft.operators.Materialize.stable(docs.select(
@@ -106,7 +96,7 @@ object CorpusOps {
       fingerprint().as("fp"),
       expr(sparkMinhash(sparkShingleHashes("text"))).as("mh"),
       expr(sparkShingleHashes("text")).as("sh"),
-      expr("CAST(size(filter(split(text, ' '), w -> w <> '')) AS BIGINT)").as("n_tokens")))
+      expr(Corpus.nTokensOf("text")).as("n_tokens")))
     // exact dups: representative (min doc_id) per fingerprint
     val fpRep = sigs.groupBy("fp").agg(min("doc_id").as("fp_rep"))
     // near dups: LSH pairs from the SAME signatures → components → keep
@@ -132,9 +122,7 @@ object CorpusOps {
     // assemble: doc-sized joins back on doc_id, then scan-side split +
     // the shard-keyed packing window (the chain's only corpus shuffle)
     val b = pmod(pmod(pmod(col("doc_id"), lit(1000003L)) * lit(2654435761L), lit(1000003L)), lit(100L))
-    val w = Window.partitionBy("shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    qualityScore(docs)
+    val assembled = qualityScore(docs)
       .join(sigs.select("doc_id", "fp", "n_tokens"), Seq("doc_id"))
       // fpRep is distinct-fingerprint-sized (≈ corpus at low dup rates):
       // a plain equi-join — AQE broadcasts it at test scale, shuffles the
@@ -148,10 +136,7 @@ object CorpusOps {
       .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
       .withColumn("split",
         when(b < 80, "train").when(b < 90, "val").otherwise("test"))
-      .withColumn("shard", expr(s"doc_id div $shardDocs"))
-      .withColumn("__cum", sum(col("n_tokens")).over(w))
-      .withColumn("bin", expr(s"(__cum - n_tokens) div $budgetTokens"))
-      .drop("__cum", "text")
+    Corpus.packBinsFor(assembled, budgetTokens, shardDocs).drop("text")
   }
 
   /** Unified MULTIMODAL curation: one keep/drop verdict per doc with
@@ -243,16 +228,14 @@ object CorpusOps {
   }
 
   /** fixed-size overlapping context-window chunks; one output row per
-    * chunk with an arithmetic chunk id (no ordering shuffle).
+    * chunk with an arithmetic chunk id (no ordering shuffle) — text_chunk's
+    * body ([[graft.operators.Corpus.textChunkFor]]) with the chunk's
+    * words joined back into `chunk_text`.
     */
   def chunk(docs: DataFrame, words: Int = 64, stride: Int = 48): DataFrame =
-    docs
-      .withColumn("__words", expr("filter(split(text, ' '), w -> w <> '')"))
-      .withColumn("start", explode(expr(s"sequence(1, greatest(1, size(__words)), $stride)")))
-      .withColumn("chunk_words", expr(s"slice(__words, start, $words)"))
-      .withColumn("chunk_idx", expr(s"CAST((start - 1) div $stride AS BIGINT)"))
-      .withColumn("chunk_text", expr("array_join(chunk_words, ' ')"))
-      .drop("__words", "chunk_words")
+    Corpus.textChunkFor(docs, words, stride)
+      .withColumn("chunk_text", expr("array_join(chunk, ' ')"))
+      .drop("words", "chunk")
 
   /** Deterministic stratified sampler over ANY frame: keep a row iff
     * `(hash(idCol) * knuth) mod 1e6 < ratesPpm(stratum)`. The decision
@@ -281,108 +264,61 @@ object CorpusOps {
     * stays under `budgetTokens`. Sharded (`idCol div shardDocs`) so the
     * running-sum window never funnels the corpus through one partition —
     * shards pack independently, matching multi-writer output layout.
-    * Output = input + `n_tokens`, `shard`, `bin`.
+    * Output = input + `n_tokens`, `shard`, `bin` (pack_bins' body,
+    * [[graft.operators.Corpus.packBinsFor]]).
     */
   def packBins(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       budgetTokens: Long = 8192L,
-      shardDocs: Long = 125L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("shard").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs
-      .withColumn("n_tokens",
-        expr(s"CAST(size(filter(split($textCol, ' '), w -> w <> '')) AS BIGINT)"))
-      .withColumn("shard", expr(s"$idCol div $shardDocs"))
-      .withColumn("__cum", sum(col("n_tokens")).over(w))
-      .withColumn("bin", expr(s"(__cum - n_tokens) div $budgetTokens"))
-      .drop("__cum")
-  }
+      shardDocs: Long = 125L): DataFrame =
+    out(Corpus.packBinsFor(
+      out(docs, idCol -> "doc_id").withColumn("n_tokens", expr(Corpus.nTokensOf(textCol))),
+      budgetTokens, shardDocs), "doc_id" -> idCol)
 
   /** Domain-mixture plan over ANY frame: given per-source target shares
     * (ppm), the largest corpus M every share can be served from
     * availability (M = min over sources of n_avail·1e6/target) and the
-    * per-source take counts. Integer arithmetic; window math runs over
-    * the source-cardinality frame only — the corpus is never
-    * reshuffled. Execute the plan with [[sampleStratified]] using
-    * rate = n_take·1e6/n_avail per source.
+    * per-source take counts — corpus_mix's plan
+    * ([[graft.operators.Corpus.corpusMixFor]]). Execute it with
+    * [[sampleStratified]] using rate = n_take·1e6/n_avail per source.
     */
   def mixPlan(df: DataFrame, sourceCol: String, targetsPpm: Map[String, Long]): DataFrame = {
     require(targetsPpm.nonEmpty && targetsPpm.values.forall(p => p > 0 && p <= 1000000L),
       "target shares are parts-per-million: 1..1000000")
-    val target = targetsPpm.toSeq.sortBy(_._1).foldLeft(when(lit(false), lit(0L))) {
-      case (acc, (src, ppm)) => acc.when(col(sourceCol) === src, lit(ppm))
-    }.otherwise(lit(0L))
-    // the frame-wide min re-attaches via crossJoin(broadcast(one-row
-    // agg)) — same idiom as the corpus_mix contract query, so no
-    // unpartitioned window appears anywhere in the api surface either
-    val avail = graft.operators.Materialize.stable(
-      df.groupBy(sourceCol).agg(count(lit(1)).as("n_avail"))
-        .withColumn("target_ppm", target)
-        .filter(col("target_ppm") > 0))
-    avail.crossJoin(broadcast(avail.agg(
-        min(expr("n_avail * 1000000 div target_ppm")).as("m"))))
-      .withColumn("n_take", expr("m * target_ppm div 1000000"))
-      .select(col(sourceCol), col("target_ppm"), col("n_avail"), col("n_take"))
+    Corpus.corpusMixFor(in(df, sourceCol -> "source"), targetsPpm.toSeq.sortBy(_._1))
+      .select(col("source").as(sourceCol), col("target_ppm"), col("n_avail"), col("n_take"))
   }
 
   /** Gopher-style repetition metrics over ANY frame: word-bigram count,
     * most-common-bigram share, duplicate-bigram fraction, and the
     * resulting `repetitive` flag at the given thresholds. Output = input
-    * plus the four columns; docs with < 2 words get zeroed metrics.
-    * One output-bound (id, bigram) partial aggregate — nothing
-    * corpus-quadratic.
+    * plus the four columns; docs with < 2 words get zeroed metrics
+    * (text_repetition's body, [[graft.operators.CorpusQuality.textRepetitionFor]]).
     */
   def repetitionMetrics(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       topShareMax: Double = 0.2,
-      dupFracMax: Double = 0.5): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
-    val grouped = docs
-      .withColumn("__w", expr(s"filter(split($textCol, ' '), w -> w <> '')"))
-      .select(col(idCol),
-        explode(expr(graft.operators.CorpusQuality.sparkWordBigramsOf("__w"))).as("bg"))
-      .groupBy(idCol, "bg").agg(count(lit(1)).as("c"))
-    val per = grouped.groupBy(idCol).agg(
-      sum("c").as("__n"), max("c").as("__top"),
-      sum(when(col("c") > 1, col("c")).otherwise(0L)).as("__dup"))
-    docs.join(per, Seq(idCol), "left")
-      .withColumn("n_bigrams", coalesce(col("__n"), lit(0L)))
-      .withColumn("top_share", expr(
-        s"CASE WHEN __n IS NULL OR __n = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(__top AS DOUBLE) / CAST(__n AS DOUBLE)")} END"))
-      .withColumn("dup_frac", expr(
-        s"CASE WHEN __n IS NULL OR __n = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(__dup AS DOUBLE) / CAST(__n AS DOUBLE)")} END"))
-      .withColumn("repetitive",
-        col("top_share") > topShareMax || col("dup_frac") > dupFracMax)
-      .drop("__n", "__top", "__dup")
-  }
+      dupFracMax: Double = 0.5): DataFrame =
+    out(CorpusQuality.textRepetitionFor(out(docs, idCol -> "doc_id", textCol -> "text"),
+      topShareMax, dupFracMax), "doc_id" -> idCol, "text" -> textCol)
 
   /** Corpus character-bigram likelihood score over ANY frame — the
     * CCNet-style LM quality gate with corpus statistics standing in for
     * the KenLM. Output = input plus `n_bigrams` and `lm_score` (mean
     * corpus frequency of the doc's char bigrams; LOW = atypical
-    * characters for this corpus). The frequency table is vocabulary-
-    * bounded (≤ charset²) and broadcasts.
+    * characters for this corpus) from text_ngram_lm's body
+    * ([[graft.operators.CorpusQuality.lmScoresFor]]); docs without a
+    * char bigram read 0 for both.
     */
-  def lmScore(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
-    val grouped = docs.select(col(idCol),
-        explode(expr(graft.operators.CorpusQuality.sparkCharBigramsOf(textCol))).as("bg"))
-      .groupBy(idCol, "bg").agg(count(lit(1)).as("c"))
-    val freq = grouped.groupBy("bg").agg(sum("c").as("freq"))
-    val per = grouped.join(broadcast(freq), Seq("bg"))
-      .groupBy(idCol)
-      .agg(sum("c").as("__n"), sum(expr("c * freq")).as("__fs"))
-    docs.join(per, Seq(idCol), "left")
-      .withColumn("n_bigrams", coalesce(col("__n"), lit(0L)))
-      .withColumn("lm_score", expr(
-        s"CASE WHEN __n IS NULL OR __n = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(__fs AS DOUBLE) / CAST(__n AS DOUBLE)")} END"))
-      .drop("__n", "__fs")
-  }
+  def lmScore(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    docs.join(out(CorpusQuality.lmScoresFor(in(docs, idCol -> "doc_id", textCol -> "text")),
+        "doc_id" -> idCol), Seq(idCol), "left")
+      .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
+      .withColumn("lm_score", coalesce(col("lm_score"), lit(0.0)))
 
   /** SemDeDup-style semantic keep-list over ANY frame carrying an
     * embedding column: IVF-cell-bounded cosine pairs at `tau`,
@@ -417,21 +353,11 @@ object CorpusOps {
   }
 
   /** PII scrub over ANY frame: redact emails and IPv4s in `textCol`
-    * in place, reporting per-row match counts. Pure map-side regex
-    * column math — the shape of every production PII pass.
+    * in place, reporting per-row match counts (text_pii_scrub's body,
+    * [[graft.operators.TextAnalysis.piiScrubFor]]).
     */
-  def piiScrub(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    import graft.operators.TextAnalysis.{EmailRe, Ipv4Re}
-    def sqlRe(re: String) = re.replace("\\", "\\\\")
-    val (em, ip) = (sqlRe(EmailRe), sqlRe(Ipv4Re))
-    docs
-      .withColumn("n_emails",
-        expr(s"CAST(size(regexp_extract_all($textCol, '$em', 0)) AS BIGINT)"))
-      .withColumn("n_ips",
-        expr(s"CAST(size(regexp_extract_all($textCol, '$ip', 0)) AS BIGINT)"))
-      .withColumn(textCol,
-        expr(s"regexp_replace(regexp_replace($textCol, '$em', '<EMAIL>'), '$ip', '<IP>')"))
-  }
+  def piiScrub(docs: DataFrame, textCol: String = "text"): DataFrame =
+    TextAnalysis.piiScrubFor(docs, textCol)
 
   /** URL canonicalization over ANY frame with a `urlCol` column:
     * lowercase, strip scheme / leading www. / explicit default port /
@@ -486,105 +412,39 @@ object CorpusOps {
 
   /** Per-group Zipf-law fit over whitespace tokens: least-squares
     * slope and r² of ln(freq) vs ln(rank) over each group's top `topK`
-    * tokens — the generic twin of the text_zipf_slope contract query
-    * (natural text ≈ −1.0; templated sources run shallower). The
-    * rank≤K filter plans as a top-K group limit; ln products
-    * floor-quantize to ppm BIGINTs so the moment sums are order-free.
+    * tokens (text_zipf_slope's body,
+    * [[graft.operators.CorpusQuality.textZipfSlopeFor]]; natural text ≈
+    * −1.0, templated sources run shallower).
     */
   def zipfSlope(docs: DataFrame, groupCol: String = "source",
-      textCol: String = "text", topK: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(groupCol).orderBy(col("__n").desc, col("__token"))
-    val num = "CAST(n_terms AS DOUBLE) * CAST(__sxy AS DOUBLE) - CAST(__sx AS DOUBLE) * CAST(__sy AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-    val den = "CAST(n_terms AS DOUBLE) * CAST(__sxx AS DOUBLE) - CAST(__sx AS DOUBLE) * CAST(__sx AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-    val deny = "CAST(n_terms AS DOUBLE) * CAST(__syy AS DOUBLE) - CAST(__sy AS DOUBLE) * CAST(__sy AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-    docs
-      .select(col(groupCol),
-        explode(expr(s"filter(split($textCol, ' '), w -> w <> '')")).as("__token"))
-      .groupBy(col(groupCol), col("__token")).agg(count(lit(1)).as("__n"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= topK)
-      .withColumn("__lx", expr("ln(CAST(__rank AS DOUBLE))"))
-      .withColumn("__ly", expr("ln(CAST(__n AS DOUBLE))"))
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_terms"),
-        sum(expr("CAST(floor(__lx * 1000000) AS BIGINT)")).as("__sx"),
-        sum(expr("CAST(floor(__ly * 1000000) AS BIGINT)")).as("__sy"),
-        sum(expr("CAST(floor(__lx * __ly * 1000000) AS BIGINT)")).as("__sxy"),
-        sum(expr("CAST(floor(__lx * __lx * 1000000) AS BIGINT)")).as("__sxx"),
-        sum(expr("CAST(floor(__ly * __ly * 1000000) AS BIGINT)")).as("__syy"))
-      .select(col(groupCol), col("n_terms"),
-        expr(s"CASE WHEN $den > 0 THEN CAST(floor(($num) / ($den) * 1000) AS BIGINT) ELSE NULL END").as("slope_milli"),
-        expr(s"CASE WHEN $den > 0 AND $deny > 0 THEN CAST(floor(($num) * ($num) / (($den) * ($deny)) * 1000) AS BIGINT) ELSE NULL END").as("r2_milli"))
-  }
+      textCol: String = "text", topK: Int = 64): DataFrame =
+    out(CorpusQuality.textZipfSlopeFor(
+      in(docs, groupCol -> "source", textCol -> "text"), topK), "source" -> groupCol)
 
   /** Per-dimension embedding health audit: mean/sd/range/near-zero
-    * count for every coordinate — the generic twin of embed_dim_stats.
-    * Map-side posexplode, ONE partial agg onto dims-bounded moment
-    * rows; run before any IVF/PQ build (a dead dimension silently
-    * halves index recall).
+    * count for every coordinate (embed_dim_stats' body,
+    * [[graft.operators.Similarity.embedDimStatsFor]]); run before any
+    * IVF/PQ build (a dead dimension silently halves index recall).
     */
   def embeddingDimStats(df: DataFrame, vecCol: String = "embedding"): DataFrame =
-    df.select(posexplode(expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))"))
-        .as(Seq("pos", "__x")))
-      .withColumn("__milli", expr("CAST(floor(__x * 1000) AS BIGINT)"))
-      .groupBy(col("pos").cast("long").as("pos"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum("__milli").as("__s1"), sum(expr("__milli * __milli")).as("__s2"),
-        min("__milli").as("min_milli"), max("__milli").as("max_milli"),
-        sum(when(col("__milli") === 0L, 1L).otherwise(0L)).as("n_nearzero"))
-      .select(col("pos"), col("n_vecs"),
-        expr("__s1 * 1000 div n_vecs").as("mean_ppm"),
-        expr("""CAST(floor(sqrt(greatest(CAST(n_vecs AS DOUBLE) * CAST(__s2 AS DOUBLE)
-          | - CAST(__s1 AS DOUBLE) * CAST(__s1 AS DOUBLE), 0.0))
-          | / CAST(n_vecs AS DOUBLE) * 1000) AS BIGINT)""".stripMargin.replaceAll("\\s+", " ")).as("sd_ppm"),
-        col("min_milli"), col("max_milli"), col("n_nearzero"))
+    Similarity.embedDimStatsFor(in(df, vecCol -> "embedding"))
 
   /** Top adjacent character pairs by corpus frequency — one BPE
-    * merge-selection scan, the generic twin of bpe_pair_step. Counts
-    * over the (word, count) vocab, never the raw corpus: the classic
-    * BPE-trainer scale trick.
+    * merge-selection scan over the (word, count) vocab
+    * (bpe_pair_step's body, [[graft.operators.CorpusQuality.bpePairStepFor]]).
     */
   def bpePairCounts(docs: DataFrame, textCol: String = "text",
       topK: Int = 20): DataFrame =
-    docs
-      .select(explode(expr(s"filter(split($textCol, ' '), w -> w <> '')")).as("__word"))
-      .groupBy("__word").agg(count(lit(1)).as("__cnt"))
-      .filter(length(col("__word")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(__word) - 1), i -> substring(__word, i, 2))"))
-        .as("pair"), col("__cnt"))
-      .groupBy("pair")
-      .agg(sum("__cnt").as("n_pairs"), count(lit(1)).as("n_types"))
-      .orderBy(col("n_pairs").desc, col("pair")).limit(topK)
+    CorpusQuality.bpePairStepFor(in(docs, textCol -> "text"), topK)
 
-  /** Per-group unigram KL(group ‖ corpus) in ppb — the generic twin of
-    * source_kl_drift, pointable at any (group, text) frame. Each
-    * token's term floor-quantizes to a ppb BIGINT before summation, so
-    * shuffle order can never move a bit.
+  /** Per-group unigram KL(group ‖ corpus) in ppb, pointable at any
+    * (group, text) frame (source_kl_drift's body,
+    * [[graft.operators.CorpusQuality.sourceKlDriftFor]]).
     */
   def sourceDrift(docs: DataFrame, groupCol: String = "source",
-      textCol: String = "text"): DataFrame = {
-    val grid = graft.operators.Materialize.stable(docs
-      .select(col(groupCol),
-        explode(expr(s"filter(split($textCol, ' '), w -> w <> '')")).as("__token"))
-      .groupBy(col(groupCol), col("__token")).agg(count(lit(1)).as("__nst")))
-    val byGroup = grid.groupBy(groupCol)
-      .agg(sum("__nst").as("__ns"), count(lit(1)).as("n_vocab"))
-    val byToken = grid.groupBy("__token").agg(sum("__nst").as("__nt"))
-    val total = byGroup.agg(sum("__ns").as("__ntot"))
-    grid.join(byToken, Seq("__token"))
-      .join(broadcast(byGroup), Seq(groupCol))
-      .join(broadcast(total))
-      .withColumn("__term", expr(
-        """CAST(floor(CAST(__nst AS DOUBLE) / CAST(__ns AS DOUBLE)
-          |  * log2(CAST(__nst AS DOUBLE) * CAST(__ntot AS DOUBLE)
-          |         / (CAST(__ns AS DOUBLE) * CAST(__nt AS DOUBLE)))
-          |  * 1000000000) AS BIGINT)""".stripMargin.replaceAll("\\s+", " ")))
-      .groupBy(groupCol)
-      .agg(max("__ns").as("n_tokens"), max("n_vocab").as("n_vocab"),
-        sum("__term").as("kl_ppb"))
-  }
+      textCol: String = "text"): DataFrame =
+    out(CorpusQuality.sourceKlDriftFor(in(docs, groupCol -> "source", textCol -> "text")),
+      "source" -> groupCol)
 
   /** One damped PageRank power-iteration over an arbitrary edge frame:
     * `edges` (srcCol, dstCol) + current `ranks` (idCol, rank ppb) →
@@ -611,28 +471,14 @@ object CorpusOps {
       .select(col(idCol), col(rankCol), col("inflow_ppb"))
   }
 
-  /** One PCA power-iteration step over an embedding frame — the generic
-    * twin of embed_pca_power: w = Xᵀ(Xv₀) from the all-ones seed on the
-    * milli-quantized grid, components L∞-normalized to integer ppm.
+  /** One PCA power-iteration step over an embedding frame:
+    * w = Xᵀ(Xv₀) from the all-ones seed on the milli-quantized grid,
+    * components L∞-normalized to integer ppm (embed_pca_power's body,
+    * [[graft.operators.Similarity.embedPcaPowerFor]]).
     */
   def pcaPowerStep(df: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val grid = graft.operators.Materialize.stable(df
-      .select(col(idCol).as("__id"),
-        posexplode(expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))")).as(Seq("pos", "__x")))
-      .withColumn("__milli", expr("CAST(floor(__x * 1000) AS BIGINT)"))
-      .select("__id", "pos", "__milli"))
-    val dots = grid.groupBy("__id").agg(sum("__milli").as("__dot"))
-    val w = grid.join(dots, Seq("__id"))
-      .groupBy(col("pos").cast("long").as("pos"))
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(expr("CAST(__milli AS DECIMAL(38,0)) * __dot")).as("__w"))
-    val wmax = w.agg(max(expr("abs(__w)")).as("__wmax"))
-    w.join(broadcast(wmax))
-      .withColumn("w_unit", expr("CAST(__w div 1000000 AS BIGINT)"))
-      .withColumn("comp_ppm", expr("CAST(__w * 1000000 div __wmax AS BIGINT)"))
-      .select("pos", "n_vecs", "w_unit", "comp_ppm")
-  }
+      vecCol: String = "embedding"): DataFrame =
+    Similarity.embedPcaPowerFor(in(df, idCol -> "vec_id", vecCol -> "embedding"))
 
   /** Directed-triangle (feed-forward-loop a→b→c with a→c) counts per
     * source vertex over an arbitrary edge frame — the generic twin of

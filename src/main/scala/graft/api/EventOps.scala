@@ -1,218 +1,141 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.{AnalyticsMore, AnalyticsPlus, EventsMore}
 
 /** Event-series analytics as library entry points over ANY frame —
   * the parameterized twins of the fixed-table contract queries in
-  * [[graft.operators.EventsMore]] / [[graft.operators.AnalyticsPlus]].
-  * Callers bring their own column names; every op keeps the contract
-  * queries' scale shape (map-side integer math, partial aggregation,
-  * bounded outputs) and their determinism discipline.
+  * [[graft.operators.EventsMore]] / [[graft.operators.AnalyticsMore]] /
+  * [[graft.operators.AnalyticsPlus]]. Each twin renames the caller's
+  * columns to the contract key's, runs the key's own body (the
+  * `…For(frame, params)` beside the key) and renames the outputs back,
+  * so the api computes exactly what the oracle checks.
   */
 object EventOps {
 
+  /** `df` narrowed to the body's input columns: (caller's column →
+    * body's name). With [[out]], shared by the [[CorpusOps]] twins.
+    */
+  private[api] def in(df: DataFrame, cols: (String, String)*): DataFrame =
+    df.select(cols.map { case (c, name) => col(c).as(name) }: _*)
+
+  /** `df` with (name → new name) renamed, every other column kept in place. */
+  private[api] def out(df: DataFrame, names: (String, String)*): DataFrame = {
+    val m = names.toMap
+    df.select(df.columns.map(c => col(c).as(m.getOrElse(c, c))): _*)
+  }
+
   /** Exponentially decayed score per key with a one-`unitUs` half-life
     * as of `anchorUs`: exact powers-of-two weights on exact cents,
-    * two-level integer aggregation (cents pre-aggregate per (key, age)
-    * before the weight multiply — see EventsMore.eventsDecay for the
-    * overflow analysis), one IEEE division at output.
+    * two-level integer aggregation, one IEEE division at output
+    * (events_decay's body, [[EventsMore.eventsDecayFor]]).
     */
   def decayScore(df: DataFrame, keyCol: String, tsUsCol: String, valueCol: String,
-      anchorUs: Long, unitUs: Long = 86400L * 1000000, maxAge: Int = 30): DataFrame = {
-    require(maxAge >= 0 && maxAge <= 56, s"maxAge $maxAge: 2^maxAge·100 must fit a BIGINT")
-    df.withColumn("age",
-        least(expr(s"($anchorUs - $tsUsCol) div $unitUs"), lit(maxAge.toLong)))
-      .withColumn("cents", expr(s"CAST(CAST($valueCol AS DECIMAL(12,2)) * 100 AS BIGINT)"))
-      .groupBy(col(keyCol), col("age"))
-      .agg(sum(col("cents")).as("cents_age"), count(lit(1)).as("n"))
-      .withColumn("wunits",
-        expr(s"cents_age * shiftleft(CAST(1 AS BIGINT), CAST($maxAge - age AS INT))"))
-      .groupBy(col(keyCol))
-      .agg(sum(col("wunits")).as("units"), sum(col("n")).as("n_events"))
-      .withColumn("decayed_score",
-        expr(s"CAST(units AS DOUBLE) / CAST(${(1L << maxAge) * 100L} AS DOUBLE)"))
-      .select(col(keyCol), col("decayed_score"), col("n_events"))
-  }
+      anchorUs: Long, unitUs: Long = 86400L * 1000000, maxAge: Int = 30): DataFrame =
+    out(EventsMore.eventsDecayFor(
+      in(df, keyCol -> "user_id", tsUsCol -> "ts_us", valueCol -> "value"),
+      anchorUs, unitUs, maxAge), "user_id" -> keyCol)
 
   /** Dense per-group time series: every bucket in [min, max] of each
-    * group's own range appears, silent buckets as zero. Axis fanout is
-    * bounded by the time range, never the data volume.
+    * group's own range appears, silent buckets as zero
+    * (events_gap_fill's body, [[EventsMore.eventsGapFillFor]]).
     */
   def gapFill(df: DataFrame, groupCol: String, tsUsCol: String,
-      bucketUs: Long = 3600000000L): DataFrame = {
-    val counts = df.withColumn("bucket", expr(s"$tsUsCol div $bucketUs"))
-      .groupBy(col(groupCol), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-    // axis bounds come from the already-aggregated counts — ONE scan
-    val axis = counts.groupBy(col(groupCol))
-      .agg(min("bucket").as("b0"), max("bucket").as("b1"))
-      .select(col(groupCol), explode(expr("sequence(b0, b1)")).as("bucket"))
-    axis.join(counts, Seq(groupCol, "bucket"), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-  }
+      bucketUs: Long = 3600000000L): DataFrame =
+    out(EventsMore.eventsGapFillFor(
+      in(df, groupCol -> "event_type", tsUsCol -> "ts_us"), bucketUs),
+      "event_type" -> groupCol, "hour_bucket" -> "bucket", "n_events" -> "n")
 
-  /** Hopping-window aggregate: `width = hops × hopUs` windows advancing
-    * every `hopUs`, per group. Map-side explode into the `hops`
-    * containing windows, partial-aggregated before any shuffle.
+  /** Hopping-window counts: `width = hops × hopUs` windows advancing
+    * every `hopUs`, per group (events_hop_window's body without its
+    * value sum, [[EventsMore.eventsHopWindowFor]]).
     */
   def hopWindow(df: DataFrame, groupCol: String, tsUsCol: String,
       hopUs: Long = 900000000L, hops: Int = 4): DataFrame =
-    df.withColumn("b", expr(s"$tsUsCol div $hopUs"))
-      .withColumn("off", explode(array((0 until hops).map(i => lit(i.toLong)): _*)))
-      .withColumn("window_start_us", expr(s"(b - off) * $hopUs"))
-      .groupBy(col(groupCol), col("window_start_us"))
-      .agg(count(lit(1)).as("n_events"))
+    out(EventsMore.eventsHopWindowFor(
+      in(df, groupCol -> "event_type", tsUsCol -> "ts_us"), hopUs, hops),
+      "event_type" -> groupCol)
 
   /** First-order Markov transition counts over each key's stream in
-    * (ts, tiebreak) order; first events transition from `startState`.
+    * (ts, tiebreak) order; first events transition from `startState`
+    * (events_markov's body, [[EventsMore.eventsMarkovFor]]).
     */
   def markovTransitions(df: DataFrame, keyCol: String, stateCol: String,
-      tsUsCol: String, tieCol: String, startState: String = "<start>"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keyCol).orderBy(tsUsCol, tieCol)
-    df.withColumn("from_state", coalesce(lag(stateCol, 1).over(w), lit(startState)))
-      .groupBy(col("from_state"), col(stateCol).as("to_state"))
-      .agg(count(lit(1)).as("n_transitions"))
-  }
+      tsUsCol: String, tieCol: String, startState: String = "<start>"): DataFrame =
+    out(EventsMore.eventsMarkovFor(
+      in(df, keyCol -> "user_id", stateCol -> "event_type", tsUsCol -> "ts_us",
+        tieCol -> "event_id"), startState),
+      "from_type" -> "from_state", "to_type" -> "to_state")
 
-  /** Inter-event dwell-time histogram over ANY frame: gaps between a
-    * key's consecutive events, log2-bucketed by `gap div unitUs` units
-    * (bucket −1 = zero-unit bursts). One key-partitioned lag window +
-    * a partial agg onto the ~log2(range) histogram; integer
-    * length(bin)−1 bucketing, no libm.
+  /** Inter-event dwell-time histogram: gaps between a key's
+    * consecutive events, log2-bucketed by `gap div unitUs` units
+    * (bucket −1 = zero-unit bursts; events_dwell's body,
+    * [[EventsMore.eventsDwellFor]]).
     */
   def dwellHistogram(df: DataFrame, keyCol: String, tsUsCol: String,
-      tieCol: String, unitUs: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keyCol).orderBy(tsUsCol, tieCol)
-    df.withColumn("__prev", lag(tsUsCol, 1).over(w))
-      .filter(col("__prev").isNotNull)
-      .withColumn("__gap", expr(s"($tsUsCol - __prev) div $unitUs"))
-      .withColumn("bucket",
-        expr("CASE WHEN __gap <= 0 THEN -1 ELSE CAST(length(bin(__gap)) - 1 AS INT) END"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_gaps"), sum("__gap").as("sum_gap_units"))
-  }
+      tieCol: String, unitUs: Long = 1000000L): DataFrame =
+    out(EventsMore.eventsDwellFor(
+      in(df, keyCol -> "user_id", tsUsCol -> "ts_us", tieCol -> "event_id"), unitUs),
+      "sum_gap_s" -> "sum_gap_units")
 
   /** Cohort retention triangle: keys bucketed by first-seen period,
-    * counted in each later period they appear. The frame collapses to
-    * the (key, period) grid BEFORE any join.
+    * counted in each later period they appear
+    * (events_cohort_matrix's body, [[AnalyticsPlus.eventsCohortMatrixFor]]).
     */
   def cohortMatrix(df: DataFrame, keyCol: String, tsUsCol: String,
-      periodUs: Long = 86400L * 1000000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    df.select(col(keyCol), expr(s"$tsUsCol div $periodUs").as("period")).distinct()
-      // first-seen period as a key-partitioned window min — one scan,
-      // no grid⋈cohort self-join
-      .withColumn("cohort_period", min("period").over(Window.partitionBy(keyCol)))
-      .groupBy(col("cohort_period"), (col("period") - col("cohort_period")).as("age"))
-      .agg(count(lit(1)).as("n_active"))
-  }
+      periodUs: Long = 86400L * 1000000): DataFrame =
+    out(AnalyticsPlus.eventsCohortMatrixFor(
+      in(df, keyCol -> "user_id", tsUsCol -> "ts_us"), periodUs),
+      "cohort_day" -> "cohort_period", "age_days" -> "age")
 
   /** Inter-arrival burstiness per group: the Goh–Barabási index
-    * (σ−μ)/(σ+μ) and CV over within-key gaps in `unitUs` units — the
-    * generic twin of the events_burstiness contract query. ONE
-    * (group, key) exchange + in-partition sort for the lag, partial
-    * agg onto the |groups|-bounded BIGINT moment frame, one IEEE
-    * quotient per group.
+    * (σ−μ)/(σ+μ) and CV over within-key gaps in `unitUs` units, the
+    * squared moment in DECIMAL(38,0) (events_burstiness's body,
+    * [[AnalyticsMore.eventsBurstinessFor]]).
     */
   def burstiness(df: DataFrame, groupCol: String, keyCol: String,
-      tsUsCol: String, tieCol: String, unitUs: Long = 60000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(groupCol, keyCol).orderBy(tsUsCol, tieCol)
-    df.withColumn("__prev", lag(tsUsCol, 1).over(w))
-      .filter(col("__prev").isNotNull)
-      .withColumn("__gap", expr(s"($tsUsCol - __prev) div $unitUs"))
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_gaps"),
-        sum("__gap").as("s1"), sum(expr("__gap * __gap")).as("s2"))
-      .withColumn("__sd_n", expr(
-        "sqrt(greatest(CAST(n_gaps AS DOUBLE) * CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE), 0.0))"))
-      .select(col(groupCol), col("n_gaps"),
-        expr("s1 div n_gaps").as("mean_gap_units"),
-        expr("CASE WHEN s1 > 0 THEN CAST(floor(__sd_n / CAST(s1 AS DOUBLE) * 1000000) AS BIGINT) ELSE NULL END").as("cv_ppm"),
-        expr("CASE WHEN s1 > 0 THEN CAST(floor((__sd_n - CAST(s1 AS DOUBLE)) / (__sd_n + CAST(s1 AS DOUBLE)) * 1000000) AS BIGINT) ELSE NULL END").as("burst_ppm"))
-  }
+      tsUsCol: String, tieCol: String, unitUs: Long = 60000000L): DataFrame =
+    out(AnalyticsMore.eventsBurstinessFor(
+      in(df, groupCol -> "event_type", keyCol -> "user_id", tsUsCol -> "ts_us",
+        tieCol -> "event_id"), unitUs),
+      "event_type" -> groupCol, "mean_gap_min" -> "mean_gap_units")
 
   /** Behavioural-diversity histogram: Shannon entropy of each key's
-    * category distribution, floor-quantized per cell so every sum is
-    * integer (order-free), binned by `binPpm` — the generic twin of
-    * events_entropy. Three partial aggs, no windows; output ≤
-    * log2(|categories|)·10⁶ / binPpm + 1 rows.
+    * category distribution, floor-quantized per cell, binned by
+    * `binPpm` (events_entropy's body, [[AnalyticsMore.eventsEntropyFor]]).
     */
   def entropyHistogram(df: DataFrame, keyCol: String, categoryCol: String,
       binPpm: Long = 250000L): DataFrame =
-    df.groupBy(col(keyCol), col(categoryCol)).agg(count(lit(1)).as("__c"))
-      .withColumn("__term", expr("CAST(floor(log2(__c) * __c * 1000000) AS BIGINT)"))
-      .groupBy(keyCol)
-      .agg(sum("__c").as("__n"), sum("__term").as("__t"))
-      .withColumn("__h", expr("CAST(floor(log2(__n) * 1000000) AS BIGINT) - __t div __n"))
-      .groupBy(expr(s"__h div $binPpm").as("ent_bin"))
-      .agg(count(lit(1)).as("n_keys"), sum("__h").as("sum_h_ppm"))
+    out(AnalyticsMore.eventsEntropyFor(
+      in(df, keyCol -> "user_id", categoryCol -> "event_type"), binPpm),
+      "n_users" -> "n_keys")
 
   /** Herfindahl–Hirschman concentration of `weightCol` (exact BIGINT
-    * units) across members of each group — the generic twin of
-    * supplier_hhi, equally at home on revenue per supplier, documents
-    * per source, or traffic per user. Shares floor once to ppm, and
-    * because they sum to ≤10⁶ per group the Σ share² sum is
-    * overflow-free at any scale.
+    * units) across members of each group: weights sum per (group,
+    * member), then supplier_hhi's body ([[AnalyticsMore.supplierHhiFor]])
+    * floors shares once to ppm.
     */
   def concentration(df: DataFrame, groupCol: String, memberCol: String,
-      weightCol: String): DataFrame = {
-    val weights = df.groupBy(groupCol, memberCol)
-      .agg(sum(weightCol).as("__w"))
-    val totals = weights.groupBy(groupCol).agg(sum("__w").as("__total"))
-    weights.join(broadcast(totals), Seq(groupCol))
-      .withColumn("__share_ppm", expr(
-        "CAST(floor(CAST(__w AS DOUBLE) / CAST(__total AS DOUBLE) * 1000000) AS BIGINT)"))
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_members"),
-        max("__share_ppm").as("top_share_ppm"),
-        expr("SUM(__share_ppm * __share_ppm) div 1000000").as("hhi_ppm"))
-  }
+      weightCol: String): DataFrame =
+    out(AnalyticsMore.supplierHhiFor(
+      df.groupBy(col(groupCol).as("n_name"), col(memberCol)).agg(sum(weightCol).as("rev_u"))),
+      "n_name" -> groupCol, "n_suppliers" -> "n_members")
 
-  /** Seasonal-naive forecast skill per group: predict each bucket's
-    * event count with the count `season` buckets earlier and report the
-    * error mass (MAE + WAPE, ppm) — the generic twin of events_forecast.
-    * Only buckets with an observed lag-`season` partner score. The ppm
-    * numerators accumulate DECIMAL(38,0): Σ|err| is bounded by the
-    * event count, which times 10⁶ passes 2⁶³ at 10¹³ rows.
+  /** Seasonal-naive forecast skill per group: each bucket's count
+    * predicted by the count `season` buckets earlier, MAE + WAPE in ppm
+    * (events_forecast's body, [[EventsMore.eventsForecastFor]]).
     */
   def forecastSkill(df: DataFrame, groupCol: String, tsUsCol: String,
-      bucketUs: Long = 86400L * 1000000, season: Int = 7): DataFrame = {
-    val frame = df.withColumn("__bucket", expr(s"$tsUsCol div $bucketUs"))
-      .groupBy(col(groupCol), col("__bucket"))
-      .agg(count(lit(1)).as("__n"))
-    val pred = frame.select(col(groupCol),
-      (col("__bucket") + season).as("__bucket"), col("__n").as("__np"))
-    frame.join(pred, Seq(groupCol, "__bucket"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_buckets"),
-        sum("__n").as("sum_actual"),
-        sum(expr("abs(__n - __np)")).as("sum_abs_err"))
-      .withColumn("mae_ppm", expr(
-        "CAST(CAST(sum_abs_err AS DECIMAL(38,0)) * 1000000 div n_buckets AS BIGINT)"))
-      .withColumn("wape_ppm", expr(
-        "CAST(CAST(sum_abs_err AS DECIMAL(38,0)) * 1000000 div sum_actual AS BIGINT)"))
-  }
+      bucketUs: Long = 86400L * 1000000, season: Int = 7): DataFrame =
+    out(EventsMore.eventsForecastFor(
+      in(df, groupCol -> "event_type", tsUsCol -> "ts_us"), bucketUs, season),
+      "event_type" -> groupCol, "n_days" -> "n_buckets")
 
   /** Open/close sweep line: per day, how many `opens` rows started, how
-    * many `closes` rows finished, and the running count still open —
-    * the generic twin of orders_backlog (tickets, sessions, orders —
-    * any entity with a start and end event stream). The running sum
-    * uses [[graft.operators.Ranks.boundedRunningSum]]'s one-row fold;
-    * the day frame must be calendar-bounded (it is, by definition).
+    * many `closes` rows finished, and the running count still open
+    * (orders_backlog's body, [[AnalyticsPlus.ordersBacklogFor]]).
     */
-  def backlogSweep(opens: DataFrame, closes: DataFrame, dayCol: String): DataFrame = {
-    val o = opens.groupBy(col(dayCol).as("day")).agg(count(lit(1)).as("opened"))
-    val c = closes.groupBy(col(dayCol).as("day")).agg(count(lit(1)).as("closed"))
-    val perDay = graft.operators.Materialize.stable(o.join(c, Seq("day"), "full_outer")
-      .select(col("day"), coalesce(col("opened"), lit(0L)).as("opened"),
-        coalesce(col("closed"), lit(0L)).as("closed")))
-    val run = graft.operators.Ranks.boundedRunningSum(
-      perDay.select(col("day"), (col("opened") - col("closed")).as("net")),
-      "day", "net", "backlog")
-    perDay.join(run.select("day", "backlog"), Seq("day"))
-  }
+  def backlogSweep(opens: DataFrame, closes: DataFrame, dayCol: String): DataFrame =
+    AnalyticsPlus.ordersBacklogFor(in(opens, dayCol -> "day"), in(closes, dayCol -> "day"))
 }

@@ -15,6 +15,11 @@ package graft.functions
 object PortableHash {
   val P = 2147483647L // 2^31 - 1 (Mersenne)
 
+  /** floor to 6 decimals, one spelling for Spark and DuckDB SQL: floor,
+    * not round(), so both engines land on bit-identical doubles.
+    */
+  private[graft] def q6(e: String): String = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
+
   /** a_i, b_i for the i-th universal hash h_i(x) = (a_i·x + b_i) mod P.
     * Products stay < 2⁶³: a_i < 2²⁶, x < 2³¹.
     */

@@ -293,13 +293,20 @@ object AnalyticsMore {
     * σ/μ = √(nΣx²−(Σx)²)/Σx after the 1/n cancels — then
     * floor-quantizes to ppm.
     */
-  def eventsBurstiness(s: SparkSession, dir: String): DataFrame = {
+  def eventsBurstiness(s: SparkSession, dir: String): DataFrame =
+    eventsBurstinessFor(Tables.events(s, dir), 60000000L)
+
+  /** The events_burstiness body over (event_type, user_id, ts_us,
+    * event_id), gaps in `unitUs` units (`gap_min` names the key's
+    * one-minute unit); shared with [[graft.api.EventOps.burstiness]].
+    */
+  private[graft] def eventsBurstinessFor(e: DataFrame, unitUs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("event_type", "user_id").orderBy("ts_us", "event_id")
-    val moments = Tables.events(s, dir)
+    val moments = e
       .withColumn("prev_us", lag("ts_us", 1).over(w))
       .filter(col("prev_us").isNotNull)
-      .withColumn("gap_min", expr("(ts_us - prev_us) div 60000000"))
+      .withColumn("gap_min", expr(s"(ts_us - prev_us) div $unitUs"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_gaps"),
         sum("gap_min").as("s1"),
@@ -368,8 +375,13 @@ object AnalyticsMore {
     * a bare integer — identical-input single calls, no accumulation.
     */
   def eventsEntropy(s: SparkSession, dir: String): DataFrame =
-    entropyHistogram(Tables.events(s, dir)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("c")))
+    eventsEntropyFor(Tables.events(s, dir), 250000L)
+
+  /** The events_entropy body over (user_id, event_type), entropies
+    * binned by `binPpm`; shared with [[graft.api.EventOps.entropyHistogram]].
+    */
+  private[graft] def eventsEntropyFor(e: DataFrame, binPpm: Long): DataFrame =
+    entropyHistogram(e.groupBy("user_id", "event_type").agg(count(lit(1)).as("c")), binPpm)
 
   /** the (user, type, c) grid → entropy-histogram tail, shared by the
     * batch operator and the streaming twin's equivalence check: H is a
@@ -378,13 +390,13 @@ object AnalyticsMore {
     * grid — so both paths land on the identical histogram, with every
     * log2 evaluated by the same engine expression.
     */
-  private[graft] def entropyHistogram(grid: DataFrame): DataFrame =
+  private[graft] def entropyHistogram(grid: DataFrame, binPpm: Long = 250000L): DataFrame =
     grid
       .withColumn("term", expr("CAST(floor(log2(c) * c * 1000000) AS BIGINT)"))
       .groupBy("user_id")
       .agg(sum("c").as("n"), sum("term").as("t"))
       .withColumn("h_ppm", expr("CAST(floor(log2(n) * 1000000) AS BIGINT) - t div n"))
-      .groupBy(expr("h_ppm div 250000").as("ent_bin"))
+      .groupBy(expr(s"h_ppm div $binPpm").as("ent_bin"))
       .agg(count(lit(1)).as("n_users"), sum("h_ppm").as("sum_h_ppm"))
       .orderBy("ent_bin")
 
@@ -429,6 +441,14 @@ object AnalyticsMore {
       .join(broadcast(Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("rev_u"))
+    supplierHhiFor(sup).orderBy("n_name")
+  }
+
+  /** The supplier_hhi body over one (n_name, rev_u) row per member:
+    * member count, top share and HHI per n_name; shared with
+    * [[graft.api.EventOps.concentration]].
+    */
+  private[graft] def supplierHhiFor(sup: DataFrame): DataFrame = {
     val totals = sup.groupBy("n_name").agg(sum("rev_u").as("total_u"))
     sup.join(broadcast(totals), Seq("n_name"))
       .withColumn("share_ppm", expr(
@@ -437,7 +457,6 @@ object AnalyticsMore {
       .agg(count(lit(1)).as("n_suppliers"),
         max("share_ppm").as("top_share_ppm"),
         expr("SUM(share_ppm * share_ppm) div 1000000").as("hhi_ppm"))
-      .orderBy("n_name")
   }
 
   val supplierHhiSql: String =

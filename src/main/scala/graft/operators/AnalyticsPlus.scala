@@ -80,10 +80,17 @@ object AnalyticsPlus {
     * the grid⋈cohort join is co-partitioned on user_id — the matrix
     * itself is |days|²/2-bounded.
     */
-  def eventsCohortMatrix(s: SparkSession, dir: String): DataFrame = {
+  def eventsCohortMatrix(s: SparkSession, dir: String): DataFrame =
+    eventsCohortMatrixFor(Tables.events(s, dir), 86400L * 1000000)
+      .orderBy("cohort_day", "age_days")
+
+  /** The events_cohort_matrix body over (user_id, ts_us) in `periodUs`
+    * periods; shared with [[graft.api.EventOps.cohortMatrix]].
+    */
+  private[graft] def eventsCohortMatrixFor(e: DataFrame, periodUs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grid = Tables.events(s, dir)
-      .select(col("user_id"), expr(s"ts_us div ${86400L * 1000000}").as("day"))
+    val grid = e
+      .select(col("user_id"), expr(s"ts_us div $periodUs").as("day"))
       .distinct()
     // cohort day as a user-partitioned window min over the grid — ONE
     // corpus scan and no grid⋈cohort self-join (the agg+join spelling
@@ -93,7 +100,6 @@ object AnalyticsPlus {
       .withColumn("cohort_day", min("day").over(Window.partitionBy("user_id")))
       .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("age_days"))
       .agg(count(lit(1)).as("n_active"))
-      .orderBy("cohort_day", "age_days")
   }
 
   val eventsCohortMatrixSql: String =
@@ -285,13 +291,22 @@ object AnalyticsPlus {
     */
   def ordersBacklog(s: SparkSession, dir: String): DataFrame = {
     val dayUs = 86400L * 1000000
-    val opened = Tables.orders(s, dir)
-      .groupBy(expr(s"unix_micros(CAST(o_orderdate AS TIMESTAMP)) div $dayUs").as("day"))
-      .agg(count(lit(1)).as("opened"))
-    val closed = Tables.lineitem(s, dir)
-      .groupBy("l_orderkey")
-      .agg(max(expr(s"unix_micros(CAST(l_shipdate AS TIMESTAMP)) div $dayUs")).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("closed"))
+    ordersBacklogFor(
+      Tables.orders(s, dir)
+        .select(expr(s"unix_micros(CAST(o_orderdate AS TIMESTAMP)) div $dayUs").as("day")),
+      Tables.lineitem(s, dir)
+        .groupBy("l_orderkey")
+        .agg(max(expr(s"unix_micros(CAST(l_shipdate AS TIMESTAMP)) div $dayUs")).as("day")))
+      .orderBy("day")
+  }
+
+  /** The orders_backlog body over one `day` row per opened and per
+    * closed entity: opened, closed and running backlog per day; shared
+    * with [[graft.api.EventOps.backlogSweep]].
+    */
+  private[graft] def ordersBacklogFor(opens: DataFrame, closes: DataFrame): DataFrame = {
+    val opened = opens.groupBy("day").agg(count(lit(1)).as("opened"))
+    val closed = closes.groupBy("day").agg(count(lit(1)).as("closed"))
     val perDay = Materialize.stable(opened.join(closed, Seq("day"), "full_outer")
       .select(col("day"),
         coalesce(col("opened"), lit(0L)).as("opened"),
@@ -301,7 +316,6 @@ object AnalyticsPlus {
       "day", "net", "backlog")
     perDay.join(run.select("day", "backlog"), Seq("day"))
       .select("day", "opened", "closed", "backlog")
-      .orderBy("day")
   }
 
   val ordersBacklogSql: String =

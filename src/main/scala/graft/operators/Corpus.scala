@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.functions.PortableHash.q6
 import graft.sources.Tables
 
 /** Corpus-shaping operators for training-data pipelines (SURVEY §2):
@@ -99,18 +100,26 @@ object Corpus {
     */
   def textChunk(s: SparkSession, dir: String): DataFrame = {
     val fp = s"(acc, h) -> (acc * 1000003 + h) % ${PortableHash.P}"
-    Tables.documents(s, dir)
-      .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
-      .withColumn("start", explode(expr(s"sequence(1, greatest(1, size(words)), $ChunkStride)")))
-      .withColumn("chunk", expr(s"slice(words, start, $ChunkWords)"))
-      .select(col("doc_id"),
-        expr(s"CAST((start - 1) div $ChunkStride AS BIGINT)").as("chunk_idx"),
+    textChunkFor(Tables.documents(s, dir), ChunkWords, ChunkStride)
+      .select(col("doc_id"), col("chunk_idx"),
         expr("CAST(start AS BIGINT)").as("start_word"),
         expr("CAST(size(chunk) AS BIGINT)").as("n_chunk_words"),
         expr(s"aggregate(transform(chunk, w -> ${PortableHash.sparkWordHash("w")}), 0L, $fp)")
           .as("chunk_fp"))
       .orderBy("doc_id", "chunk_idx")
   }
+
+  /** The text_chunk body over a `text` column: one row per
+    * `words`-word chunk every `stride` words, adding `words`, `start`,
+    * `chunk` (the chunk's words) and `chunk_idx`; shared with
+    * [[graft.api.CorpusOps.chunk]].
+    */
+  private[graft] def textChunkFor(docs: DataFrame, words: Int, stride: Int): DataFrame =
+    docs
+      .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
+      .withColumn("start", explode(expr(s"sequence(1, greatest(1, size(words)), $stride)")))
+      .withColumn("chunk", expr(s"slice(words, start, $words)"))
+      .withColumn("chunk_idx", expr(s"CAST((start - 1) div $stride AS BIGINT)"))
 
   val textChunkSql: String =
     s"""SELECT doc_id,
@@ -142,22 +151,35 @@ object Corpus {
     * would; shards pack independently and in parallel, which is exactly
     * how a multi-writer training-data job lays out its output files.
     */
-  def packBins(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        expr("doc_id div " + PackShardDocs).as("shard"),
-        expr("CAST(size(filter(split(text, ' '), w -> w <> '')) AS BIGINT)").as("n_tokens"))
-      .withColumn("cum", sum(col("n_tokens")).over(w))
-      .withColumn("bin", expr(s"(cum - n_tokens) div $PackBudget"))
+  def packBins(s: SparkSession, dir: String): DataFrame =
+    packBinsFor(Tables.documents(s, dir)
+        .select(col("doc_id"), expr(nTokensOf("text")).as("n_tokens")),
+      PackBudget, PackShardDocs)
       .groupBy("shard", "bin")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("bin_tokens"),
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"))
       .orderBy("shard", "bin")
+
+  /** whitespace token count of `textCol`, the n_tokens of pack_bins. */
+  private[graft] def nTokensOf(textCol: String): String =
+    s"CAST(size(filter(split($textCol, ' '), w -> w <> '')) AS BIGINT)"
+
+  /** The pack_bins body over (doc_id, n_tokens): adds `shard` (doc_id
+    * div `shardDocs`) and the greedy `bin` within it under
+    * `budgetTokens`; shared with [[graft.api.CorpusOps.packBins]] and
+    * [[graft.api.CorpusOps.curationPipeline]].
+    */
+  private[graft] def packBinsFor(docs: DataFrame, budgetTokens: Long, shardDocs: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("shard").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs
+      .withColumn("shard", expr(s"doc_id div $shardDocs"))
+      .withColumn("cum", sum(col("n_tokens")).over(w))
+      .withColumn("bin", expr(s"(cum - n_tokens) div $budgetTokens"))
+      .drop("cum")
   }
 
   val packBinsSql: String =
@@ -189,14 +211,10 @@ object Corpus {
     * wins the reason, so the decision is totally deterministic.
     */
   def corpusCurate(s: SparkSession, dir: String): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
     val langs = TextAnalysis.lexicons.map(_._1)
-    val scored = TextAnalysis.lexicons.foldLeft(
-      Tables.documents(s, dir)
-        .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
-        .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))) {
+    val scored = TextAnalysis.qualityFor(TextAnalysis.lexicons.foldLeft(Tables.documents(s, dir)) {
       case (df, (lang, lex)) => df.withColumn(s"s_$lang", expr(TextAnalysis.sparkLexCount(lex)))
-    }
+    })
     val pred = langs.foldRight(lit(langs.last)) { case (lang, acc) =>
       val others = langs.filterNot(_ == lang).map(l => col(s"s_$l"))
       when(col(s"s_$lang") >= greatest(others: _*), lang).otherwise(acc)
@@ -209,12 +227,6 @@ object Corpus {
       .when(col("score") < CurateMinScore, "low_quality")
       .otherwise("keep")
     scored
-      .withColumn("distinct_ratio",
-        expr(q6("CAST(size(array_distinct(words)) AS DOUBLE) / n_words")))
-      .withColumn("stop_ratio",
-        expr(q6("CAST(size(filter(words, w -> array_contains(array('the', 'a', 'and', 'of', 'to'), w))) AS DOUBLE) / n_words")))
-      .withColumn("score",
-        expr(q6("CAST(0.4 AS DOUBLE) * least(CAST(1 AS DOUBLE), CAST(n_words AS DOUBLE) / CAST(200 AS DOUBLE)) + CAST(0.3 AS DOUBLE) * distinct_ratio + CAST(0.3 AS DOUBLE) * stop_ratio")))
       .withColumn("predicted", pred)
       .join(dups, Seq("doc_id"), "left")
       .withColumn("is_dup", coalesce(col("dup_mark"), lit(false)))
@@ -225,7 +237,6 @@ object Corpus {
   }
 
   val corpusCurateSql: String = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
     val langs = TextAnalysis.lexicons.map(_._1)
     val scores = TextAnalysis.lexicons
       .map { case (lang, lex) => s"${TextAnalysis.duckLexCount(lex)} AS s_$lang" }
@@ -285,21 +296,29 @@ object Corpus {
     * map-side.
     */
   def corpusMix(s: SparkSession, dir: String): DataFrame = {
-    val target = MixTargetsPpm.foldLeft(when(lit(false), lit(0L))) {
-      case (acc, (src, ppm)) => acc.when(col("source") === src, lit(ppm))
-    }.otherwise(lit(0L))
-    val avail = Materialize.stable(Tables.documents(s, dir)
-      .groupBy("source").agg(count(lit(1)).as("n_avail"))
-      .withColumn("target_ppm", target)
-      .filter(col("target_ppm") > 0)
-      .withColumn("cap", expr("n_avail * 1000000 div target_ppm")))
-    val taken = avail.crossJoin(broadcast(avail.agg(min("cap").as("m"))))
-      .withColumn("n_take", expr("m * target_ppm div 1000000"))
+    val taken = corpusMixFor(Tables.documents(s, dir), MixTargetsPpm)
     taken.crossJoin(broadcast(taken.agg(sum("n_take").as("total_take"))))
       .withColumn("realized_ppm", expr(
         "floor(CAST(n_take AS DOUBLE) / CAST(total_take AS DOUBLE) * 1000000 * 1000000) / CAST(1000000 AS DOUBLE)"))
       .select("source", "target_ppm", "n_avail", "n_take", "realized_ppm")
       .orderBy("source")
+  }
+
+  /** The corpus_mix plan over a `source` column: per source with a
+    * positive target, `n_avail`, `target_ppm`, the largest servable
+    * corpus `m` and `n_take`; shared with [[graft.api.CorpusOps.mixPlan]].
+    */
+  private[graft] def corpusMixFor(docs: DataFrame, targetsPpm: Seq[(String, Long)]): DataFrame = {
+    val target = targetsPpm.foldLeft(when(lit(false), lit(0L))) {
+      case (acc, (src, ppm)) => acc.when(col("source") === src, lit(ppm))
+    }.otherwise(lit(0L))
+    val avail = Materialize.stable(docs
+      .groupBy("source").agg(count(lit(1)).as("n_avail"))
+      .withColumn("target_ppm", target)
+      .filter(col("target_ppm") > 0)
+      .withColumn("cap", expr("n_avail * 1000000 div target_ppm")))
+    avail.crossJoin(broadcast(avail.agg(min("cap").as("m"))))
+      .withColumn("n_take", expr("m * target_ppm div 1000000"))
   }
 
   val corpusMixSql: String = {

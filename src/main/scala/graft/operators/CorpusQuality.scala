@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.PortableHash.q6
 import graft.sources.Tables
 
 /** Corpus-quality filters beyond per-doc column math ([[TextAnalysis]]):
@@ -17,8 +18,6 @@ import graft.sources.Tables
   * reproduces each score bit-for-bit.
   */
 object CorpusQuality {
-
-  private def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
 
   // word bigrams as an array column; empty when the doc has < 2 words
   private[graft] def sparkWordBigramsOf(words: String): String =
@@ -44,8 +43,17 @@ object CorpusQuality {
     * zero-bigram documents still emit a row. Per-doc work is
     * O(len(doc)); nothing is corpus-quadratic.
     */
-  def textRepetition(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+  def textRepetition(s: SparkSession, dir: String): DataFrame =
+    textRepetitionFor(Tables.documents(s, dir), 0.05, 0.3)
+      .select("doc_id", "n_bigrams", "top_share", "dup_frac", "repetitive")
+      .orderBy("doc_id")
+
+  /** The text_repetition body over (doc_id, text): every column of
+    * `docs` plus the four metrics, `repetitive` at the given
+    * thresholds; shared with [[graft.api.CorpusOps.repetitionMetrics]].
+    */
+  private[graft] def textRepetitionFor(docs: DataFrame, topShareMax: Double,
+      dupFracMax: Double): DataFrame = {
     val grouped = docs
       .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
       .select(col("doc_id"), explode(expr(sparkWordBigrams)).as("bg"))
@@ -54,14 +62,13 @@ object CorpusQuality {
       sum("c").as("n_bigrams"),
       max("c").as("top_c"),
       sum(when(col("c") > 1, col("c")).otherwise(0L)).as("dup_c"))
-    docs.select("doc_id").join(per, Seq("doc_id"), "left")
-      .select(col("doc_id"),
+    docs.join(per, Seq("doc_id"), "left")
+      .select(docs.columns.map(col).toSeq ++ Seq(
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         expr(s"CASE WHEN n_bigrams IS NULL OR n_bigrams = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(top_c AS DOUBLE) / CAST(n_bigrams AS DOUBLE)")} END").as("top_share"),
-        expr(s"CASE WHEN n_bigrams IS NULL OR n_bigrams = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(dup_c AS DOUBLE) / CAST(n_bigrams AS DOUBLE)")} END").as("dup_frac"))
+        expr(s"CASE WHEN n_bigrams IS NULL OR n_bigrams = 0 THEN CAST(0 AS DOUBLE) ELSE ${q6("CAST(dup_c AS DOUBLE) / CAST(n_bigrams AS DOUBLE)")} END").as("dup_frac")): _*)
       .withColumn("repetitive",
-        col("top_share") > 0.05 || col("dup_frac") > 0.3)
-      .orderBy("doc_id")
+        col("top_share") > topShareMax || col("dup_frac") > dupFracMax)
   }
 
   val textRepetitionSql: String =
@@ -129,8 +136,14 @@ object CorpusQuality {
     * accumulates in DECIMAL(38,0) (DuckDB reaches the same value via
     * HUGEINT SUM) and only the final mean is cast to DOUBLE.
     */
-  private def lmScores(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+  private def lmScores(s: SparkSession, dir: String): DataFrame =
+    lmScoresFor(Tables.documents(s, dir))
+
+  /** The text_ngram_lm body over (doc_id, text): (doc_id, n_bigrams,
+    * lm_score) for every doc with a char bigram; shared with
+    * [[graft.api.CorpusOps.lmScore]].
+    */
+  private[graft] def lmScoresFor(docs: DataFrame): DataFrame = {
     val grouped = Materialize.stable(
       docs.select(col("doc_id"), explode(expr(sparkCharBigrams)).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))
@@ -495,18 +508,24 @@ object CorpusQuality {
     */
   val ZipfFitK = 64
 
-  def textZipfSlope(s: SparkSession, dir: String): DataFrame = {
+  def textZipfSlope(s: SparkSession, dir: String): DataFrame =
+    textZipfSlopeFor(Tables.documents(s, dir), ZipfFitK).orderBy("source")
+
+  /** The text_zipf_slope body over (source, text), fit over each
+    * source's top `topK` tokens; shared with [[graft.api.CorpusOps.zipfSlope]].
+    */
+  private[graft] def textZipfSlopeFor(docs: DataFrame, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source").orderBy(col("n").desc, col("token"))
     val num = "CAST(n_terms AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(1000000 AS DOUBLE)"
     val den = "CAST(n_terms AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(1000000 AS DOUBLE)"
     val deny = "CAST(n_terms AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-    Tables.documents(s, dir)
+    docs
       .select(col("source"),
         explode(expr("filter(split(text, ' '), w -> w <> '')")).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("n"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= ZipfFitK)
+      .filter(col("rank") <= topK)
       .withColumn("lx", expr("ln(CAST(rank AS DOUBLE))"))
       .withColumn("ly", expr("ln(CAST(n AS DOUBLE))"))
       .groupBy("source")
@@ -521,7 +540,6 @@ object CorpusQuality {
       .withColumn("r2_milli", expr(
         s"CASE WHEN $den > 0 AND $deny > 0 THEN CAST(floor(($num) * ($num) / (($den) * ($deny)) * 1000) AS BIGINT) ELSE NULL END"))
       .select("source", "n_terms", "slope_milli", "r2_milli")
-      .orderBy("source")
   }
 
   val textZipfSlopeSql: String = {
@@ -726,7 +744,13 @@ object CorpusQuality {
     * 'aa').
     */
   def bpePairStep(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
+    bpePairStepFor(Tables.documents(s, dir), 20)
+
+  /** The bpe_pair_step body over (text): the `topK` pairs; shared with
+    * [[graft.api.CorpusOps.bpePairCounts]].
+    */
+  private[graft] def bpePairStepFor(docs: DataFrame, topK: Int): DataFrame =
+    docs
       .select(explode(expr("filter(split(text, ' '), w -> w <> '')")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .filter(length(col("word")) >= 2)
@@ -735,7 +759,7 @@ object CorpusQuality {
         .as("pair"), col("cnt"))
       .groupBy("pair")
       .agg(sum("cnt").as("n_pairs"), count(lit(1)).as("n_types"))
-      .orderBy(col("n_pairs").desc, col("pair")).limit(20)
+      .orderBy(col("n_pairs").desc, col("pair")).limit(topK)
 
   val bpePairStepSql: String =
     """WITH vocab AS (
@@ -899,8 +923,14 @@ object CorpusQuality {
     * corpus total ride back as broadcasts; final rollup is
     * sources-bounded.
     */
-  def sourceKlDrift(s: SparkSession, dir: String): DataFrame = {
-    val grid = Materialize.stable(Tables.documents(s, dir)
+  def sourceKlDrift(s: SparkSession, dir: String): DataFrame =
+    sourceKlDriftFor(Tables.documents(s, dir)).orderBy("source")
+
+  /** The source_kl_drift body over (source, text); shared with
+    * [[graft.api.CorpusOps.sourceDrift]].
+    */
+  private[graft] def sourceKlDriftFor(docs: DataFrame): DataFrame = {
+    val grid = Materialize.stable(docs
       .select(col("source"),
         explode(expr("filter(split(text, ' '), w -> w <> '')")).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("n_st")))
@@ -919,7 +949,6 @@ object CorpusQuality {
       .groupBy("source")
       .agg(max("n_s").as("n_tokens"), max("n_vocab").as("n_vocab"),
         sum("term_ppb").as("kl_ppb"))
-      .orderBy("source")
   }
 
   val sourceKlDriftSql: String =

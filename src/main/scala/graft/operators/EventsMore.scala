@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -36,21 +36,28 @@ object EventsMore {
     * not per event-count. Both aggs partial map-side; only the
     * (user, day)-grained grid ever shuffles.
     */
-  def eventsDecay(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
+  def eventsDecay(s: SparkSession, dir: String): DataFrame =
+    eventsDecayFor(Tables.events(s, dir), AnchorUs, dayUs, MaxAgeDays).orderBy("user_id")
+
+  /** The events_decay body over (user_id, ts_us, value) with a
+    * one-`unitUs` half-life as of `anchorUs`, ages capped at `maxAge`;
+    * shared with [[graft.api.EventOps.decayScore]].
+    */
+  private[graft] def eventsDecayFor(e: DataFrame, anchorUs: Long, unitUs: Long,
+      maxAge: Int): DataFrame = {
+    require(maxAge >= 0 && maxAge <= 56, s"maxAge $maxAge: 2^maxAge·100 must fit a BIGINT")
     e.withColumn("age_days",
-        least(expr(s"($AnchorUs - ts_us) div ${86400L * 1000000}"), lit(MaxAgeDays.toLong)))
+        least(expr(s"($anchorUs - ts_us) div $unitUs"), lit(maxAge.toLong)))
       .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"))
       .groupBy("user_id", "age_days")
       .agg(sum(col("cents")).as("cents_day"), count(lit(1)).as("n"))
       .withColumn("wunits",
-        expr(s"cents_day * shiftleft(CAST(1 AS BIGINT), CAST($MaxAgeDays - age_days AS INT))"))
+        expr(s"cents_day * shiftleft(CAST(1 AS BIGINT), CAST($maxAge - age_days AS INT))"))
       .groupBy("user_id")
       .agg(sum(col("wunits")).as("units"), sum(col("n")).as("n_events"))
       .withColumn("decayed_score",
-        expr(s"CAST(units AS DOUBLE) / CAST(${(1L << MaxAgeDays) * 100L} AS DOUBLE)"))
+        expr(s"CAST(units AS DOUBLE) / CAST(${(1L << maxAge) * 100L} AS DOUBLE)"))
       .select("user_id", "decayed_score", "n_events")
-      .orderBy("user_id")
   }
 
   val eventsDecaySql: String =
@@ -74,9 +81,15 @@ object EventsMore {
     * years×8760×|types| rows. Counts join the axis type+hour-keyed;
     * missing hours coalesce to 0.
     */
-  def eventsGapFill(s: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.events(s, dir)
-      .withColumn("hour_bucket", expr("ts_us div 3600000000"))
+  def eventsGapFill(s: SparkSession, dir: String): DataFrame =
+    eventsGapFillFor(Tables.events(s, dir), 3600000000L).orderBy("event_type", "hour_bucket")
+
+  /** The events_gap_fill body over (event_type, ts_us) in `bucketUs`
+    * buckets; shared with [[graft.api.EventOps.gapFill]].
+    */
+  private[graft] def eventsGapFillFor(e: DataFrame, bucketUs: Long): DataFrame = {
+    val counts = e
+      .withColumn("hour_bucket", expr(s"ts_us div $bucketUs"))
       .groupBy("event_type", "hour_bucket")
       .agg(count(lit(1)).as("n_events"))
     // the axis derives from the ALREADY-AGGREGATED counts frame, so the
@@ -87,7 +100,6 @@ object EventsMore {
       .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("hour_bucket"))
     axis.join(counts, Seq("event_type", "hour_bucket"), "left")
       .withColumn("n_events", coalesce(col("n_events"), lit(0L)))
-      .orderBy("event_type", "hour_bucket")
   }
 
   val eventsGapFillSql: String =
@@ -112,17 +124,23 @@ object EventsMore {
     * start) — the shuffle carries one row per live window per type,
     * never the ×4 event fanout.
     */
-  def eventsHopWindow(s: SparkSession, dir: String): DataFrame = {
-    val hopUs = 900000000L // 15 min
-    val e = Tables.events(s, dir)
-      .withColumn("b", expr(s"ts_us div $hopUs"))
-      .withColumn("off", explode(array((0 to 3).map(i => lit(i.toLong)): _*)))
-      .withColumn("window_start_us", expr(s"(b - off) * $hopUs"))
-    e.groupBy("event_type", "window_start_us")
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(expr("CAST(value AS DECIMAL(12,2))")), 2).cast("double").as("sum_value"))
+  def eventsHopWindow(s: SparkSession, dir: String): DataFrame =
+    eventsHopWindowFor(Tables.events(s, dir), 900000000L, 4,
+      round(sum(expr("CAST(value AS DECIMAL(12,2))")), 2).cast("double").as("sum_value"))
       .orderBy("event_type", "window_start_us")
-  }
+
+  /** The events_hop_window body over (event_type, ts_us): `hops`
+    * windows of `hopUs` per event, `n_events` plus any `extra`
+    * aggregates per (event_type, window_start_us); shared with
+    * [[graft.api.EventOps.hopWindow]].
+    */
+  private[graft] def eventsHopWindowFor(e: DataFrame, hopUs: Long, hops: Int,
+      extra: Column*): DataFrame =
+    e.withColumn("b", expr(s"ts_us div $hopUs"))
+      .withColumn("off", explode(array((0 until hops).map(i => lit(i.toLong)): _*)))
+      .withColumn("window_start_us", expr(s"(b - off) * $hopUs"))
+      .groupBy("event_type", "window_start_us")
+      .agg(count(lit(1)).as("n_events"), extra: _*)
 
   val eventsHopWindowSql: String =
     """SELECT event_type, ((epoch_us(ts) // 900000000) - off) * 900000000 AS window_start_us,
@@ -139,14 +157,19 @@ object EventsMore {
     * then a partial agg onto the |types|²-bounded matrix — order is
     * made deterministic by the (ts_us, event_id) composite sort key.
     */
-  def eventsMarkov(s: SparkSession, dir: String): DataFrame = {
+  def eventsMarkov(s: SparkSession, dir: String): DataFrame =
+    eventsMarkovFor(Tables.events(s, dir), "<start>").orderBy("from_type", "to_type")
+
+  /** The events_markov body over (user_id, event_type, ts_us,
+    * event_id); first events transition from `startState`. Shared with
+    * [[graft.api.EventOps.markovTransitions]].
+    */
+  private[graft] def eventsMarkovFor(e: DataFrame, startState: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    Tables.events(s, dir)
-      .withColumn("from_type", coalesce(lag("event_type", 1).over(w), lit("<start>")))
+    e.withColumn("from_type", coalesce(lag("event_type", 1).over(w), lit(startState)))
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n_transitions"))
-      .orderBy("from_type", "to_type")
   }
 
   val eventsMarkovSql: String =
@@ -326,18 +349,23 @@ object EventsMore {
     * (ts_us, event_id) order key makes every gap identical on both
     * engines.
     */
-  def eventsDwell(s: SparkSession, dir: String): DataFrame = {
+  def eventsDwell(s: SparkSession, dir: String): DataFrame =
+    eventsDwellFor(Tables.events(s, dir), 1000000L).orderBy("bucket")
+
+  /** The events_dwell body over (user_id, ts_us, event_id): gaps in
+    * `unitUs` units (`gap_s` names the key's one-second unit); shared
+    * with [[graft.api.EventOps.dwellHistogram]].
+    */
+  private[graft] def eventsDwellFor(e: DataFrame, unitUs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    Tables.events(s, dir)
-      .withColumn("prev_us", lag("ts_us", 1).over(w))
+    e.withColumn("prev_us", lag("ts_us", 1).over(w))
       .filter(col("prev_us").isNotNull)
-      .withColumn("gap_s", expr("(ts_us - prev_us) div 1000000"))
+      .withColumn("gap_s", expr(s"(ts_us - prev_us) div $unitUs"))
       .withColumn("bucket",
         expr("CASE WHEN gap_s <= 0 THEN -1 ELSE CAST(length(bin(gap_s)) - 1 AS INT) END"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_gaps"), sum("gap_s").as("sum_gap_s"))
-      .orderBy("bucket")
   }
 
   val eventsDwellSql: String =
@@ -497,11 +525,18 @@ object EventsMore {
     * in DECIMAL(38,0) (10¹³ events × 10⁶ passes 2⁶³; BIGINT would wrap
     * where DuckDB's HUGEINT does not) and divides back to BIGINT ppm.
     */
-  def eventsForecast(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(col("event_type"), expr(s"ts_us div $dayUs").as("day"))
+  def eventsForecast(s: SparkSession, dir: String): DataFrame =
+    eventsForecastFor(Tables.events(s, dir), dayUs, 7).orderBy("event_type")
+
+  /** The events_forecast body over (event_type, ts_us): `bucketUs`
+    * buckets, each predicted by the bucket `season` earlier; shared
+    * with [[graft.api.EventOps.forecastSkill]].
+    */
+  private[graft] def eventsForecastFor(e: DataFrame, bucketUs: Long, season: Int): DataFrame = {
+    val daily = e
+      .groupBy(col("event_type"), expr(s"ts_us div $bucketUs").as("day"))
       .agg(count(lit(1)).as("n"))
-    val pred = daily.select(col("event_type"), (col("day") + 7).as("day"),
+    val pred = daily.select(col("event_type"), (col("day") + season).as("day"),
       col("n").as("n_pred"))
     daily.join(pred, Seq("event_type", "day"))
       .groupBy("event_type")
@@ -513,7 +548,6 @@ object EventsMore {
       .withColumn("wape_ppm", expr(
         "CAST(CAST(sum_abs_err AS DECIMAL(38,0)) * 1000000 div sum_actual AS BIGINT)"))
       .select("event_type", "n_days", "sum_actual", "sum_abs_err", "mae_ppm", "wape_ppm")
-      .orderBy("event_type")
   }
 
   val eventsForecastSql: String =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.PortableHash.q6
 import graft.functions.VectorFns._
 import graft.sources.Tables
 
@@ -473,7 +474,6 @@ object Similarity {
     * discipline applied to vector math).
     */
   def embedQuantize(s: SparkSession, dir: String): DataFrame = {
-    val q6 = (e: String) => s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
     Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(sparkToDouble("embedding")).as("v"))
       .withColumn("maxabs", expr(
@@ -523,7 +523,6 @@ object Similarity {
     * Pure map-side HOF column math; zero shuffles beyond the sort.
     */
   def embedProject(s: SparkSession, dir: String): DataFrame = {
-    val q6 = (e: String) => s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
     val P = graft.functions.PortableHash.P
     withVec(s, dir)
       .withColumn("p", expr(sparkProject("v")))
@@ -1844,7 +1843,13 @@ object Similarity {
     * identical-order IEEE doubles, floored to ppm.
     */
   def embedDimStats(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
+    embedDimStatsFor(Tables.embeddings(s, dir)).orderBy("pos")
+
+  /** The embed_dim_stats body over (embedding); shared with
+    * [[graft.api.CorpusOps.embeddingDimStats]].
+    */
+  private[graft] def embedDimStatsFor(e: DataFrame): DataFrame =
+    e
       .select(posexplode(expr(sparkToDouble("embedding"))).as(Seq("pos", "x")))
       .withColumn("milli", expr("CAST(floor(x * 1000) AS BIGINT)"))
       .groupBy(col("pos").cast("long").as("pos"))
@@ -1860,7 +1865,6 @@ object Similarity {
           |  - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE), 0.0))
           |  / CAST(n_vecs AS DOUBLE) * 1000) AS BIGINT)""".stripMargin.replaceAll("\\s+", " ")))
       .select("pos", "n_vecs", "mean_ppm", "sd_ppm", "min_milli", "max_milli", "n_nearzero")
-      .orderBy("pos")
 
   val embedDimStatsSql: String =
     s"""WITH grid AS (
@@ -2038,8 +2042,14 @@ object Similarity {
     * DECIMAL(38,0) (the numeric-bounds rule); the outputs divide back
     * to BIGINTs bounded by n·64·10³ (w_unit) and 10⁶ (comp_ppm).
     */
-  def embedPcaPower(s: SparkSession, dir: String): DataFrame = {
-    val grid = Materialize.stable(Tables.embeddings(s, dir)
+  def embedPcaPower(s: SparkSession, dir: String): DataFrame =
+    embedPcaPowerFor(Tables.embeddings(s, dir)).orderBy("pos")
+
+  /** The embed_pca_power body over (vec_id, embedding); shared with
+    * [[graft.api.CorpusOps.pcaPowerStep]].
+    */
+  private[graft] def embedPcaPowerFor(e: DataFrame): DataFrame = {
+    val grid = Materialize.stable(e
       .select(col("vec_id"), posexplode(expr(sparkToDouble("embedding"))).as(Seq("pos", "x")))
       .withColumn("milli", expr("CAST(floor(x * 1000) AS BIGINT)"))
       .select("vec_id", "pos", "milli"))
@@ -2053,7 +2063,6 @@ object Similarity {
       .withColumn("w_unit", expr("CAST(w div 1000000 AS BIGINT)"))
       .withColumn("comp_ppm", expr("CAST(w * 1000000 div w_max AS BIGINT)"))
       .select("pos", "n_vecs", "w_unit", "comp_ppm")
-      .orderBy("pos")
   }
 
   val embedPcaPowerSql: String =

@@ -122,25 +122,31 @@ object TextAnalysis {
     * engines, floor is a pure IEEE op chain → bit-identical in the
     * oracle.
     */
-  def textQuality(s: SparkSession, dir: String): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
-    Tables.documents(s, dir)
+  def textQuality(s: SparkSession, dir: String): DataFrame =
+    qualityFor(Tables.documents(s, dir))
+      .withColumn("avg_word_len",
+        expr(q6("CAST(aggregate(words, 0L, (acc, w) -> acc + length(w)) AS DOUBLE) / n_words")))
+      .select("doc_id", "n_words", "distinct_ratio", "stop_ratio", "avg_word_len", "score")
+      .orderBy("doc_id")
+
+  /** The quality columns of text_quality over a `text` column: adds
+    * `words`, `n_words`, `distinct_ratio`, `stop_ratio` and the
+    * composite `score`. Shared by corpus_curate, the streaming
+    * [[graft.streaming.IngestPipeline.curate]] and
+    * [[graft.api.CorpusOps.qualityScore]].
+    */
+  private[graft] def qualityFor(docs: DataFrame): DataFrame =
+    docs
       .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
       .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
       .withColumn("distinct_ratio",
         expr(q6("CAST(size(array_distinct(words)) AS DOUBLE) / n_words")))
       .withColumn("stop_ratio",
         expr(q6("CAST(size(filter(words, w -> array_contains(array('the', 'a', 'and', 'of', 'to'), w))) AS DOUBLE) / n_words")))
-      .withColumn("avg_word_len",
-        expr(q6("CAST(aggregate(words, 0L, (acc, w) -> acc + length(w)) AS DOUBLE) / n_words")))
       .withColumn("score",
         expr(q6("CAST(0.4 AS DOUBLE) * least(CAST(1 AS DOUBLE), CAST(n_words AS DOUBLE) / CAST(200 AS DOUBLE)) + CAST(0.3 AS DOUBLE) * distinct_ratio + CAST(0.3 AS DOUBLE) * stop_ratio")))
-      .select("doc_id", "n_words", "distinct_ratio", "stop_ratio", "avg_word_len", "score")
-      .orderBy("doc_id")
-  }
 
   val textQualitySql: String = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
     val dr = q6("CAST(len(list_distinct(words)) AS DOUBLE) / n_words")
     val sr = q6("CAST(len(list_filter(words, w -> list_contains(['the', 'a', 'and', 'of', 'to'], w))) AS DOUBLE) / n_words")
     val awl = q6("CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(words, w -> CAST(length(w) AS BIGINT))), (acc, x) -> acc + x) AS DOUBLE) / n_words")
@@ -202,23 +208,33 @@ object TextAnalysis {
     * prove the rewrite. Pure map-side regex column math — the shape of
     * every production PII pass.
     */
-  def textPiiScrub(s: SparkSession, dir: String): DataFrame = {
+  def textPiiScrub(s: SparkSession, dir: String): DataFrame =
+    piiScrubFor(Tables.documents(s, dir)
+      .withColumn("dirty", expr(
+        """concat(text,
+          |  CASE WHEN doc_id % 5 = 0 THEN concat(' contact user', doc_id, '@example.com now') ELSE '' END,
+          |  CASE WHEN doc_id % 7 = 0 THEN concat(' from 10.0.', doc_id % 256, '.', doc_id % 100, ' logged') ELSE '' END)""".stripMargin)),
+      "dirty")
+      .select(col("doc_id"), col("n_emails"), col("n_ips"),
+        expr(sparkFingerprint("dirty")).as("scrub_fp"))
+      .orderBy("doc_id")
+
+  /** The text_pii_scrub body: adds `n_emails` and `n_ips` counted in
+    * `textCol` and redacts `textCol` in place; shared with
+    * [[graft.api.CorpusOps.piiScrub]].
+    */
+  private[graft] def piiScrubFor(docs: DataFrame, textCol: String): DataFrame = {
     // Spark SQL string literals eat single backslashes (\b -> backspace),
     // so regexes embedded in expr() text must double them
     def sqlRe(re: String) = re.replace("\\", "\\\\")
     val (em, ip) = (sqlRe(EmailRe), sqlRe(Ipv4Re))
-    Tables.documents(s, dir)
-      .withColumn("dirty", expr(
-        """concat(text,
-          |  CASE WHEN doc_id % 5 = 0 THEN concat(' contact user', doc_id, '@example.com now') ELSE '' END,
-          |  CASE WHEN doc_id % 7 = 0 THEN concat(' from 10.0.', doc_id % 256, '.', doc_id % 100, ' logged') ELSE '' END)""".stripMargin))
-      .select(col("doc_id"),
-        expr(s"CAST(size(regexp_extract_all(dirty, '$em', 0)) AS BIGINT)").as("n_emails"),
-        expr(s"CAST(size(regexp_extract_all(dirty, '$ip', 0)) AS BIGINT)").as("n_ips"),
-        expr(sparkFingerprint(
-          s"regexp_replace(regexp_replace(dirty, '$em', '<EMAIL>'), '$ip', '<IP>')"))
-          .as("scrub_fp"))
-      .orderBy("doc_id")
+    docs
+      .withColumn("n_emails",
+        expr(s"CAST(size(regexp_extract_all($textCol, '$em', 0)) AS BIGINT)"))
+      .withColumn("n_ips",
+        expr(s"CAST(size(regexp_extract_all($textCol, '$ip', 0)) AS BIGINT)"))
+      .withColumn(textCol,
+        expr(s"regexp_replace(regexp_replace($textCol, '$em', '<EMAIL>'), '$ip', '<IP>')"))
   }
 
   val textPiiScrubSql: String =

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.operators.TextAnalysis
 
 /** The end-to-end streaming corpus ingest: documents arrive as an
   * unbounded stream and flow through fingerprint → watermarked dedup →
@@ -26,21 +27,11 @@ object IngestPipeline {
   /** stream-side curation: input columns (doc_id, text, ts); output
     * adds fingerprint, n_words, score, keep.
     */
-  def curate(docs: DataFrame, watermarkDelay: String = "1 hour"): DataFrame = {
-    def q6(e: String) = s"floor(($e) * 1000000) / CAST(1000000 AS DOUBLE)"
-    docs
+  def curate(docs: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
+    TextAnalysis.qualityFor(docs
       .withColumn("fp", expr(PortableHash.sparkFingerprint("text")))
       .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("fp")
-      .withColumn("words", expr("filter(split(text, ' '), w -> w <> '')"))
-      .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
-      .withColumn("distinct_ratio",
-        expr(q6("CAST(size(array_distinct(words)) AS DOUBLE) / n_words")))
-      .withColumn("stop_ratio",
-        expr(q6("CAST(size(filter(words, w -> array_contains(array('the', 'a', 'and', 'of', 'to'), w))) AS DOUBLE) / n_words")))
-      .withColumn("score",
-        expr(q6("CAST(0.4 AS DOUBLE) * least(CAST(1 AS DOUBLE), CAST(n_words AS DOUBLE) / CAST(200 AS DOUBLE)) + CAST(0.3 AS DOUBLE) * distinct_ratio + CAST(0.3 AS DOUBLE) * stop_ratio")))
+      .dropDuplicatesWithinWatermark("fp"))
       .withColumn("keep", col("n_words") >= MinWords && col("score") >= MinScore)
       .select("doc_id", "ts", "fp", "n_words", "score", "keep")
-  }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query `.explain("formatted")` dumps for the optimization-round
@@ -9,6 +10,9 @@ import graft.{GraftSession, SparkEntry}
   * this dumps the FORMATTED initial physical plan of the named queries
   * only, to one file each — the artifact the judge diffs for Exchange
   * counts, join strategies and PushedFilters.
+  *
+  * Tokens that change between two dumps of the same tree are stripped
+  * ([[normalise]]), so a before/after pair compares with a plain `diff`.
   *
   *   sbt "runMain graft.tools.PlanDump plans/r16 _before /root/testdata/sf0.01 q1 q2 ..."
   */
@@ -21,12 +25,29 @@ object PlanDump {
     val spark = GraftSession.build("graft-plan-dump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/$name$suffix.txt"), txt)
+      Files.writeString(Paths.get(s"$outDir/$name$suffix.txt"), dump(spark, sfDir, name))
       println(s"[plan-dump] $name -> $outDir/$name$suffix.txt")
     }
     spark.stop()
+  }
+
+  /** the normalised formatted physical plan of one query key. */
+  def dump(spark: SparkSession, sfDir: String, name: String): String =
+    normalise(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+
+  /** strips expression ids (`#N`), the JVM-global `plan_id=N` and RDD
+    * call-site lines (`<File>.scala:N`). RDD ids stay as identities but
+    * are numbered by first appearance: a checkpointed rung is a new RDD
+    * on every build, so its SparkContext-global id differs between two
+    * dumps while "these two scans read the same RDD" does not.
+    */
+  def normalise(plan: String): String = {
+    val rdds = scala.collection.mutable.Map.empty[String, Int]
+    "RDD\\[(\\d+)\\]".r.replaceAllIn(
+      plan.replaceAll("#\\d+", "")
+        .replaceAll("plan_id=\\d+", "plan_id=")
+        .replaceAll("(\\w+\\.scala):\\d+", "$1"),
+      m => s"RDD[${rdds.getOrElseUpdate(m.group(1), rdds.size)}]")
   }
 }

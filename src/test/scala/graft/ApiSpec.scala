@@ -582,6 +582,21 @@ class ApiSpec extends SparkSpec {
     assert(out(1L).getAs[String]("body").startsWith("the quick"))
   }
 
+  test("api twins keep the contract keys' overflow guards") {
+    import spark.implicits._
+    // one 1-hour gap at unitUs = 1: gap² = 1.296e19 passes 2⁶³, which
+    // events_burstiness's DECIMAL(38,0) moment absorbs
+    val ev = Seq((1L, "a", 0L, 1L), (1L, "a", 3600000000L, 2L)).toDF("k", "g", "ts_us", "id")
+    val b = EventOps.burstiness(ev, "g", "k", "ts_us", "id", unitUs = 1L).collect()
+    assert(b.length == 1 && b(0).getAs[Long]("n_gaps") == 1L)
+    assert(b(0).getAs[Long]("mean_gap_units") == 3600000000L)
+    // 4.0e6 → 4e9 milli, squared 1.6e19 > 2⁶³ (embed_dim_stats's s2)
+    val v = Seq((1L, Seq(4.0e6, 1.0))).toDF("id", "embedding")
+    val d = CorpusOps.embeddingDimStats(v).collect().map(r => r.getAs[Long]("pos") -> r).toMap
+    assert(d.size == 2 && d(0L).getAs[Long]("max_milli") == 4000000000L)
+    assert(d(0L).getAs[Long]("mean_ppm") == 4000000000000L)
+  }
+
   test("CorpusOps.lmScore: mojibake-charactered doc scores lowest in its corpus") {
     import spark.implicits._
     val docs = Seq(

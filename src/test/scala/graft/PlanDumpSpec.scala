@@ -1,0 +1,26 @@
+package graft
+
+import graft.tools.PlanDump
+
+/** PlanDump strips the tokens that change between two dumps of the same
+  * tree, so plans/rNN before/after pairs compare with a plain diff.
+  */
+class PlanDumpSpec extends SparkSpec {
+
+  test("PlanDump: two dumps of dedup_clusters in one JVM are byte-identical") {
+    val a = PlanDump.dump(spark, sfDir, "dedup_clusters")
+    val b = PlanDump.dump(spark, sfDir, "dedup_clusters")
+    assert(a.contains("Exchange") && a.contains("plan_id="), "no exchange dumped")
+    assert(a == b)
+  }
+
+  test("PlanDump.normalise: expression ids, plan ids and call-site lines go, RDD identities stay") {
+    val raw = "Exchange hashpartitioning(doc_id#12L, 4), ENSURE_REQUIREMENTS, [plan_id=1158]\n" +
+      "Scan ExistingRDD[doc_id#7L] MapPartitionsRDD[42] at checkpoint at Materialize.scala:48\n" +
+      "MapPartitionsRDD[17] at checkpoint at Ladder.scala:60 MapPartitionsRDD[42]"
+    assert(PlanDump.normalise(raw) ==
+      "Exchange hashpartitioning(doc_idL, 4), ENSURE_REQUIREMENTS, [plan_id=]\n" +
+      "Scan ExistingRDD[doc_idL] MapPartitionsRDD[0] at checkpoint at Materialize.scala\n" +
+      "MapPartitionsRDD[1] at checkpoint at Ladder.scala MapPartitionsRDD[0]")
+  }
+}

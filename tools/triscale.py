@@ -72,20 +72,25 @@ def main():
     # the three parity legs are independent (each its own DuckDB over
     # its own dump dir) — run them concurrently; the sf0.1 leg's serial
     # oracle replay dominates the wall either way
-    from concurrent.futures import ThreadPoolExecutor
+    # each leg's verdict prints as soon as that leg finishes, so a run
+    # stopped during the long sf0.1 leg still shows the finished ones
+    from concurrent.futures import ThreadPoolExecutor, as_completed
+    results = {}
     with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [(sf, outdir,
-                 ex.submit(run_parity, f"/root/testdata/{sf}", outdir))
-                for sf, outdir in zip(SCALES, outdirs)]
-        results = [(sf, outdir, f.result()) for sf, outdir, f in futs]
-    for sf, _outdir, (oks, fails, _) in results:
+        futs = {ex.submit(run_parity, f"/root/testdata/{sf}", outdir): sf
+                for sf, outdir in zip(SCALES, outdirs)}
+        for f in as_completed(futs):
+            sf = futs[f]
+            results[sf] = oks, fails, _ = f.result()
+            print(f"{sf}: {len(oks)} ok, {len(fails)} fail", flush=True)
+    for sf in SCALES:
+        oks, fails, _ = results[sf]
         record["scales"][sf] = {"ok": len(oks), "fail": len(fails),
                                 "failed_queries": fails}
         ks = set(oks) | set(fails)
         keys = ks if keys is None else keys
         if ks != keys:
             sys.exit(f"query-key drift between scales: {ks ^ keys}")
-        print(f"{sf}: {len(oks)} ok, {len(fails)} fail")
     record["queries"] = sorted(keys)
     record["all_green"] = all(s["fail"] == 0 for s in record["scales"].values())
     with open("TRISCALE.json", "w") as f:
