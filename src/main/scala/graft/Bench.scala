@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
@@ -49,11 +50,14 @@ object Bench {
         case t: Throwable => System.err.println(s"[bench] warmup failed: $t")
       })
 
+  /** `Runs` timed seconds, sorted, and the Janino compiles they paid. */
+  case class Timed(seconds: Seq[Double], compiles: Long)
+
   /** The one timing loop, shared by the suite, the control keys and
-    * [[graft.tools.BenchProbe]]: the `Runs` timed `count()` seconds of
-    * `name`, sorted, or None when a timed run throws.
+    * [[graft.tools.BenchProbe]]: the `Runs` timed `count()`s of `name`,
+    * or None when a timed run throws.
     */
-  def time(spark: SparkSession, sfDir: String, name: String): Option[Seq[Double]] = {
+  def time(spark: SparkSession, sfDir: String, name: String): Option[Timed] = {
     val fn = SparkEntry.queries(name)
     // drop the PREVIOUS query's Materialize.stable blocks before this
     // query starts: across 100+ queries the CacheManager otherwise
@@ -67,19 +71,24 @@ object Bench {
     // land in the first; profile-driven C2 recompilation of the
     // HOF-heavy kernels lands in the second — so the timed runs
     // measure steady-state throughput, the number a long-lived
-    // cluster actually sees
+    // cluster actually sees. Codegen stays in the first warm-up only
+    // because GraftSession.codegenCache holds a whole pass: with
+    // Spark's 100-entry default a key needing more classes than that
+    // compiled again on every timed run (bench.json's codegen_compiles)
     try { fn(spark, sfDir).count(); fn(spark, sfDir).count() }
     catch { case _: Throwable => () }
     // drain inherited allocation debt so the string-heavy queries
     // don't pay the PREVIOUS query's GC on their own clock
     System.gc()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val times = (1 to Runs).map { _ =>
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case t: Throwable =>
         System.err.println(s"[bench] $name FAILED: $t"); Double.NaN }
     }
-    if (times.exists(_.isNaN)) None else Some(times.sorted)
+    if (times.exists(_.isNaN)) None
+    else Some(Timed(times.sorted, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
   }
 
   def main(args: Array[String]): Unit = {
@@ -88,11 +97,11 @@ object Bench {
     warmup(spark, sfDir)
     val results = SparkEntry.queries.map { case (name, _) =>
       // a failed query reports -1, never its time-to-fail
-      time(spark, sfDir, name).fold(name -> (-1.0, 0.0)) { sorted =>
+      time(spark, sfDir, name).fold(name -> (-1.0, 0.0, -1L)) { case Timed(sorted, compiles) =>
         val med = sorted(Runs / 2)
         // trimmed spread: drop the single highest and lowest run
         name -> (med,
-          if (med > 0) (sorted(Runs - 2) - sorted(1)) / med else 0.0)
+          if (med > 0) (sorted(Runs - 2) - sorted(1)) / med else 0.0, compiles)
       }
     }
     // CONTROL KEYS, re-measured at a FIXED position (end of suite, same
@@ -113,16 +122,20 @@ object Bench {
     // now reads "audit-window host burst" from the artifact alone.
     val controlKeys = Seq("q_rollup", "glob_match", "dedup_banding_sweep")
     val controls = controlKeys.map { name =>
-      name -> time(spark, sfDir, name).fold(-1.0)(_(Runs / 2))
+      name -> time(spark, sfDir, name).fold(-1.0)(_.seconds(Runs / 2))
     }
     val controlJson = controls
       .map { case (k, m) => "\"" + k + "\":" + (if (m < 0) "-1" else f"$m%.6f") }
       .mkString("{", ",", "}")
     def jnum(v: Double, fmt: String) = if (v == -1.0) "-1" else fmt.format(v)
     def qmap(fmt: String) = results
-      .map { case (k, (m, _)) => s"\"" + k + "\":" + jnum(m, fmt) }
+      .map { case (k, (m, _, _)) => s"\"" + k + "\":" + jnum(m, fmt) }
       .mkString("{", ",", "}")
-    val spreads = results.map { case (k, (_, sp)) => s"\"" + k + "\":" + f"$sp%.3f" }
+    val spreads = results.map { case (k, (_, sp, _)) => s"\"" + k + "\":" + f"$sp%.3f" }
+      .mkString("{", ",", "}")
+    // Janino compiles during each key's timed runs (-1: the key failed);
+    // 0 unless the codegen cache lost a class the warm-ups compiled
+    val compiles = results.map { case (k, (_, _, c)) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     val total = results.values.map(_._1).filter(_ >= 0).sum
     val failed = results.values.count(_._1 < 0)
@@ -131,7 +144,7 @@ object Bench {
     // separately keeps the contract-tier number comparable across
     // rounds (benchdiff compares within tiers)
     val auditTotal = results.collect {
-      case (k, (m, _)) if SparkEntry.auditTier(k) && m >= 0 => m }.sum
+      case (k, (m, _, _)) if SparkEntry.auditTier(k) && m >= 0 => m }.sum
     val contractTotal = total - auditTotal
     val auditKeys = results.keys.filter(SparkEntry.auditTier)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -141,7 +154,7 @@ object Bench {
     // per-query map at 100+ queries overflows that window and parses as
     // nothing (rounds 3 AND 4 had BENCH parsed:null from exactly this).
     // The line stays parse-able at any future query count by construction.
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","runs":$Runs,"stat":"median","tiers":{"contract":${"%.3f".format(contractTotal)},"audit":${"%.3f".format(auditTotal)}},"audit_keys":$auditKeys,"control":$controlJson,"queries":${qmap("%.6f")},"spread":$spreads,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","runs":$Runs,"stat":"median","tiers":{"contract":${"%.3f".format(contractTotal)},"audit":${"%.3f".format(auditTotal)}},"audit_keys":$auditKeys,"control":$controlJson,"queries":${qmap("%.6f")},"spread":$spreads,"codegen_compiles":$compiles,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val compact = s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","runs":$Runs,"stat":"median","n_queries":${results.size},"failed":$failed,"contract_sec":${"%.3f".format(contractTotal)},"audit_sec":${"%.3f".format(auditTotal)},"control":$controlJson,"sf":"$sfDir"}"""

@@ -26,12 +26,31 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(codegenCache)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     checkpointDir(spark)
     graft.expressions.GraftFunctions.register(spark)
     spark
   }
+
+  /** Keeps a session's generated classes in Spark's codegen cache, so a
+    * query compiles only the first time it runs. Passed to the builder by
+    * build() and by the test session, before the session exists: the
+    * cache size is a static setting, read once per JVM.
+    */
+  val codegenCache: Map[String, String] = Map(
+    // the JVM-wide Janino cache holds 100 classes by default, while one
+    // pass over SparkEntry.queries compiles 2,869 distinct classes at
+    // sf0.001 and 2,877 at sf0.1 (Verify's action, nothing evicted) —
+    // so the default missed on every query_mix op. 4096 is the power of
+    // two above the larger count
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // AQE numbers whole-stage stages in the order they finish and the
+    // number goes into the class name (GeneratedIteratorForCodegenStage17
+    // vs …16), so an identical stage body was a new class on the next
+    // run; without the id it is one cache entry whatever AQE numbers it
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Give the session a reliable-checkpoint home for ladder rung state
     * (Materialize.iteration), unless the caller already set one — on a

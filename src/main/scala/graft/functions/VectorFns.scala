@@ -5,9 +5,14 @@ package graft.functions
   * sides ⇒ bit-identical IEEE results, so the oracle can reproduce
   * cosine scores exactly).
   *
-  * Spark side is pure HOFs (`zip_with` + `aggregate`) — codegen'd,
-  * no UDF; a dot product never leaves the row, so similarity scans are
-  * map-side until the top-k / bucket join.
+  * Spark side is pure HOFs (`zip_with` + `aggregate`), no UDF; a dot
+  * product never leaves the row, so similarity scans are map-side until
+  * the top-k / bucket join. The HOFs do not codegen: in Spark 4.1.2
+  * `ArrayAggregate`, `ZipWith` and `ArrayTransform` are
+  * `CodegenFallback`, so `sparkDot`/`sparkSqDist`/`sparkNorm`/
+  * `sparkToDouble` evaluate every element through an interpreted
+  * `eval` (the `graft_*` kernels in [[graft.expressions]] are the
+  * compiled spelling).
   */
 object VectorFns {
 

@@ -19,7 +19,7 @@ object BenchProbe {
     val spark = GraftSession.build("graft-bench-probe")
     graft.Bench.warmup(spark, sfDir)
     for (name <- args) {
-      val times = graft.Bench.time(spark, sfDir, name).getOrElse(sys.error(s"$name failed"))
+      val times = graft.Bench.time(spark, sfDir, name).getOrElse(sys.error(s"$name failed")).seconds
       // machine-parsed by the BENCH_SOLO collector (one fresh JVM per
       // query): name, median of 5, min, max
       println(f"[solo] $name median=${times(graft.Bench.Runs / 2)}%.3f min=${times.head}%.3f max=${times.last}%.3f")

@@ -36,8 +36,10 @@ object PlanDump {
     normalise(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
 
-  /** strips expression ids (`#N`), the JVM-global `plan_id=N` and RDD
-    * call-site lines (`<File>.scala:N`). RDD ids stay as identities but
+  /** strips expression ids (`#N`), the JVM-global `plan_id=N`, RDD
+    * call-site lines (`<File>.scala:N`) and the per-JVM part of a Scala
+    * closure's name (`Ranks$$$Lambda$3905/0x00007f994d04d688@207d6c18`
+    * becomes `Ranks$$$Lambda`). RDD ids stay as identities but
     * are numbered by first appearance: a checkpointed rung is a new RDD
     * on every build, so its SparkContext-global id differs between two
     * dumps while "these two scans read the same RDD" does not.
@@ -47,7 +49,8 @@ object PlanDump {
     "RDD\\[(\\d+)\\]".r.replaceAllIn(
       plan.replaceAll("#\\d+", "")
         .replaceAll("plan_id=\\d+", "plan_id=")
-        .replaceAll("(\\w+\\.scala):\\d+", "$1"),
+        .replaceAll("(\\w+\\.scala):\\d+", "$1")
+        .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+", "\\$\\$Lambda"),
       m => s"RDD[${rdds.getOrElseUpdate(m.group(1), rdds.size)}]")
   }
 }

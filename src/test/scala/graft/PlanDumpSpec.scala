@@ -23,4 +23,10 @@ class PlanDumpSpec extends SparkSpec {
       "Scan ExistingRDD[doc_idL] MapPartitionsRDD[0] at checkpoint at Materialize.scala\n" +
       "MapPartitionsRDD[1] at checkpoint at Ladder.scala MapPartitionsRDD[0]")
   }
+
+  test("PlanDump.normalise: a closure's lambda number, address and hash go") {
+    val raw = "MapPartitions graft.operators.Ranks$$$Lambda$3905/0x00007f994d04d688@207d6c18, obj#41: org.apache.spark.sql.Row"
+    assert(PlanDump.normalise(raw) ==
+      "MapPartitions graft.operators.Ranks$$$Lambda, obj: org.apache.spark.sql.Row")
+  }
 }

@@ -24,6 +24,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.codegenCache)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the reliable-checkpoint home GraftSession.build sets, set once for
