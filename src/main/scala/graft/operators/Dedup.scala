@@ -175,14 +175,13 @@ object Dedup {
       .withColumn("bucket", expr("CAST(length(bin(least(na, nb))) - 1 AS BIGINT)"))
       .select("doc_a", "doc_b", "bucket")
     val det = minhashPairs(docs).select("doc_a", "doc_b")
-    val hits = exact.join(det, Seq("doc_a", "doc_b"), "left_semi")
-    exact.groupBy("bucket").agg(count(lit(1)).as("n_exact"))
-      .join(hits.groupBy("bucket").agg(count(lit(1)).as("n_hits")), Seq("bucket"), "left")
-      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      .withColumn("recall_ppm", expr("n_hits * 1000000 div n_exact"))
-      .select("bucket", "n_exact", "n_hits", "recall_ppm")
+    LenBiasGrade.sweep(exact, det, Seq("doc_a", "doc_b"), by = Seq("bucket"))
+      .filter(col("bucket").isNotNull)
+      .select(col("bucket"), col("n_exact"), col("n_hits"), LenBiasGrade.recall)
       .orderBy("bucket")
   }
+
+  private val LenBiasGrade = Grade.Pairs("n_exact", "n_detected")
 
   // lazy: interpolates dedupMinhashSql, declared later in this object —
   // a strict val here would capture null (Scala init order), which
@@ -447,13 +446,14 @@ object Dedup {
     val d = Materialize.stable(docs)
     val exact = Materialize.stable(
       containmentPairsFor(d).select("doc_a", "doc_b"))
-    def schemeRow(scheme: String, printsExpr: String): DataFrame =
-      ContainmentGrade.counts(exact,
-          containmentCandidates(d, printsExpr, printCap, anchors), Seq("doc_a", "doc_b"))
-        .select(lit(scheme).as("scheme") +: ContainmentGrade.graded: _*)
-    schemeRow("manber", sparkContainmentPrints("text"))
-      .unionByName(schemeRow("winnow", sparkWinnowPrints("text")))
-      .orderBy("scheme")
+    val schemes = Seq("manber" -> sparkContainmentPrints("text"), "winnow" -> sparkWinnowPrints("text"))
+    val cand = schemes.map { case (scheme, printsExpr) =>
+      containmentCandidates(d, printsExpr, printCap, anchors)
+        .select(lit(scheme).as("scheme"), col("doc_a"), col("doc_b"))
+    }
+    ContainmentGrade.sweep(exact, cand.reduce(_ union _), Seq("doc_a", "doc_b"),
+        schemes.map { case (scheme, _) => struct(lit(scheme).as("scheme")) })
+      .select(col("scheme") +: ContainmentGrade.graded: _*).orderBy("scheme")
   }
 
   private def containmentCandidates(d: DataFrame, printsExpr: String,
@@ -1441,7 +1441,7 @@ object Dedup {
       .filter(expr("3 * i >= na + nb"))
       .select("doc_a", "doc_b")
     val det = minhashPairs(docs).select("doc_a", "doc_b")
-    MinhashGrade.counts(exact, det, Seq("doc_a", "doc_b")).select(MinhashGrade.graded: _*)
+    MinhashGrade.sweep(exact, det, Seq("doc_a", "doc_b")).select(MinhashGrade.graded: _*)
   }
 
   private val MinhashGrade = Grade.Pairs("n_exact_pairs", "n_detected_pairs")
@@ -1476,49 +1476,46 @@ object Dedup {
     * grades the alternatives so the choice is evidence, not folklore).
     *
     * Cost: the exact side (Σ df² inverted-index enumeration — the
-    * documented audit-path price) is paid ONCE and shared; each config
-    * adds one band-bucket self-join over the SAME materialized
-    * signature frame. Audit-tier: run on a stratified slice, like the
-    * recall gate.
+    * documented audit-path price) is paid ONCE and shared; the configs
+    * ride one band frame, so one band-bucket self-join over the SAME
+    * materialized signature frame serves them all, and one grading pass
+    * ([[Grade.Pairs.sweep]]) counts every config. Audit-tier: run on a
+    * stratified slice, like the recall gate.
     */
   def dedupBandingSweep(s: SparkSession, dir: String): DataFrame =
     bandingSweepFor(Tables.documents(s, dir))
 
   /** the sweep over ANY (doc_id, text) frame — library entry point. */
   def bandingSweepFor(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     val sig = Materialize.stable(docs
       .select(col("doc_id"), expr(sparkMinhash(sparkShingleHashes("text"))).as("mh")))
     val exact = Materialize.stable(shingleOverlap(docs)
       .filter(expr("3 * i >= na + nb"))
       .select("doc_a", "doc_b"))
-    val rows = BandingConfigs.map { case (nb, r) =>
-      val bands = sig
-        .select(col("doc_id"), explode(expr(s"sequence(0, ${nb - 1})")).as("b"), col("mh"))
-        .select(col("doc_id"), col("b"),
-          expr(s"array_join(transform(slice(mh, b * $r + 1, $r), x -> CAST(x AS STRING)), ':')").as("bv"))
-      val cand = bands.as("x").join(bands.as("y"),
-          col("x.b") === col("y.b") && col("x.bv") === col("y.bv") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      val det = cand
-        .join(sig.select(col("doc_id").as("doc_a"), col("mh").as("ma")), Seq("doc_a"))
-        .join(sig.select(col("doc_id").as("doc_b"), col("mh").as("mb")), Seq("doc_b"))
-        .filter(expr(s"2 * size(filter(sequence(1, $MinhashK), i -> element_at(ma, i) = element_at(mb, i))) >= $MinhashK"))
-        .select("doc_a", "doc_b")
-      s.range(1)
-        .select(lit(nb.toLong).as("bands"), lit(r.toLong).as("rows_per_band"))
-        .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-        .crossJoin(broadcast(det.agg(count(lit(1)).as("n_detected"))))
-        .crossJoin(broadcast(exact.join(det, Seq("doc_a", "doc_b"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))))
+    // every config's bands on one frame: the self-join, the distinct
+    // and the signature verify each run once for the whole sweep
+    val configs = BandingConfigs.map { case (nb, r) =>
+      struct(lit(nb.toLong).as("bands"), lit(r.toLong).as("rows_per_band"))
     }
-    rows.reduce(_ union _)
-      .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_exact"))))
+    val bands = sig.select(col("doc_id"), col("mh"), inline(array(configs: _*)))
+      .withColumn("b", explode(expr("sequence(0, CAST(bands AS INT) - 1)")))
+      .withColumn("bv", expr("array_join(transform(slice(mh, b * CAST(rows_per_band AS INT) + 1, " +
+        "CAST(rows_per_band AS INT)), x -> CAST(x AS STRING)), ':')"))
+    val cand = bands.as("x").join(bands.as("y"),
+        col("x.bands") === col("y.bands") && col("x.b") === col("y.b") &&
+          col("x.bv") === col("y.bv") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.bands"), col("x.rows_per_band"),
+        col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct()
+      .join(sig.select(col("doc_id").as("doc_a"), col("mh").as("ma")), Seq("doc_a"))
+      .join(sig.select(col("doc_id").as("doc_b"), col("mh").as("mb")), Seq("doc_b"))
+      .withColumn("det", expr(s"2 * size(filter(sequence(1, $MinhashK), " +
+        s"i -> element_at(ma, i) = element_at(mb, i))) >= $MinhashK"))
+      .select("bands", "rows_per_band", "doc_a", "doc_b", "det")
+    BandingGrade.sweep(exact, cand, Seq("doc_a", "doc_b"), configs,
+        detected = col("det"), more = Seq(count(col(Grade.InFound)).as("n_candidates")))
       .select(Seq("bands", "rows_per_band", "n_candidates", "n_detected", "n_exact", "n_hits")
-        .map(col) ++ BandingGrade.ppms: _*)
-      .orderBy("bands")
+        .map(col) ++ BandingGrade.ppms: _*).orderBy("bands")
   }
 
   val dedupBandingSweepSql: String = {

@@ -45,6 +45,12 @@ object Grade {
   def ppmSql(hits: String, of: String): String =
     s"CASE WHEN $of = 0 THEN 0 ELSE $hits * 1000000 // $of END"
 
+  /** Marks an exact pair among [[Pairs.sweep]]'s graded rows. */
+  val InExact = "in_exact"
+
+  /** Marks a found row among [[Pairs.sweep]]'s graded rows. */
+  val InFound = "in_found"
+
   /** A pair-set grade: the exact pair count, the found (candidate or
     * detected) pair count, the exact pairs found (`n_hits`), and recall
     * and precision ppm over them. The two count names are per gate
@@ -52,25 +58,51 @@ object Grade {
     */
   final case class Pairs(nExact: String, nFound: String) {
 
-    /** The three counts as one row. Hits are the exact pairs that also
-      * appear in `found` on `keys`; the found and hit counts broadcast
-      * onto the exact count, so the row costs no shuffle of its own.
+    /** Grades every config of a sweep in one pass. Each of `configs` is
+      * one literal struct whose fields are the config columns; `found`
+      * carries those columns next to `keys`. A generate fans `exact` out
+      * to every config, one full join on (config, keys) meets it with
+      * `found`, and one aggregate by config counts the exact pairs
+      * (nExact), the found rows that pass `detected` (nFound) and the
+      * exact pairs among those (`n_hits`). `more` adds aggregates over
+      * the same rows, where [[InExact]] and [[InFound]] mark each side.
+      * One row of nulls per config joins the aggregate, so every config
+      * of the list gets a row, also when it found nothing; without
+      * configs the grade is one row. `by` names exact-side columns to
+      * group on as well; found rows with no exact pair, and the null
+      * row, group under null there.
+      *
+      * Precondition: `found` is unique on (config, keys) and `exact` is
+      * unique on `keys`, so no pair is counted twice.
       */
-    def counts(exact: DataFrame, found: DataFrame, keys: Seq[String]): DataFrame =
-      exact.agg(count(lit(1)).as(nExact))
-        .crossJoin(broadcast(found.agg(count(lit(1)).as(nFound))))
-        .crossJoin(broadcast(exact.join(found, keys, "left_semi").agg(count(lit(1)).as("n_hits"))))
+    def sweep(exact: DataFrame, found: DataFrame, keys: Seq[String],
+        configs: Seq[Column] = Nil, by: Seq[String] = Nil,
+        detected: Column = lit(true), more: Seq[Column] = Nil): DataFrame = {
+      val fan = if (configs.isEmpty) Nil else Seq(inline(array(configs: _*)))
+      val seeds = exact.sparkSession.range(1).select(fan: _*)
+      val cfg = seeds.columns.toSeq
+      val isFound = col(InFound) && detected
+      exact.select((keys ++ by).map(col) ++ fan :+ lit(true).as(InExact): _*)
+        .join(found.withColumn(InFound, lit(true)), cfg ++ keys, "full")
+        .unionByName(seeds, allowMissingColumns = true)
+        .groupBy((cfg ++ by).map(col): _*)
+        .agg(count(col(InExact)).as(nExact), count(when(isFound, 1)).as(nFound) +:
+          count(when(col(InExact) && isFound, 1)).as("n_hits") +: more: _*)
+    }
 
-    /** recall_ppm (hits over exact) and precision_ppm (hits over found). */
-    def ppms: Seq[Column] =
-      Seq(ppm("n_hits", nExact).as("recall_ppm"), ppm("n_hits", nFound).as("precision_ppm"))
+    /** recall_ppm: hits over exact. */
+    def recall: Column = ppm("n_hits", nExact).as("recall_ppm")
+
+    /** [[recall]] and precision_ppm (hits over found). */
+    def ppms: Seq[Column] = Seq(recall, ppm("n_hits", nFound).as("precision_ppm"))
 
     /** The three counts followed by [[ppms]]. */
     def graded: Seq[Column] = Seq(col(nExact), col(nFound), col("n_hits")) ++ ppms
 
-    /** [[counts]]' oracle as three select items over the CTEs `exact`,
-      * `found` and `hits`; `where` narrows found and hits to one config
-      * of a sweep (a correlated predicate such as " WHERE w = c.w").
+    /** The oracle of [[sweep]]'s three counts, as select items over the
+      * CTEs `exact`, `found` and `hits`; `where` narrows found and hits
+      * to one config of a sweep (a correlated predicate such as
+      * " WHERE w = c.w").
       */
     def countsSql(found: String, where: String = ""): String =
       s"""(SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS $nExact,

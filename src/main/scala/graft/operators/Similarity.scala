@@ -1513,25 +1513,22 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", expr(sparkCosine("qv", "v")))
       .select("query_id", "neighbor_id", "crank", "cosine"))
-    val rows = ProbeSweepConfigs.map { np =>
-      val joined = scored.filter(col("crank") <= np)
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      val approx = joined
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= KnnK)
-        .select("query_id", "neighbor_id")
-      s.range(1).select(lit(np.toLong).as("nprobe"))
-        .crossJoin(broadcast(joined.agg(count(lit(1)).as("n_candidates"))))
-        .crossJoin(broadcast(exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hit"))))
-    }
-    rows.reduce(_ union _)
-      .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_exact"))))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .select("nprobe", "n_candidates", "n_exact", "n_hit", "recall_ppm")
-      .orderBy("nprobe")
+    // each config's candidates are the scored rows within its probe
+    // rank; its approx top-k is their rank ≤ k flag, and one grading
+    // pass counts candidates and hits for every config
+    val configs = ProbeSweepConfigs.map(np => struct(lit(np.toLong).as("nprobe")))
+    val cand = scored.select(col("*"), inline(array(configs: _*)))
+      .filter(col("crank") <= col("nprobe"))
+      .withColumn("rank", row_number().over(Window.partitionBy("nprobe", "query_id")
+        .orderBy(col("cosine").desc, col("neighbor_id"))))
+      .select("nprobe", "query_id", "neighbor_id", "rank")
+    ProbeGrade.sweep(exact, cand, Seq("query_id", "neighbor_id"), configs,
+        detected = col("rank") <= KnnK, more = Seq(count(col(Grade.InFound)).as("n_candidates")))
+      .select(col("nprobe"), col("n_candidates"), col("n_exact"), col("n_hits").as("n_hit"),
+        ProbeGrade.recall).orderBy("nprobe")
   }
+
+  private val ProbeGrade = Grade.Pairs("n_exact", "n_approx")
 
   val knnProbeSweepSql: String = {
     val ctes = ProbeSweepConfigs.map { np =>
@@ -2301,10 +2298,14 @@ object Similarity {
         Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rank") <= KnnK)
       .select(col("query_id"), col("vec_id").as("neighbor_id")))
-    def phaseRow(name: String, cents: DataFrame): DataFrame = {
+    // one phase's IVF top-k and its one-row cell balance, both tagged
+    // with the phase
+    def phase(name: String, cents: DataFrame): (DataFrame, DataFrame) = {
       val assign = Materialize.stable(cellAssign(union, Materialize.stable(cents)))
       val bal = assign.groupBy("cell").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("n_cells"), max("n").as("max_n"), sum("n").as("t"))
+        .select(lit(name).as("phase"), col("n_cells"),
+          expr("max_n * 1000000 div t").as("max_cell_share_ppm"))
       val qc = assign.join(queries, col("vec_id") === col("query_id"))
         .select(col("query_id"), col("cell"), col("qv"))
       val ivf = qc
@@ -2315,14 +2316,8 @@ object Similarity {
         .withColumn("rank", row_number().over(
           Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
         .filter(col("rank") <= KnnK)
-        .select("query_id", "neighbor_id")
-      val hits = exact.join(ivf, Seq("query_id", "neighbor_id"), "left_semi")
-      exact.agg(count(lit(1)).as("n_exact"))
-        .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-        .crossJoin(broadcast(bal))
-        .select(lit(name).as("phase"), col("n_cells"),
-          expr("max_n * 1000000 div t").as("max_cell_share_ppm"),
-          col("n_exact"), col("n_hits"), Grade.ppm("n_hits", "n_exact").as("recall_ppm"))
+        .select(lit(name).as("phase"), col("query_id"), col("neighbor_id"))
+      (ivf, bal)
     }
     val nUnion = union.count()
     val mR = centroidModFor(nUnion)
@@ -2330,10 +2325,16 @@ object Similarity {
       .filter(expr(s"pmod(${graft.functions.PortableHash.sparkWordHash(
         "CAST(vec_id AS STRING)")}, $mR)") === lit(SeedResidue.toLong))
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    phaseRow("frozen", refineCents(vecs))
-      .unionByName(phaseRow("refreshed", refineCentsFromSeeds(union, seedsR)))
-      .orderBy("phase")
+    val (ivf, bal) = Seq("frozen" -> refineCents(vecs),
+      "refreshed" -> refineCentsFromSeeds(union, seedsR)).map((phase _).tupled).unzip
+    RefreshGrade.sweep(exact, ivf.reduce(_ union _), Seq("query_id", "neighbor_id"),
+        Seq("frozen", "refreshed").map(p => struct(lit(p).as("phase"))))
+      .join(bal.reduce(_ union _), Seq("phase"))
+      .select(col("phase"), col("n_cells"), col("max_cell_share_ppm"), col("n_exact"),
+        col("n_hits"), RefreshGrade.recall).orderBy("phase")
   }
+
+  private val RefreshGrade = Grade.Pairs("n_exact", "n_ivf")
 
   val knnIvfRefreshSql: String =
     s"""WITH vecs AS (
@@ -2566,9 +2567,12 @@ object Similarity {
       codes => pqRefineFromAssign(gridU,
         codes.select(col("vec_id"), col("m"), col("best.j").as("j"))),
       pqAssign(gridU, _))
-    def phaseRow(name: String, book: DataFrame, codesD: DataFrame): DataFrame = {
+    // one phase's reranked shortlist and its one-row code SSE, both
+    // tagged with the phase
+    def phase(name: String, book: DataFrame, codesD: DataFrame): (DataFrame, DataFrame) = {
       val sse = codesD.agg(
         expr("CAST(SUM(CAST(best.dist_sq AS DECIMAL(38,0))) AS BIGINT)").as("sse"))
+        .select(lit(name).as("phase"), col("sse"))
       val codes = codesD.select(col("vec_id"), col("m"), col("best.j").as("j"))
       val dt = gridU.join(broadcast(queries.select(col("query_id"))),
           col("vec_id") === col("query_id"))
@@ -2582,42 +2586,33 @@ object Similarity {
         .join(broadcast(dt), Seq("query_id", "m", "j"))
         .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
         .agg(sum("dti").as("adc_i"))
-      val ranked = Materialize.stable(adc.withColumn("srank",
+      val ranked = adc.withColumn("srank",
         row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("adc_i"), col("neighbor_id")))))
-      val adcTop = ranked.filter(col("srank") <= KnnK)
-        .select("query_id", "neighbor_id")
-      val rerankTop = ranked.filter(col("srank") <= PqShortlist)
+          .orderBy(col("adc_i"), col("neighbor_id"))))
+      // the shortlist holds the ADC top-k (srank ≤ k ≤ shortlist) and
+      // the reranked top-k (rank ≤ k) as two flags on one frame
+      val shortlist = ranked.filter(col("srank") <= PqShortlist)
         .join(union.select(col("vec_id").as("neighbor_id"), col("v")), Seq("neighbor_id"))
         .join(broadcast(queries), Seq("query_id"))
         .withColumn("cosine", expr(sparkCosine("qv", "v")))
         .withColumn("rank", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("cosine").desc, col("neighbor_id"))))
-        .filter(col("rank") <= KnnK)
-        .select("query_id", "neighbor_id")
-      // round 16 (guide §1.2 — fewer jobs on tiny frames): ONE grading
-      // pass over the exact side computes all three counts — the old
-      // spelling paid three separate aggregate jobs + three broadcast
-      // exchanges per phase. adcTop/rerankTop are (query, neighbor)-
-      // unique by their row_number filters, so the left joins cannot
-      // duplicate exact rows and count(flag) ≡ the old semi-join count.
-      exact
-        .join(adcTop.withColumn("hit_adc", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .join(rerankTop.withColumn("hit_rr", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          count(col("hit_adc")).as("n_hit_adc"),
-          count(col("hit_rr")).as("n_hit"))
-        .crossJoin(broadcast(sse))
-        .select(lit(name).as("phase"), col("sse"), col("n_exact"), col("n_hit_adc"),
-          Grade.ppm("n_hit_adc", "n_exact").as("recall_adc_ppm"),
-          col("n_hit"), Grade.ppm("n_hit", "n_exact").as("recall_ppm"))
+        .select(lit(name).as("phase"), col("query_id"), col("neighbor_id"), col("srank"), col("rank"))
+      (shortlist, sse)
     }
-    phaseRow("frozen", frozen.book, frozen.assign)
-      .unionByName(phaseRow("retrained", retrained.book, retrained.assign))
-      .orderBy("phase")
+    val (shortlist, sse) = Seq(phase("frozen", frozen.book, frozen.assign),
+      phase("retrained", retrained.book, retrained.assign)).unzip
+    PqRefreshGrade.sweep(exact, shortlist.reduce(_ union _), Seq("query_id", "neighbor_id"),
+        Seq("frozen", "retrained").map(p => struct(lit(p).as("phase"))),
+        detected = col("rank") <= KnnK,
+        more = Seq(count(when(col(Grade.InExact) && col("srank") <= KnnK, 1)).as("n_hit_adc")))
+      .join(sse.reduce(_ union _), Seq("phase"))
+      .select(col("phase"), col("sse"), col("n_exact"), col("n_hit_adc"),
+        Grade.ppm("n_hit_adc", "n_exact").as("recall_adc_ppm"),
+        col("n_hits").as("n_hit"), PqRefreshGrade.recall).orderBy("phase")
   }
+
+  private val PqRefreshGrade = Grade.Pairs("n_exact", "n_rerank")
 
   val knnIvfPqRefreshSql: String = {
     val wh = (e: String) => graft.functions.PortableHash.duckWordHash(s"CAST($e AS VARCHAR)")
@@ -2981,7 +2976,7 @@ object Similarity {
       .select(least(col("qid"), col("vec_id")).as("pa"),
         greatest(col("qid"), col("vec_id")).as("pb"))
       .distinct())
-    GeomBitsConfigs.map { bits =>
+    val (cand, occ) = GeomBitsConfigs.map { bits =>
       // round 16 (guide §5): the bucket frame is referenced THREE times
       // per config (query side, index side of the candidate self-join,
       // occupancy census) — materialize it so the tables·bits·Dim
@@ -2992,15 +2987,17 @@ object Similarity {
         .select(col("t"), col("bucket"), col("vec_id").as("qid"))
       val cand = qb.join(buckets, Seq("t", "bucket"))
         .filter(col("vec_id") =!= col("qid"))
-        .select(least(col("qid"), col("vec_id")).as("pa"),
+        .select(lit(bits.toLong).as("bits"), least(col("qid"), col("vec_id")).as("pa"),
           greatest(col("qid"), col("vec_id")).as("pb"))
         .distinct()
       val occ = buckets.groupBy("t", "bucket").count()
-        .agg(max("count").as("max_occupancy"))
-      GeomGrade.counts(exact, cand, Seq("pa", "pb"))
-        .crossJoin(broadcast(occ))
-        .select(lit(bits.toLong).as("bits") +: GeomGrade.graded :+ col("max_occupancy"): _*)
-    }.reduce(_ unionByName _).orderBy("bits")
+        .agg(lit(bits.toLong).as("bits"), max("count").as("max_occupancy"))
+      (cand, occ)
+    }.unzip
+    GeomGrade.sweep(exact, cand.reduce(_ union _), Seq("pa", "pb"),
+        GeomBitsConfigs.map(bits => struct(lit(bits.toLong).as("bits"))))
+      .join(occ.reduce(_ union _), Seq("bits"))
+      .select(col("bits") +: GeomGrade.graded :+ col("max_occupancy"): _*).orderBy("bits")
   }
 
   val embedGeometrySweepSql: String =

@@ -638,8 +638,9 @@ object Video {
     * Scale shape: signatures from ONE codec pass (shared, class-rep
     * collapsed); the exact side is anchored on a [[VideoSliceMax]]-id
     * class slice (broadcast frames join — the knn_bruteforce idiom,
-    * audit-tier slice contract); per config only the slice-anchored
-    * band join; occupancy a bucket-count rollup. Both-in-slice pairs
+    * audit-tier slice contract); one slice-anchored band join over
+    * every width's bands, one occupancy rollup and one grading pass
+    * ([[Grade.Pairs.sweep]]) for the whole sweep. Both-in-slice pairs
     * appear in both orientations of the exact frame join; count and
     * hamming sum double together, so the ≤ 2·frames predicate is
     * orientation-invariant (and the pair still groups to ONE row).
@@ -668,27 +669,31 @@ object Video {
           sum(expr("CAST(bit_count(la ^ lb) + bit_count(ha ^ hb) AS BIGINT)")).as("ht"))
         .filter(col("ht") <= lit(VideoDedupMaxMeanHamming) * col("nf"))
         .select("pa", "pb"))
-    VideoSweepWidths.map { w =>
-      val nb = 64 / w
-      val f0 = sigs.filter(col("frame_idx") === 0)
-        .select(col("doc_id"), explode(expr(
-          s"transform(sequence(0, ${nb - 1}), b -> named_struct('b', b, 'v', " +
-            s"CASE WHEN b < ${nb / 2} THEN shiftright(ahash_lo, b * $w) % ${1L << w} " +
-            s"ELSE shiftright(ahash_hi, (b - ${nb / 2}) * $w) % ${1L << w} END))")).as("band"))
-        .select(col("doc_id"), col("band.b").as("b"), col("band.v").as("v"))
-      val qf0 = f0.filter(col("doc_id") < VideoSliceMax)
-        .select(col("b"), col("v"), col("doc_id").as("qa"))
-      val cand = qf0.join(f0, Seq("b", "v"))
-        .filter(col("qa") =!= col("doc_id"))
-        .select(least(col("qa"), col("doc_id")).as("pa"),
-          greatest(col("qa"), col("doc_id")).as("pb"))
-        .distinct()
-      val occ = f0.groupBy("b", "v").count().agg(max("count").as("max_occupancy"))
-      SweepGrade.counts(exact, cand, Seq("pa", "pb"))
-        .crossJoin(broadcast(occ))
-        .select(Seq(lit(w.toLong).as("band_bits"), lit(nb.toLong).as("n_bands")) ++
-          SweepGrade.graded :+ col("max_occupancy"): _*)
-    }.reduce(_ unionByName _).orderBy("band_bits")
+    // every width's first-frame bands on one frame: one slice-anchored
+    // band join and one occupancy rollup serve the whole sweep
+    val configs = VideoSweepWidths.map(w =>
+      struct(lit(w.toLong).as("band_bits"), lit((64 / w).toLong).as("n_bands")))
+    val cfg = Seq("band_bits", "n_bands")
+    val f0 = sigs.filter(col("frame_idx") === 0)
+      .select(col("doc_id"), col("ahash_lo"), col("ahash_hi"), inline(array(configs: _*)))
+      .select(cfg.map(col) :+ col("doc_id") :+ explode(expr(
+        "transform(sequence(0, CAST(n_bands AS INT) - 1), b -> named_struct('b', b, 'v', " +
+          "CASE WHEN b < n_bands div 2 THEN shiftright(ahash_lo, b * CAST(band_bits AS INT)) " +
+          "ELSE shiftright(ahash_hi, (b - CAST(n_bands div 2 AS INT)) * CAST(band_bits AS INT)) END " +
+          "% shiftleft(CAST(1 AS BIGINT), CAST(band_bits AS INT))))")).as("band"): _*)
+      .select(cfg.map(col) ++ Seq(col("doc_id"), col("band.b").as("b"), col("band.v").as("v")): _*)
+    val qf0 = f0.filter(col("doc_id") < VideoSliceMax)
+      .select(col("band_bits"), col("b"), col("v"), col("doc_id").as("qa"))
+    val cand = qf0.join(f0, Seq("band_bits", "b", "v"))
+      .filter(col("qa") =!= col("doc_id"))
+      .select(cfg.map(col) ++ Seq(least(col("qa"), col("doc_id")).as("pa"),
+        greatest(col("qa"), col("doc_id")).as("pb")): _*)
+      .distinct()
+    val occ = f0.groupBy("band_bits", "b", "v").count()
+      .groupBy("band_bits").agg(max("count").as("max_occupancy"))
+    SweepGrade.sweep(exact, cand, Seq("pa", "pb"), configs)
+      .join(occ, Seq("band_bits"))
+      .select(cfg.map(col) ++ SweepGrade.graded :+ col("max_occupancy"): _*).orderBy("band_bits")
   }
 
   val videoBandSweepSql: String =

@@ -30,7 +30,7 @@ class CodegenCacheSpec extends SparkSpec {
     SparkEntry.queries(key)(spark, sfDir).collect()
   }
 
-  for (key <- Seq("dedup_minhash_recall", "video_band_sweep"))
+  for (key <- Seq("dedup_minhash_recall", "video_band_sweep", "dedup_banding_sweep"))
     test(s"$key: a second run compiles no class") {
       val first = compiles(run(key))
       val second = compiles(run(key))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions.sum
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The converge ladder ([[graft.operators.Ladder]]): its fixpoint rule,
-  * and a jobs-per-key ceiling for the ladder keys. A ladder pays
+  * and a jobs-per-key ceiling for the ladder keys and the recall and
+  * sweep gates. A ladder pays
   * about one Spark job per checkpoint, census and persist build, so its
   * job count is the cost lever (ROADMAP Direction 3): a change that adds
   * a rung checkpoint or a census read shows up here before it shows up
@@ -27,7 +28,17 @@ class LadderSpec extends SparkSpec {
     "bpe_train_converge" -> (20, 9),
     "embed_kmeans_converge" -> (36, 39),
     "knn_pq_train_converge" -> (29, 31),
-    "knn_ivf_pq_refresh" -> (40, 53))
+    "knn_ivf_pq_refresh" -> (40, 46),
+    // the recall and sweep gates, each graded in one pass
+    // (Grade.Pairs.sweep)
+    "dedup_minhash_recall" -> (1, 20),
+    "dedup_containment_recall" -> (1, 25),
+    "dedup_banding_sweep" -> (1, 24),
+    "dedup_len_bias" -> (1, 22),
+    "knn_probe_sweep" -> (2, 33),
+    "embed_geometry_sweep" -> (1, 41),
+    "video_band_sweep" -> (1, 24),
+    "knn_ivf_refresh" -> (8, 39))
 
   test("fixpoint fails naming the ladder when its census never repeats") {
     val e = intercept[IllegalArgumentException] {

@@ -1143,6 +1143,22 @@ class OperatorInvariantSpec extends SparkSpec {
     assert(prod.getAs[Long]("n_hits") == gate.getAs[Long]("n_hits"))
   }
 
+  test("recall gates: every config keeps its row, all zero, on an empty corpus") {
+    // a grade that only groups the graded rows would drop a config that
+    // found nothing; the gates must report it as a zero row instead
+    val empty = spark.range(0).select(col("id").as("doc_id"), lit("").as("text"))
+    for ((name, graded, nConfigs) <- Seq(
+        ("minhashRecallFor", operators.Dedup.minhashRecallFor(empty), 1),
+        ("bandingSweepFor", operators.Dedup.bandingSweepFor(empty), 4),
+        ("containmentRecallFor", operators.Dedup.containmentRecallFor(empty), 2))) {
+      val rows = graded.collect()
+      assert(rows.length == nConfigs, s"$name: ${rows.length} rows, want $nConfigs")
+      for (r <- rows; f <- r.schema.fieldNames if f.startsWith("n_") || f.endsWith("_ppm"))
+        assert(r.getAs[Long](f) == 0L, s"$name: $f = ${r.getAs[Any](f)}")
+      assert(rows.forall(r => r.getAs[Long]("recall_ppm") == 0L && r.getAs[Long]("precision_ppm") == 0L))
+    }
+  }
+
   test("knn_mrl_recall: grades every query against the exact top-k; refuses untrained prefixes") {
     val rows = operators.Similarity.knnMrlRecall(spark, sf).collect()
     assert(rows.length == operators.Similarity.QuerySetSize)

@@ -112,11 +112,10 @@ class PlanSpec extends SparkSpec {
       // and attaches its one-row totals
       "knn_ivf_balance",
       // round 9: knn_ivf_pq inherits the centroid-broadcast assignment
-      // cross from knn_ivf's build; dedup_minhash_recall combines three
-      // ONE-ROW count aggregates (the events_funnel shape);
-      // quality_dup_lift / corpus_dsir_weights / web_triangles attach
-      // their ONE-ROW totals via the q22 broadcast idiom
-      "knn_ivf_pq", "dedup_minhash_recall", "quality_dup_lift",
+      // cross from knn_ivf's build; quality_dup_lift /
+      // corpus_dsir_weights / web_triangles attach their ONE-ROW totals
+      // via the q22 broadcast idiom
+      "knn_ivf_pq", "quality_dup_lift",
       "corpus_dsir_weights", "web_triangles",
       // knn_ivf_pq_recall composes knn_bruteforce + the composite index,
       // inheriting their broadcast crosses (the knn_recall shape)
@@ -124,13 +123,13 @@ class PlanSpec extends SparkSpec {
       // split_leakage attaches its ONE-ROW pair total (the q22 idiom)
       "split_leakage",
       // round 10: knn_mrl_recall composes knn_bruteforce twice (the
-      // knn_recall shape — broadcast query-set crosses);
-      // dedup_banding_sweep combines per-config ONE-ROW count
-      // aggregates (the dedup_minhash_recall shape); web_reciprocity
+      // knn_recall shape — broadcast query-set crosses); web_reciprocity
       // attaches the one-row p_count total (the q22 idiom)
-      "knn_mrl_recall", "dedup_banding_sweep", "web_reciprocity",
-      // round 10 batch 2: knn_probe_sweep shares the recall-gate shape
-      // (broadcast query/exact crosses + per-config ONE-ROW counts);
+      "knn_mrl_recall", "web_reciprocity",
+      // round 10 batch 2: knn_probe_sweep ranks every query against
+      // every centroid (the probe × centroid broadcast cross), builds
+      // its index through cellAssign's centroid-broadcast cross and
+      // grades its exact side from knn_bruteforce's query-set cross;
       // knn_hamming_recall composes knn_bruteforce's broadcast cross
       "knn_probe_sweep", "knn_hamming_recall",
       // round 10 batch 4: knn_rerank_gain composes the hamming broadcast
@@ -140,11 +139,9 @@ class PlanSpec extends SparkSpec {
       // round 10 batch 5: embed_bitext is two knn_bruteforce-shaped
       // broadcast crosses (query slice over the B scan, ≤|Q|·k
       // candidates over the A scan) — both query-bounded by contract;
-      // dedup_containment_recall combines three ONE-ROW count
-      // aggregates (the dedup_minhash_recall shape); corpus_temp_mix
-      // attaches its ONE-ROW (total_chars, total_tw) aggregate onto
-      // the sources-bounded frame (the q22 idiom)
-      "embed_bitext", "dedup_containment_recall", "corpus_temp_mix",
+      // corpus_temp_mix attaches its ONE-ROW (total_chars, total_tw)
+      // aggregate onto the sources-bounded frame (the q22 idiom)
+      "embed_bitext", "corpus_temp_mix",
       // round 10 batch 6: corpus_shards / text_lang_mix attach their
       // ONE-ROW totals (the q22 idiom)
       "corpus_shards", "text_lang_mix",
@@ -160,15 +157,13 @@ class PlanSpec extends SparkSpec {
       // (n_total, n_types) aggregate (the q22 idiom)
       "text_vocab_coverage",
       // round 11: embed_geometry_sweep's exact side is a slice-anchored
-      // broadcast cross (the knn_bruteforce idiom) and each config row
-      // attaches four ONE-ROW count aggregates (the sweep idiom);
-      // video_band_sweep is its visual twin (slice-anchored broadcast
-      // frames join + the same one-row count attachments)
-      "embed_geometry_sweep", "video_band_sweep",
+      // broadcast cross (the knn_bruteforce idiom); its grade is one
+      // join and one aggregate by bits
+      "embed_geometry_sweep",
       // round 12: knn_ivf_refresh composes knn_ivf_drift's shapes — the
       // slice-anchored broadcast cross for its exact side (the
-      // knn_bruteforce idiom, NOT-self-pair predicate) plus one-row
-      // recall/balance total attachments (the q22 idiom); audit-tier,
+      // knn_bruteforce idiom, NOT-self-pair predicate) and cellAssign's
+      // centroid-broadcast cross per phase; audit-tier,
       // query-slice-bounded by contract
       "knn_ivf_refresh",
       // round 13: dedup_attribution inherits dedup_semantic's
@@ -179,8 +174,8 @@ class PlanSpec extends SparkSpec {
       "dedup_attribution", "embed_kmeans_converge",
       // round 14: knn_ivf_pq_refresh composes knn_ivf_refresh's shapes —
       // the slice-anchored broadcast cross for its shared exact side
-      // (knn_bruteforce idiom) plus per-phase ONE-ROW sse/recall total
-      // attachments (the q22 idiom); audit-tier, query-slice-bounded
+      // (knn_bruteforce idiom) plus the centroid-broadcast crosses of
+      // its index build and probes; audit-tier, query-slice-bounded
       "knn_ivf_pq_refresh",
       // round 15: dedup_incremental_semantic inherits cellAssign's
       // centroid-broadcast cross (twice: corpus index + batch assign —
