@@ -434,7 +434,7 @@ object Dedup {
     * (the exact side is the Σ df² audit path: price it for slices,
     * like [[minhashRecallFor]]). One row per selection scheme
     * (manber / winnow) against the SAME exact pair set, computed once
-    * and materialized. `printCap`/`anchors`: the band-join occupancy
+    * in the one grading pass. `printCap`/`anchors`: the band-join occupancy
     * rule ([[minhashPairsFromSigs]]) applied to print buckets — at or
     * below the cap a bucket emits all pairs (default Long.MaxValue
     * keeps the contract query and its DuckDB oracle byte-identical);
@@ -444,8 +444,7 @@ object Dedup {
   def containmentRecallFor(docs: DataFrame, printCap: Long = Long.MaxValue,
                            anchors: Long = 16L): DataFrame = {
     val d = Materialize.stable(docs)
-    val exact = Materialize.stable(
-      containmentPairsFor(d).select("doc_a", "doc_b"))
+    val exact = containmentPairsFor(d).select("doc_a", "doc_b")
     val schemes = Seq("manber" -> sparkContainmentPrints("text"), "winnow" -> sparkWinnowPrints("text"))
     val cand = schemes.map { case (scheme, printsExpr) =>
       containmentCandidates(d, printsExpr, printCap, anchors)
@@ -1489,9 +1488,9 @@ object Dedup {
   def bandingSweepFor(docs: DataFrame): DataFrame = {
     val sig = Materialize.stable(docs
       .select(col("doc_id"), expr(sparkMinhash(sparkShingleHashes("text"))).as("mh")))
-    val exact = Materialize.stable(shingleOverlap(docs)
+    val exact = shingleOverlap(docs)
       .filter(expr("3 * i >= na + nb"))
-      .select("doc_a", "doc_b"))
+      .select("doc_a", "doc_b")
     // every config's bands on one frame: the self-join, the distinct
     // and the signature verify each run once for the whole sweep
     val configs = BandingConfigs.map { case (nb, r) =>

@@ -92,19 +92,20 @@ object Ladder {
   /** An unreported Lloyd retrain (knn_ivf_pq_refresh's warm start) from
     * `book`: the same rung as [[lloyd]], but only the assignments read
     * twice are checkpointed — the seed's and the final rung's, which
-    * the caller grades. Books are codebook-sized and persist
-    * ([[Materialize.stable]]); an intermediate assignment has a single
-    * reader, the next rung's refine, whose persist already stops its
-    * re-evaluation. Returns the seed state and the final state.
+    * the caller grades. The seed's and the final rung's books are read
+    * twice too (their assignment and the caller's phase) and persist
+    * ([[Materialize.stable]]); an intermediate book and assignment each
+    * have a single reader, the next rung, so they flow into it.
+    * Returns the seed state and the final state.
     */
   def retrain(book: DataFrame, rungs: Int)(
       refine: DataFrame => DataFrame, assignTo: DataFrame => DataFrame): (Lloyd, Lloyd) = {
     val book0 = Materialize.stable(book)
     val seed = Lloyd(book0, Materialize.iteration(assignTo(book0)))
     (seed, climb(seed, rungs)(never) { (t, prev) =>
-      val next = Materialize.stable(refine(prev.assign))
-      val assign = assignTo(next)
-      Lloyd(next, if (t == rungs) Materialize.iteration(assign) else assign)
+      val book = if (t < rungs) refine(prev.assign) else Materialize.stable(refine(prev.assign))
+      val assign = assignTo(book)
+      Lloyd(book, if (t < rungs) assign else Materialize.iteration(assign))
     }.last)
   }
 

@@ -4,9 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization point for expensive expression trees (minhash/simhash
-  * signatures, cast embeddings) that downstream LSH joins reference two
-  * or three times — without one, Catalyst re-evaluates the whole
-  * signature tree per join reference.
+  * signatures, cast embeddings) that downstream joins reference more than
+  * once — without one, Catalyst re-evaluates the whole signature tree per
+  * join reference.
+  *
+  * The rule: a frame is persisted only if some key reads it at least
+  * twice. Under AQE a persist costs a cache-building job of its own, so a
+  * frame read once flows into its reader instead. PlanSpec's sweep
+  * "every persisted frame is read at least twice in ANY query" holds the
+  * rule over every key's build-time and final plans.
   *
   * [[stable]] is `persist(DISK_ONLY)`. Lineage is kept, so a lost
   * executor's blocks are recomputed from the parquet scan — the

@@ -393,7 +393,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val vecs = withVec(s, dir)
     val cents = Materialize.stable(refineCents(vecs))
-    val assign = Materialize.stable(cellAssign(vecs, cents))
+    val assign = cellAssign(vecs, cents)
     // every vector indexed in exactly its best cell
     val probes = queryProbes(vecs, cents, nprobe)
     val byQuery = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
@@ -747,7 +747,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val vecs = withVec(s, dir)
     val cents = Materialize.stable(refineCents(vecs))
-    val assign = Materialize.stable(cellAssign(vecs, cents))
+    val assign = cellAssign(vecs, cents)
     val probes = queryProbes(vecs, cents, Nprobe).select("query_id", "cell")
     val nvecs = pqNormalize(vecs)
     val subvecs = pqSubvecs(nvecs)
@@ -869,7 +869,7 @@ object Similarity {
     * (`api.CorpusOps.semanticKeepList` adapts arbitrary column names).
     */
   def dedupSemanticFor(vecs: DataFrame, tau: Double): DataFrame = {
-    val cents = Materialize.stable(refineCents(vecs))
+    val cents = refineCents(vecs)
     val assign = Materialize.stable(vecs.crossJoin(broadcast(cents))
       .withColumn("ccos", expr(sparkCosine("v", "cv")))
       .groupBy(col("vec_id"))
@@ -1487,9 +1487,8 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val vecs = withVec(s, dir)
     val cents = Materialize.stable(refineCents(vecs))
-    val assign = Materialize.stable(cellAssign(vecs, cents))
-    val exact = Materialize.stable(
-      knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id")))
+    val assign = cellAssign(vecs, cents)
+    val exact = knnBruteforce(s, dir).select(col("query_id"), col("neighbor_id"))
     // round 16 (guide §5 sweep reuse): the per-config probe lists and
     // candidate scoring used to be re-derived per nprobe — the probe
     // list at the LARGEST nprobe with a per-query cell rank subsumes
@@ -1507,12 +1506,12 @@ object Similarity {
       .withColumn("crank", row_number().over(wc))
       .filter(col("crank") <= maxNp)
       .select(col("query_id"), col("cent_id").as("cell"), col("qv"), col("crank"))
-    val scored = Materialize.stable(probes.join(
+    val scored = probes.join(
         assign.select(col("vec_id").as("neighbor_id"), col("cell"), col("v")),
         Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", expr(sparkCosine("qv", "v")))
-      .select("query_id", "neighbor_id", "crank", "cosine"))
+      .select("query_id", "neighbor_id", "crank", "cosine")
     // each config's candidates are the scored rows within its probe
     // rank; its approx top-k is their rank ≤ k flag, and one grading
     // pass counts candidates and hits for every config
@@ -2291,17 +2290,17 @@ object Similarity {
       .filter(col("vec_id") >= DriftBatchShift && pmod(col("vec_id"), lit(10)) === 9
         && col("vec_id") < DriftBatchShift + RefreshQueryCap)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val exact = Materialize.stable(union.crossJoin(broadcast(queries))
+    val exact = union.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", expr(sparkCosine("qv", "v")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rank") <= KnnK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id")))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"))
     // one phase's IVF top-k and its one-row cell balance, both tagged
     // with the phase
     def phase(name: String, cents: DataFrame): (DataFrame, DataFrame) = {
-      val assign = Materialize.stable(cellAssign(union, Materialize.stable(cents)))
+      val assign = Materialize.stable(cellAssign(union, cents))
       val bal = assign.groupBy("cell").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("n_cells"), max("n").as("max_n"), sum("n").as("t"))
         .select(lit(name).as("phase"), col("n_cells"),
@@ -2526,13 +2525,13 @@ object Similarity {
       .filter(col("vec_id") >= DriftBatchShift
         && col("vec_id") < DriftBatchShift + RefreshQueryCap)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val exact = Materialize.stable(union.crossJoin(broadcast(queries))
+    val exact = union.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", expr(sparkCosine("qv", "v")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rank") <= KnnK)
-      .select(col("query_id"), col("vec_id").as("neighbor_id")))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"))
     val nUnion = union.count()
     val mR = centroidModFor(nUnion)
     val seedsR = union
@@ -2551,9 +2550,8 @@ object Similarity {
     // whole chain at every reference — measured 35-39s of driver-side
     // plan processing PER ACTION at sf0.1 before the checkpoints, ~3s
     // after, identical results. The frozen codes are referenced twice
-    // (rung-1 refine + the frozen phaseRow); the book frames stay
-    // stable-persisted (1k rows; their trees are one refine over the
-    // previous materialization boundary — already flat).
+    // (rung-1 refine + the frozen phaseRow); the books read twice stay
+    // stable-persisted (1k rows).
     val frozenB = Materialize.stable(pqRefineFromAssign(gridO,
       pqAssign(gridO, pqMilliSeeds(gridO))
         .select(col("vec_id"), col("m"), col("best.j").as("j"))))
@@ -2970,12 +2968,12 @@ object Similarity {
     val vecs = Materialize.stable(withVec(s, dir))
     val slice = vecs.filter(col("vec_id") < GeomSliceSize)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val exact = Materialize.stable(vecs.crossJoin(broadcast(slice))
+    val exact = vecs.crossJoin(broadcast(slice))
       .filter(col("vec_id") =!= col("qid"))
       .filter(expr(s"${sparkCosine("qv", "v")} >= $NearDupThreshold"))
       .select(least(col("qid"), col("vec_id")).as("pa"),
         greatest(col("qid"), col("vec_id")).as("pb"))
-      .distinct())
+      .distinct()
     val (cand, occ) = GeomBitsConfigs.map { bits =>
       // round 16 (guide §5): the bucket frame is referenced THREE times
       // per config (query side, index side of the candidate self-join,

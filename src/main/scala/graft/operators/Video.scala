@@ -658,6 +658,9 @@ object Video {
     val sa = sigs.filter(col("doc_id") < VideoSliceMax)
       .select(col("doc_id").as("qa"), col("frame_idx"),
         col("ahash_lo").as("la"), col("ahash_hi").as("ha"))
+    // read once, but its cache build orders the `sigs` build ahead of
+    // the grade's stages; inline, five table-cache stages each start a
+    // `sigs` build job (1 + 26 action jobs at sf0.001, 1 + 24 with it)
     val exact = Materialize.stable(
       sigs.select(col("doc_id").as("qb"), col("frame_idx"),
           col("ahash_lo").as("lb"), col("ahash_hi").as("hb"))

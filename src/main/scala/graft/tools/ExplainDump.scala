@@ -9,7 +9,8 @@ import graft.{GraftSession, SparkEntry}
   * For the iterative queries (dedup_clusters) the dumped plan is the
   * final one the returned frame executes — the per-round propagation
   * join reads the checkpointed label state, so the round shape is the
-  * visible join itself.
+  * visible join itself. Each plan goes through [[PlanDump.normalise]],
+  * so a regeneration's diff shows only the plans that changed.
   *
   *   sbt "runMain graft.tools.ExplainDump /root/testdata/sf0.01"
   */
@@ -27,7 +28,7 @@ object ExplainDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize THIS dataframe's adaptive plan (count() would plan a copy)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.executedPlan.toString.take(6000))
+      sb.append(PlanDump.normalise(df.queryExecution.executedPlan.toString.take(6000)))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

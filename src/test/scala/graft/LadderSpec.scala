@@ -28,17 +28,17 @@ class LadderSpec extends SparkSpec {
     "bpe_train_converge" -> (20, 9),
     "embed_kmeans_converge" -> (36, 39),
     "knn_pq_train_converge" -> (29, 31),
-    "knn_ivf_pq_refresh" -> (40, 46),
+    "knn_ivf_pq_refresh" -> (38, 45),
     // the recall and sweep gates, each graded in one pass
     // (Grade.Pairs.sweep)
     "dedup_minhash_recall" -> (1, 20),
-    "dedup_containment_recall" -> (1, 25),
-    "dedup_banding_sweep" -> (1, 24),
+    "dedup_containment_recall" -> (1, 24),
+    "dedup_banding_sweep" -> (1, 23),
     "dedup_len_bias" -> (1, 22),
-    "knn_probe_sweep" -> (2, 33),
+    "knn_probe_sweep" -> (2, 29),
     "embed_geometry_sweep" -> (1, 41),
     "video_band_sweep" -> (1, 24),
-    "knn_ivf_refresh" -> (8, 39))
+    "knn_ivf_refresh" -> (8, 36))
 
   test("fixpoint fails naming the ladder when its census never repeats") {
     val e = intercept[IllegalArgumentException] {

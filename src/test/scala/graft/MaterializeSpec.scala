@@ -103,6 +103,24 @@ class MaterializeSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("PlanSpec.cacheReads counts every read of a persisted frame, build-time collects included") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.max
+    def reads(body: DataFrame => Any): Seq[Int] = {
+      spark.catalog.clearCache()
+      val m = Materialize.stable((1 to 50).toDF("x").selectExpr("x", "x % 5 AS k"))
+      try PlanSpec.cacheReads(spark)(body(m)).map(_._2) finally spark.catalog.clearCache()
+    }
+    assert(reads(_.collect()) == Seq(1))
+    assert(reads(m => m.join(m, "k").collect()) == Seq(2))
+    // a driver collect while the key is built, then the final action
+    assert(reads { m =>
+      val top = m.agg(max("x")).head().getInt(0)
+      m.filter($"x" < top).collect()
+    } == Seq(2))
+  }
+
   test("a GraftSession checkpoint dir is deleted at JVM exit") {
     // GraftSession.build creates the dir; only a JVM exit can show that
     // it is removed, so the session lives in a child JVM that runs one

@@ -24,6 +24,13 @@ class PlanDumpSpec extends SparkSpec {
       "MapPartitionsRDD[1] at checkpoint at Ladder.scala MapPartitionsRDD[0]")
   }
 
+  test("PLANS.md holds no expression id and no plan id") {
+    val plans = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("PLANS.md")), "UTF-8")
+    assert(plans.contains("## q1_agg"), "PLANS.md lost its sections")
+    val ids = "#\\d+|plan_id=\\d+".r.findAllIn(plans).take(5).toList
+    assert(ids.isEmpty, s"PLANS.md carries run-specific ids, first: $ids")
+  }
+
   test("PlanDump.normalise: a closure's lambda number, address and hash go") {
     val raw = "MapPartitions graft.operators.Ranks$$$Lambda$3905/0x00007f994d04d688@207d6c18, obj#41: org.apache.spark.sql.Row"
     assert(PlanDump.normalise(raw) ==

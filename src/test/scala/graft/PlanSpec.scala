@@ -206,19 +206,8 @@ class PlanSpec extends SparkSpec {
     // helpers. (Global aggregates still exchange SinglePartition over
     // per-partition PARTIALS — bounded by cluster size, not data size —
     // which is why this sweep keys on window nodes, not exchanges.)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val extra = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case _ => Seq.empty
-      }
-      p +: (p.children ++ extra).flatMap(flatten)
-    }
+    import PlanSpec.flatten
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val df = fn(spark, sfDir)
       df.count() // finalize AQE
@@ -229,5 +218,81 @@ class PlanSpec extends SparkSpec {
       if (globalWindows.nonEmpty) Some(s"$name: ${globalWindows.mkString(",")}") else None
     }
     assert(offenders.isEmpty, s"single-task global-order windows in: $offenders")
+  }
+
+  test("sweep: every persisted frame is read at least twice in ANY query") {
+    // Materialize.stable's rule: a persist costs a cache-building job of
+    // its own under AQE, so a frame one plan reads once should flow into
+    // that plan instead. The reads are counted over every plan the key
+    // executes, build-time collects and checkpoints included.
+    val reads = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      spark.catalog.clearCache()
+      PlanSpec.cacheReads(spark)(fn(spark, sfDir).collect()).map { case (cols, n) =>
+        (s"$name: (${cols.mkString(", ")})", n)
+      }
+    }
+    spark.catalog.clearCache()
+    info(s"${reads.size} cache entries read")
+    // video_band_sweep's exact side is read once, but its persist keeps
+    // the key's action jobs at 24 (26 inline; see Video.videoBandSweep)
+    val kept = Set("video_band_sweep: (pa, pb)")
+    val offenders = reads.collect { case (entry, 1) if !kept(entry) => entry }
+    assert(offenders.isEmpty, s"frames persisted but read once: $offenders")
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  /** Every node of an executed plan, entering AQE's final plan, each
+    * query stage's plan and a reused exchange's child.
+    */
+  def flatten(p: SparkPlan): Seq[SparkPlan] = {
+    val extra = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => Seq.empty
+    }
+    p +: (p.children ++ extra).flatMap(flatten)
+  }
+
+  /** Runs `body` and counts the reads of each cache entry over every
+    * plan it executes: the `InMemoryTableScanExec` nodes per cache
+    * builder, with each cached plan entered once, so a cache read while
+    * another is built counts once. One (output columns, reads) pair per
+    * entry read.
+    */
+  def cacheReads(spark: SparkSession)(body: => Any): Seq[(Seq[String], Int)] = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    val reads = new java.util.IdentityHashMap[AnyRef, (Seq[String], Int)]
+    def visit(p: SparkPlan): Unit = flatten(p).foreach {
+      case scan: InMemoryTableScanExec =>
+        val b = scan.relation.cacheBuilder
+        val n = Option(reads.get(b)).fold(0)(_._2)
+        reads.put(b, (scan.relation.output.map(_.name), n + 1))
+        if (n == 0) visit(b.cachedPlan)
+      case _ =>
+    }
+    plans.forEach(p => visit(p))
+    import scala.jdk.CollectionConverters._
+    reads.values.asScala.toSeq
   }
 }
